@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
 from phphinder_spark.functions.typo import levenshtein_distance_for_term
 from phphinder_spark.index.builder import InvertedIndex, build_index, build_postings
+from phphinder_spark.index.segments import SegmentStore, decode_segments
 from phphinder_spark.query import (
     AndQuery,
     FullTextQuery,
@@ -188,20 +189,7 @@ class SparkSearchEngine:
         self._buffer: list[dict] = []
         self._source_df: DataFrame | None = None
         self._max_id = 0
-        self._dict_size = -1  # lazy |dictionary| for typo_strategy='auto'
-        # driver-side term -> {field: df} dictionary (built lazily on the
-        # first search, under _DICT_DRIVER_CACHE_MAX; None = too big or
-        # not yet attempted — _tf_cache_tried disambiguates). Carrying df
-        # lets BM25 skip its per-query document-frequency shuffle.
-        self._tf_cache: dict[str, dict[str, int]] | None = None
-        self._tf_cache_tried = False
-        self._shadow_ok: dict[str, bool] = {}  # <field>#raw presence probes
-        # cold-serving mode (from_index_dir(serve="segments")): postings
-        # access goes through the compressed segment store with (field,
-        # term) predicates applied to SEGMENT rows before payload decode
-        self._serve = "postings"
-        self._segments_df: DataFrame | None = None
-        self._index_dir: str | None = None
+        self._drop_index_state()
         if not self.storage.is_empty:
             self.index = InvertedIndex(
                 self.schema, self.storage.docs(), self.storage.postings()
@@ -308,16 +296,31 @@ class SparkSearchEngine:
         self.index = InvertedIndex(
             self.schema, self.storage.docs(), self.storage.postings()
         ).cache()
+        self._drop_index_state()
+
+    def _drop_index_state(self) -> None:
+        """Forget everything derived from the previous index: the lazy
+        |dictionary| (typo_strategy='auto'), the driver-side term ->
+        {field: df} dictionary (built on the first search under
+        _DICT_DRIVER_CACHE_MAX; None = too big or not yet attempted —
+        _tf_cache_tried disambiguates; carrying df lets BM25 skip its
+        per-query document-frequency shuffle), the <field>#raw presence
+        probes, and the segment store. A flush or rebuild hands the index
+        to the storage, so postings access must stop routing through the
+        (now stale) store."""
         self._dict_size = -1
-        self._tf_cache = None
+        self._tf_cache: dict[str, dict[str, int]] | None = None
         self._tf_cache_tried = False
-        self._shadow_ok = {}
-        # a flush hands ownership to the storage: the persisted segment
-        # store no longer reflects the index, so postings access must stop
-        # routing through the (now stale) _segments_df
-        self._serve = "postings"
-        self._segments_df = None
-        self._index_dir = None
+        self._shadow_ok: dict[str, bool] = {}
+        # cold-serving mode (from_index_dir(serve="segments")): postings
+        # access goes through the compressed segment store with (field,
+        # term) predicates applied to SEGMENT rows before payload decode
+        self._store: SegmentStore | None = None
+
+    @property
+    def _serve(self) -> str:
+        """Serve mode label: 'segments' while a segment store is open."""
+        return "segments" if self._store is not None else "postings"
 
     def truncate(self) -> None:
         """Drop the index (reference Storage::truncate,
@@ -331,13 +334,7 @@ class SparkSearchEngine:
         self.index = None
         self._buffer = []
         self._max_id = 0
-        self._dict_size = -1
-        self._tf_cache = None
-        self._tf_cache_tried = False
-        self._shadow_ok = {}
-        self._serve = "postings"
-        self._segments_df = None
-        self._index_dir = None
+        self._drop_index_state()
 
     def index_dataframe(self, df: DataFrame) -> None:
         """Bulk build (the scale path). ``df`` must carry ``doc_id``.
@@ -364,13 +361,7 @@ class SparkSearchEngine:
         self._source_df = ensure_min_partitions(df).cache()
         self.index = build_index(self._source_df, self.schema).cache()
         self._max_id = -1
-        self._dict_size = -1
-        self._tf_cache = None
-        self._tf_cache_tried = False
-        self._shadow_ok = {}
-        self._serve = "postings"
-        self._segments_df = None
-        self._index_dir = None
+        self._drop_index_state()
 
     def _ensure_max_id(self) -> None:
         if self._max_id < 0 and self.index is not None:
@@ -384,29 +375,18 @@ class SparkSearchEngine:
         """Batched BM25 top-k: all queries share one plan/job — the
         throughput path (per-query jobs pay fixed scheduler latency).
         Returns (query_id = the phrase, doc_id, score, rank)."""
+        field = self._bm25_field(field)
         if self.index is None:
             # reference searches over empty storage return no results
             # (src/SearchEngine.php:100-105 over a truncated index)
             return self.spark.createDataFrame(
                 [], "query_id string, doc_id long, score double, rank int"
             )
-        analyzer = self.schema.analyzer
-        qmap: dict[str, list[str]] = {}
-        for phrase in phrases:
-            terms = []
-            for tok in analyzer.tokenizer.apply(phrase):
-                t = analyzer.transform(tok)
-                if t is not None and t != "":
-                    terms.append(str(t))
-            qmap[phrase] = terms
-        if field is None:
-            field = [
-                f for f in self.schema.indexed_fields if not self.schema.is_unique(f)
-            ][0]
+        qmap = {phrase: self._bm25_terms(phrase) for phrase in phrases}
         stats = self.index.stats()
         from phphinder_spark.scoring import bm25_topk_batch
 
-        if self._serve == "segments":
+        if self._store is not None:
             # decode only the union of the batch's query terms' segments;
             # their df values are unchanged by this prefilter
             all_terms = sorted({t for ts in qmap.values() for t in ts})
@@ -422,6 +402,30 @@ class SparkSearchEngine:
                 {t for ts in qmap.values() for t in ts}, field
             ),
         )
+
+    def _bm25_field(self, field: str | None) -> str:
+        """The field BM25 scores: the first non-unique indexed field by
+        default; an explicit one must be indexed — a stored-only or
+        unknown name raises here in every serve mode instead of scoring
+        nothing."""
+        indexed = self.schema.indexed_fields
+        if field is None:
+            return [f for f in indexed if not self.schema.is_unique(f)][0]
+        if field not in indexed:
+            raise ValueError(
+                f"BM25 field {field!r} is not an indexed field "
+                f"(indexed fields: {', '.join(indexed)})"
+            )
+        return field
+
+    def _bm25_terms(self, phrase: str) -> list[str]:
+        analyzer = self.schema.analyzer
+        terms = []
+        for tok in analyzer.tokenizer.apply(phrase):
+            t = analyzer.transform(tok)
+            if t is not None and t != "":
+                terms.append(str(t))
+        return terms
 
     def _df_for_terms(
         self, terms: set[str], field: str
@@ -451,6 +455,10 @@ class SparkSearchEngine:
         """Serve from a persisted index built by
         ``index.manifest.build_resumable_index``.
 
+        Both modes read ``doclens/`` and ``stats.json`` (n_docs, avgdl)
+        once, here: BM25 never re-aggregates document lengths or re-counts
+        the corpus per query.
+
         ``serve='postings'``: reads the uncompressed postings parquet
         (term/field predicates push into the scans) — the warm path when
         the chunked postings are still around.
@@ -458,13 +466,18 @@ class SparkSearchEngine:
         ``serve='segments'``: the cold 100-TB path — ONLY the compressed
         segment store + persisted doclens/dictionary/stats/ngram artifacts
         are read; the uncompressed ``postings/`` directory may be deleted.
-        Every postings access routes through ``_postings_where`` /
-        ``_postings_for_terms``, which filter SEGMENT rows (field/term
-        columns, parquet-pushdown on the sorted store) before decoding any
-        payload; BM25 top-k delegates to the segment-store scorers
-        (index/segments.segment_bm25_topk / _blockmax); the typo n-gram
-        index loads from the manifest's ``ngram/`` instead of rebuilding
-        per session."""
+        Opened once: an ``index.segments.SegmentStore`` (segments and
+        doclens tables, stats.json), the cached dictionary and the n-gram
+        typo index (loaded from the manifest's ``ngram/`` instead of
+        rebuilt per session). Every postings access routes through
+        ``_postings_where`` / ``_postings_for_terms``, which filter SEGMENT
+        rows (field/term columns, parquet-pushdown on the sorted store)
+        before decoding any payload. BM25 top-k runs the segment scorers
+        on the open store; per query they read only the query terms'
+        chunk metadata — from the store's driver map when
+        ``n_segment_rows`` is within ``_DICT_DRIVER_CACHE_MAX`` (built on
+        the first BM25 query), else one metadata-only collect — and decode
+        only the chunks they score."""
         import os
 
         if serve not in ("postings", "segments"):
@@ -477,30 +490,37 @@ class SparkSearchEngine:
         # as build_index; keeping extras breaks the flush MERGE union
         keep = ["doc_id"] + [f for f in schema.fields if f in docs.columns]
         docs = docs.select(*keep)
-        if serve == "postings":
-            postings = spark.read.parquet(f"{out_dir}/postings")
-            eng.index = InvertedIndex(schema, docs, postings)
-            eng._max_id = -1
+        if serve == "segments":
+            store = SegmentStore(spark, out_dir)
+            # full-decode view: ONLY the correctness fallback for access
+            # paths not routed through the segment helpers (none in the
+            # query engine; kept so index.postings stays a valid DataFrame)
+            idx = InvertedIndex(schema, docs, decode_segments(store.segments))
+            idx.doclens, st = store.doclens, store.stats
+        else:
+            store = None
+            idx = InvertedIndex(schema, docs, spark.read.parquet(f"{out_dir}/postings"))
+            idx.doclens = spark.read.parquet(f"{out_dir}/doclens")
+            with open(f"{out_dir}/stats.json") as fh:
+                st = json.load(fh)
+        idx._stats = {"n_docs": st["n_docs"], "avgdl": st["avgdl"]}
+        eng.index = idx
+        eng._store = store
+        eng._max_id = -1
+        if store is None:
             return eng
 
         from phphinder_spark.index.builder import SHADOW_SUFFIX
-        from phphinder_spark.index.segments import decode_segments
 
-        segments = spark.read.parquet(f"{out_dir}/segments")
-        # full-decode view: ONLY the correctness fallback for access paths
-        # not routed through the segment helpers (none in the query engine;
-        # kept so index.postings stays a valid DataFrame). The guard makes
-        # the no-full-decode invariant structural: any future code touching
-        # index.postings while segment-serving warns loudly instead of
-        # silently decoding the whole store.
-        idx = InvertedIndex(schema, docs, decode_segments(segments))
+        # the guard makes the no-full-decode invariant structural: any
+        # future code touching index.postings while segment-serving warns
+        # loudly instead of silently decoding the whole store
         idx._postings_guard = (
             "index.postings accessed while serving from the compressed "
             "segment store: this DataFrame decodes EVERY segment payload. "
             "Query paths must route through SparkSearchEngine._postings_where"
             " / _postings_for_terms (term/field pushdown before decode)."
         )
-        idx.doclens = spark.read.parquet(f"{out_dir}/doclens")
         idx._dict = (
             spark.read.parquet(f"{out_dir}/dictionary")
             .where(~F.col("field").endswith(SHADOW_SUFFIX))
@@ -510,14 +530,6 @@ class SparkSearchEngine:
         ngram_path = f"{out_dir}/ngram"
         if os.path.exists(ngram_path):
             idx._ngram = spark.read.parquet(ngram_path).cache()
-        with open(f"{out_dir}/stats.json") as fh:
-            st = json.load(fh)
-        idx._stats = {"n_docs": st["n_docs"], "avgdl": st["avgdl"]}
-        eng.index = idx
-        eng._serve = "segments"
-        eng._segments_df = segments
-        eng._index_dir = out_dir
-        eng._max_id = -1
         return eng
 
     # ----------------------------------------------------- postings access
@@ -531,11 +543,9 @@ class SparkSearchEngine:
         — before any payload is decoded. Only the PHRASE prefilter needs
         ``with_positions``; term/prefix/typo/BM25 leaves decode doc+tf
         only (the positions parse is the remaining per-row Python cost)."""
-        if self._serve == "segments":
-            from phphinder_spark.index.segments import decode_segments
-
+        if self._store is not None:
             return decode_segments(
-                self._segments_df.where(cond), with_positions=with_positions
+                self._store.segments.where(cond), with_positions=with_positions
             )
         return self.index.postings.where(cond)
 
@@ -544,11 +554,9 @@ class SparkSearchEngine:
         candidates broadcast-join against segment rows (decode only
         matching payloads, doc+tf only) or against the in-memory
         postings."""
-        if self._serve == "segments":
-            from phphinder_spark.index.segments import decode_segments
-
+        if self._store is not None:
             return decode_segments(
-                self._segments_df.join(F.broadcast(cand), ["field", "term"]),
+                self._store.segments.join(F.broadcast(cand), ["field", "term"]),
                 with_positions=False,
             )
         return self.index.postings.join(F.broadcast(cand), ["field", "term"])
@@ -728,8 +736,8 @@ class SparkSearchEngine:
             from phphinder_spark.index.builder import SHADOW_SUFFIX
 
             src = (
-                self._segments_df
-                if self._serve == "segments"
+                self._store.segments
+                if self._store is not None
                 else self.index.postings
             )
             self._shadow_ok[field] = (
@@ -754,7 +762,7 @@ class SparkSearchEngine:
             return True
         if self.phrase_strategy == "scan":
             return False
-        if self._serve == "segments":
+        if self._store is not None:
             return True
         # memory mode: scan iff the stored corpus is cached in memory
         # (index_dataframe/flush paths cache it; from_index_dir(postings)
@@ -1210,7 +1218,7 @@ class SparkSearchEngine:
         # — the persisted DICTIONARY in segment-serving mode (probing
         # postings there would decode payloads), the cached postings frame
         # in memory mode
-        if self._serve == "segments":
+        if self._store is not None:
             src = self.index.dict_df
         else:
             src = self.index.postings
@@ -1287,29 +1295,18 @@ class SparkSearchEngine:
                 "strategy must be 'auto', 'exhaustive' or 'blockmax', "
                 f"got {strategy!r}"
             )
+        field = self._bm25_field(field)
         if strategy == "auto":
-            strategy = "blockmax" if self._serve == "segments" else "exhaustive"
+            strategy = "blockmax" if self._store is not None else "exhaustive"
         if self.index is None:
             # reference searches over empty storage return no results
             return self.spark.createDataFrame([], "doc_id long, score double")
-        analyzer = self.schema.analyzer
-        terms = []
-        for tok in analyzer.tokenizer.apply(phrase):
-            t = analyzer.transform(tok)
-            if t is not None and t != "":
-                terms.append(str(t))
-        if field is None:
-            candidates = [
-                f for f in self.schema.indexed_fields if not self.schema.is_unique(f)
-            ]
-            field = candidates[0]
-        stats = self.index.stats()
-        avgdl = stats["avgdl"].get(field, 1.0)
-        if self._serve == "segments":
-            # cold path: score straight off the compressed store — chunked
-            # payload decode bounded to the query terms (blockmax: to the
-            # surviving chunks), persisted dictionary df, no uncompressed
-            # postings read
+        terms = self._bm25_terms(phrase)
+        if self._store is not None:
+            # cold path: score straight off the open segment store — chunk
+            # metadata from its driver map, payload decode bounded to the
+            # query terms (blockmax: to the surviving chunks), no
+            # uncompressed postings read
             from phphinder_spark.index.segments import (
                 segment_bm25_topk,
                 segment_bm25_topk_blockmax,
@@ -1317,12 +1314,12 @@ class SparkSearchEngine:
 
             if strategy == "blockmax":
                 topk, _metrics = segment_bm25_topk_blockmax(
-                    self.spark, self._index_dir, terms, field, k, k1, b
+                    self.spark, self._store, terms, field, k, k1, b
                 )
                 return topk
-            return segment_bm25_topk(
-                self.spark, self._index_dir, terms, field, k, k1, b
-            )
+            return segment_bm25_topk(self.spark, self._store, terms, field, k, k1, b)
+        stats = self.index.stats()
+        avgdl = stats["avgdl"].get(field, 1.0)
         if strategy == "blockmax":
             from phphinder_spark.scoring import bm25_topk_blockmax
 

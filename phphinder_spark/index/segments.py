@@ -21,6 +21,8 @@ Encode/decode run inside applyInPandas/mapInPandas (Arrow batches).
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -291,60 +293,6 @@ def read_term_postings(spark, path: str, field: str, term: str) -> DataFrame:
     return decode_segments(seg)
 
 
-def segment_bm25_topk(
-    spark,
-    index_dir: str,
-    terms: list[str],
-    field: str,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 top-k served straight from the compressed segment store.
-
-    Reads only the matching terms' segment rows (predicate pushdown on the
-    sorted store), decodes those payloads, joins the persisted doclens and
-    the dictionary's global df — the cold-serving path where the
-    uncompressed postings table is not resident."""
-    import json
-    import os
-
-    from phphinder_spark.scoring import bm25_score_components
-
-    with open(os.path.join(index_dir, "stats.json")) as fh:
-        stats = json.load(fh)
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).where(
-        (F.col("field") == field) & F.col("term").isin([str(t) for t in terms])
-    )
-    # scoring needs only (doc_id, tf): skip the per-doc position parse
-    postings = decode_segments(seg, with_positions=False)
-    dictionary = spark.read.parquet(os.path.join(index_dir, "dictionary")).where(
-        (F.col("field") == field) & F.col("term").isin([str(t) for t in terms])
-    )
-    doclens = spark.read.parquet(os.path.join(index_dir, "doclens")).where(
-        F.col("field") == field
-    )
-    scored = (
-        postings.join(F.broadcast(dictionary.select("term", "df")), "term")
-        .join(doclens.select("doc_id", "dl"), "doc_id")
-        .withColumn(
-            "contrib",
-            bm25_score_components(
-                F.col("tf").cast("double"),
-                F.col("df").cast("double"),
-                F.col("dl").cast("double"),
-                stats["n_docs"],
-                stats["avgdl"][field],
-                k1,
-                b,
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
 def merge_segment_dictionaries(segments: DataFrame) -> DataFrame:
     """Global dictionary from chunked segments: hierarchical merge is a
     partial-agg sum over chunk stats (never touches payloads)."""
@@ -389,9 +337,175 @@ def merge_segment_stores(
     write_segments(passthrough.unionByName(reencoded), out_path, n_files)
 
 
+class SegmentStore:
+    """An index directory's segment store, opened once: the ``segments/``
+    and ``doclens/`` parquet tables and ``stats.json``. The scorers below
+    take one, so a serving engine pays the parquet opens and the stats
+    read at open time, never per query.
+
+    Per query they read the chunk metadata (term, chunk, df, max_tf) of
+    the query terms — never ``dictionary/``: the dictionary is
+    ``merge_segment_dictionaries`` of these rows, so a term's df is the
+    sum of its chunks' df. That metadata comes from one of two regimes,
+    chosen once by the rule of the engine's driver dictionary cache:
+
+    - ``n_segment_rows`` (stats.json) within ``_DICT_DRIVER_CACHE_MAX``:
+      the first lookup collects the whole store's metadata into a driver
+      map (field, term) -> ((chunk, df, max_tf), ...); later lookups run
+      no Spark job;
+    - over the cap, or a store whose stats.json has no row count: one
+      metadata-only collect per lookup (the payload column is never
+      scanned)."""
+
+    def __init__(self, spark, index_dir: str):
+        self.spark = spark
+        self.segments = spark.read.parquet(os.path.join(index_dir, "segments"))
+        self.doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
+        with open(os.path.join(index_dir, "stats.json")) as fh:
+            self.stats = json.load(fh)
+        self._chunks: dict[tuple[str, str], tuple] | None = None
+        self._chunks_tried = False
+
+    @classmethod
+    def of(cls, spark, store: "SegmentStore | str") -> "SegmentStore":
+        """``store`` itself, or a store opened on the spot from a path."""
+        return store if isinstance(store, SegmentStore) else cls(spark, store)
+
+    def chunk_rows(self, field: str, terms: list[str]) -> list[tuple]:
+        """(term, chunk, df, max_tf) of every segment row of ``terms`` in
+        ``field``, from the driver map when it fits (see the class)."""
+        if not self._chunks_tried:
+            self._chunks_tried = True
+            from phphinder_spark import engine
+
+            n_rows = self.stats.get("n_segment_rows")
+            if n_rows is not None and n_rows <= engine._DICT_DRIVER_CACHE_MAX:
+                by_key: dict[tuple[str, str], list] = {}
+                for f, t, c, d, m in self.segments.select(
+                    "field", "term", "chunk", "df", "max_tf"
+                ).collect():
+                    by_key.setdefault((f, t), []).append((c, d, m))
+                self._chunks = {key: tuple(v) for key, v in by_key.items()}
+        if self._chunks is not None:
+            return [(t, *r) for t in terms for r in self._chunks.get((field, t), ())]
+        return (
+            self.segments.where((F.col("field") == field) & F.col("term").isin(terms))
+            .select("term", "chunk", "df", "max_tf")
+            .collect()
+        )
+
+
+def _segment_topk(
+    store: SegmentStore, terms, field, k, k1, b, prune: bool,
+    collect_metrics: bool = False,
+) -> "tuple[DataFrame, dict]":
+    """BM25 top-k off the segment store; ``prune=False`` is the exhaustive
+    case of the block-max scorer (see ``segment_bm25_topk_blockmax``)."""
+    from phphinder_spark.scoring import _df_lookup_col, bm25_idf, bm25_score_components
+
+    terms = list(dict.fromkeys(str(t) for t in terms))
+    rows = store.chunk_rows(field, terms)
+
+    def metrics(theta: float, total: int, decoded: int, **extra) -> dict:
+        skip = round(1.0 - decoded / total, 4) if total else 0.0
+        return {"theta": theta, "chunks_total": total, "chunks_decoded": decoded,
+                "chunk_skip_fraction": skip, **extra}
+
+    if not rows:
+        empty = store.spark.createDataFrame([], "doc_id long, score double")
+        return empty, metrics(float("-inf"), 0, 0)
+    dfreq: dict[str, int] = {}
+    for t, _, d, _ in rows:
+        dfreq[t] = dfreq.get(t, 0) + d
+    n_docs, avgdl = store.stats["n_docs"], store.stats["avgdl"][field]
+    seg = store.segments.where((F.col("field") == field) & F.col("term").isin(terms))
+    doclens = store.doclens.where(F.col("field") == field).select("doc_id", "dl")
+
+    def topk(chunks: list[int] | None = None) -> DataFrame:
+        """Exact scores of the docs in ``chunks`` (all when None), with the
+        memory engine's BM25 expression and df as a literal map."""
+        src = seg if chunks is None else seg.where(F.col("chunk").isin(chunks))
+        # scoring needs only (doc_id, tf): skip the per-doc position parse
+        scored = (
+            decode_segments(src, with_positions=False)
+            .withColumn("df", _df_lookup_col(dfreq))
+            .join(doclens, "doc_id")
+            .withColumn(
+                "contrib",
+                bm25_score_components(
+                    F.col("tf").cast("double"), F.col("df").cast("double"),
+                    F.col("dl").cast("double"), n_docs, avgdl, k1, b,
+                ),
+            )
+            .groupBy("doc_id")
+            .agg(F.round(F.sum("contrib"), 6).alias("score"))
+        )
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    if not prune:
+        return topk(), {}
+    idf = {t: bm25_idf(n_docs, d) for t, d in dfreq.items()}
+    chunk_bound: dict[int, float] = {}
+    terms_per_chunk: dict[int, set] = {}
+    for t, c, _, m in rows:
+        ub = idf[t] * m * (k1 + 1.0) / (m + k1 * (1.0 - b))
+        chunk_bound[c] = chunk_bound.get(c, 0.0) + ub
+        terms_per_chunk.setdefault(c, set()).add(t)
+    total = len(chunk_bound)
+
+    # quick reject (all-hot queries): when EVERY chunk holds EVERY query
+    # term, bound-based skipping can at best shave tf variance while the
+    # θ-seeding pass decodes its seed chunks twice — measured 2x slower
+    # than exhaustive at 1.5M docs (BENCH.md crossover, 'function return
+    # class'). Score everything in one pass instead; identical top-k.
+    if all(len(s) == len(dfreq) for s in terms_per_chunk.values()):
+        return topk(), metrics(float("-inf"), total, total, quick_reject=True)
+
+    # θ seed: rarest terms (ascending global df) until the seed can fill k
+    seed_terms: set[str] = set()
+    cum = 0
+    for t in sorted(dfreq, key=lambda t: (dfreq[t], t)):
+        seed_terms.add(t)
+        cum += dfreq[t]
+        if cum >= k:
+            break
+    seed_chunks = sorted({c for t, c, _, _ in rows if t in seed_terms})
+    if len(seed_chunks) == total:
+        # the θ-seed already touches every chunk (typical for a needle
+        # term paired with spread terms on an unclustered layout): its
+        # exact scores ARE the exhaustive result — skip the bound and
+        # survivor passes outright
+        return topk(), metrics(float("-inf"), total, total, seed_covered_all=True)
+    kth = topk(seed_chunks).collect()
+    theta = kth[-1]["score"] if len(kth) >= k else float("-inf")
+
+    # 1e-6 slack absorbs the 6-dp rounding of θ (scores are compared rounded)
+    survivors = sorted(c for c, bound in chunk_bound.items() if bound >= theta - 1e-6)
+    extra = {"seed_chunks": len(seed_chunks)} if collect_metrics else {}
+    return topk(survivors), metrics(theta, total, len(survivors), **extra)
+
+
+def segment_bm25_topk(
+    spark,
+    store: "SegmentStore | str",
+    terms: list[str],
+    field: str,
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """BM25 top-k served straight from the compressed segment store: the
+    exhaustive case of ``segment_bm25_topk_blockmax`` (every chunk of the
+    query terms is decoded), same reads and same scores.
+
+    ``store`` is an open ``SegmentStore`` or an index directory, which is
+    opened on the spot."""
+    return _segment_topk(SegmentStore.of(spark, store), terms, field, k, k1, b, prune=False)[0]
+
+
 def segment_bm25_topk_blockmax(
     spark,
-    index_dir: str,
+    store: "SegmentStore | str",
     terms: list[str],
     field: str,
     k: int = 10,
@@ -402,155 +516,24 @@ def segment_bm25_topk_blockmax(
     """WAND-style block-max BM25 served straight from the segment store —
     the true skip-pointer path (north_star: "skip-pointered posting
     lists"): whole chunks whose summed upper bound can't reach the top-k
-    threshold are never decoded and — thanks to Parquet column pruning on
-    the metadata-only scan — their payload bytes are never even read.
+    threshold are never decoded, and their payload bytes are never read.
+
+    ``store`` is an open ``SegmentStore`` (the engine's, read once at
+    open: segments and doclens tables, stats.json) or an index directory,
+    which is opened on the spot. Per query this reads only the query
+    terms' chunk metadata (term, chunk, df, max_tf) — from the store's
+    driver map under the dictionary-cache cap, else one metadata-only
+    collect — and df per term is the sum over its chunks; ``dictionary/``
+    is not read. Planning then runs no Spark job unless θ must be seeded
+    (one top-k collect over the seed chunks).
 
     Exactness: chunk = doc_id // span is TERM-INDEPENDENT, so a doc's
     postings for every query term live in the same chunk id; a doc's
     score is bounded by sum_t ub(t, chunk) and any doc with final score
     >= θ therefore lies in a chunk with bound >= θ. θ is seeded with the
     exact scores of the rarest terms' docs (cheapest payloads). Asserted
-    equal to ``segment_bm25_topk`` in tests."""
-    import json as _json
-    import os
-
-    from phphinder_spark.scoring import bm25_idf
-
-    with open(os.path.join(index_dir, "stats.json")) as fh:
-        stats = _json.load(fh)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"][field]
-    terms = [str(t) for t in terms]
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).where(
-        (F.col("field") == field) & F.col("term").isin(terms)
+    equal to ``segment_bm25_topk`` in tests. Returns (topk_df, metrics)."""
+    return _segment_topk(
+        SegmentStore.of(spark, store), terms, field, k, k1, b,
+        prune=True, collect_metrics=collect_metrics,
     )
-    # global df per query term (tiny)
-    dict_rows = (
-        spark.read.parquet(os.path.join(index_dir, "dictionary"))
-        .where((F.col("field") == field) & F.col("term").isin(terms))
-        .select("term", "df")
-        .collect()
-    )
-    if not dict_rows:
-        return (
-            spark.createDataFrame([], "doc_id long, score double"),
-            {
-                "theta": float("-inf"),
-                "chunks_total": 0,
-                "chunks_decoded": 0,
-                "chunk_skip_fraction": 0.0,
-            },
-        )
-    dfreq = {r["term"]: r["df"] for r in dict_rows}
-    idf = {t: bm25_idf(n_docs, dfreq[t]) for t in dfreq}
-    doclens = spark.read.parquet(os.path.join(index_dir, "doclens")).where(
-        F.col("field") == field
-    )
-
-    def exact_scores(seg_rows: DataFrame) -> DataFrame:
-        idf_col = F.create_map(
-            *[x for t, v in idf.items() for x in (F.lit(t), F.lit(v))]
-        )
-        return (
-            decode_segments(seg_rows, with_positions=False)
-            .join(doclens.select("doc_id", "dl"), "doc_id")
-            .withColumn(
-                "contrib",
-                idf_col[F.col("term")]
-                * F.col("tf").cast("double")
-                * F.lit(k1 + 1.0)
-                / (
-                    F.col("tf").cast("double")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(float(avgdl)))
-                ),
-            )
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("contrib"), 6).alias("score"))
-        )
-
-    # chunk bounds from METADATA ONLY — payload column never scanned here
-    meta = seg.select("term", "chunk", "max_tf").collect()
-    chunk_bound: dict[int, float] = {}
-    terms_per_chunk: dict[int, set] = {}
-    for r in meta:
-        ub = (
-            idf[r["term"]]
-            * r["max_tf"]
-            * (k1 + 1.0)
-            / (r["max_tf"] + k1 * (1.0 - b))
-        )
-        chunk_bound[r["chunk"]] = chunk_bound.get(r["chunk"], 0.0) + ub
-        terms_per_chunk.setdefault(r["chunk"], set()).add(r["term"])
-
-    # quick reject (all-hot queries): when EVERY chunk holds EVERY query
-    # term, bound-based skipping can at best shave tf variance while the
-    # θ-seeding pass decodes its seed chunks twice — measured 2x slower
-    # than exhaustive at 1.5M docs (BENCH.md crossover, 'function return
-    # class'). Score everything in one pass instead; identical top-k.
-    if len(terms_per_chunk) > 0 and all(
-        len(s) == len(dfreq) for s in terms_per_chunk.values()
-    ):
-        topk = (
-            exact_scores(seg)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        metrics = {
-            "theta": float("-inf"),
-            "chunks_total": len(chunk_bound),
-            "chunks_decoded": len(chunk_bound),
-            "chunk_skip_fraction": 0.0,
-            "quick_reject": True,
-        }
-        return topk, metrics
-
-    # θ seed: rarest terms (ascending global df) until the seed can fill k
-    seed_terms: list[str] = []
-    cum = 0
-    for t in sorted(dfreq, key=lambda t: (dfreq[t], t)):
-        seed_terms.append(t)
-        cum += dfreq[t]
-        if cum >= k:
-            break
-    seed_chunks = sorted(
-        {r["chunk"] for r in meta if r["term"] in set(seed_terms)}
-    )
-    seed_scores = exact_scores(
-        seg.where(F.col("chunk").isin(seed_chunks))
-    )
-    if len(seed_chunks) == len(chunk_bound):
-        # the θ-seed already touches every chunk (typical for a needle
-        # term paired with spread terms on an unclustered layout): its
-        # exact scores ARE the exhaustive result — skip the bound and
-        # survivor passes outright
-        topk = seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        metrics = {
-            "theta": float("-inf"),
-            "chunks_total": len(chunk_bound),
-            "chunks_decoded": len(chunk_bound),
-            "chunk_skip_fraction": 0.0,
-            "seed_covered_all": True,
-        }
-        return topk, metrics
-    kth = seed_scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    theta = kth[-1]["score"] if len(kth) >= k else float("-inf")
-
-    survivors = sorted(
-        c for c, bound in chunk_bound.items() if bound >= theta - 1e-6
-    )
-    topk = (
-        exact_scores(seg.where(F.col("chunk").isin(survivors)))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    metrics = {
-        "theta": theta,
-        "chunks_total": len(chunk_bound),
-        "chunks_decoded": len(survivors),
-        "chunk_skip_fraction": round(
-            1.0 - len(survivors) / max(len(chunk_bound), 1), 4
-        ),
-    }
-    if collect_metrics:
-        metrics["seed_chunks"] = len(seed_chunks)
-    return topk, metrics

@@ -57,6 +57,7 @@ def main() -> None:
         build_postings,
     )
     from phphinder_spark.index.segments import (
+        SegmentStore,
         encode_segments,
         segment_bm25_topk,
         segment_bm25_topk_blockmax,
@@ -100,15 +101,11 @@ def main() -> None:
         encode_segments(postings, chunk_span=span),
         os.path.join(seg_dir, "segments"),
     )
-    from phphinder_spark.index.segments import merge_segment_dictionaries
-
-    segs = spark.read.parquet(os.path.join(seg_dir, "segments"))
-    merge_segment_dictionaries(segs).write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "dictionary")
-    )
     doclens.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclens"))
     with open(os.path.join(seg_dir, "stats.json"), "w") as fh:
         json.dump({"n_docs": n_docs, "avgdl": {"content": avgdl}}, fh)
+    # one open store for every query: the timings are the scorers' own
+    store = SegmentStore(spark, seg_dir)
     print(json.dumps({"segment_store_sec": round(time.time() - t, 1),
                       "chunk_span": span}), flush=True)
 
@@ -122,13 +119,13 @@ def main() -> None:
         cold = [
             (r["doc_id"], r["score"])
             for r in segment_bm25_topk(
-                spark, seg_dir, terms, "content", k=k
+                spark, store, terms, "content", k=k
             ).collect()
         ]
         t_cold = time.time() - t
         t = time.time()
         topk, m = segment_bm25_topk_blockmax(
-            spark, seg_dir, terms, "content", k=k
+            spark, store, terms, "content", k=k
         )
         bm = [(r["doc_id"], r["score"]) for r in topk.collect()]
         t_bm = time.time() - t
