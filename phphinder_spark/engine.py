@@ -314,7 +314,7 @@ class SparkSearchEngine:
         self._shadow_ok: dict[str, bool] = {}
         # cold-serving mode (from_index_dir(serve="segments")): postings
         # access goes through the compressed segment store with (field,
-        # term) predicates applied to SEGMENT rows before payload decode
+        # term) predicates applied to SEGMENT rows before any posting decode
         self._store: SegmentStore | None = None
 
     @property
@@ -472,7 +472,7 @@ class SparkSearchEngine:
         rebuilt per session). Every postings access routes through
         ``_postings_where`` / ``_postings_for_terms``, which filter SEGMENT
         rows (field/term columns, parquet-pushdown on the sorted store)
-        before decoding any payload. BM25 top-k runs the segment scorers
+        before decoding any posting array. BM25 top-k runs the segment scorers
         on the open store; per query they read only the query terms'
         chunk metadata — from the store's driver map when
         ``n_segment_rows`` is within ``_DICT_DRIVER_CACHE_MAX`` (built on
@@ -517,7 +517,8 @@ class SparkSearchEngine:
         # loudly instead of silently decoding the whole store
         idx._postings_guard = (
             "index.postings accessed while serving from the compressed "
-            "segment store: this DataFrame decodes EVERY segment payload. "
+            "segment store: this DataFrame explodes the posting arrays of "
+            "EVERY segment row. "
             "Query paths must route through SparkSearchEngine._postings_where"
             " / _postings_for_terms (term/field pushdown before decode)."
         )
@@ -540,9 +541,10 @@ class SparkSearchEngine:
         """Postings rows matching ``cond``. ``cond`` must reference only
         the (field, term) columns so that in segment-serving mode it can
         be evaluated on SEGMENT rows — pushed into the sorted parquet scan
-        — before any payload is decoded. Only the PHRASE prefilter needs
-        ``with_positions``; term/prefix/typo/BM25 leaves decode doc+tf
-        only (the positions parse is the remaining per-row Python cost)."""
+        — before any posting array is decoded. Only the PHRASE prefilter
+        needs ``with_positions``; term/prefix/typo/BM25 leaves decode
+        doc+tf only, so their scans never read the ``positions`` column
+        (the bulk of the store)."""
         if self._store is not None:
             return decode_segments(
                 self._store.segments.where(cond), with_positions=with_positions
@@ -552,7 +554,7 @@ class SparkSearchEngine:
     def _postings_for_terms(self, cand: DataFrame) -> DataFrame:
         """Postings for a bounded (field, term) candidate frame — the
         candidates broadcast-join against segment rows (decode only
-        matching payloads, doc+tf only) or against the in-memory
+        matching rows, doc+tf only) or against the in-memory
         postings."""
         if self._store is not None:
             return decode_segments(
@@ -730,22 +732,25 @@ class SparkSearchEngine:
     def _shadow_available(self, field: str) -> bool:
         """Does the loaded index carry ``<field>#raw`` shadow postings?
         Persisted indexes built before the shadow existed don't — those
-        fall back to the stored-corpus scan. One probe job per (engine,
-        field), cached; invalidated with the index."""
+        fall back to the stored-corpus scan. Answered from the segment
+        store's driver chunk map when it is loaded, else by one probe job
+        per (engine, field); cached, invalidated with the index."""
         if field not in self._shadow_ok:
             from phphinder_spark.index.builder import SHADOW_SUFFIX
 
-            src = (
-                self._store.segments
-                if self._store is not None
-                else self.index.postings
-            )
-            self._shadow_ok[field] = (
-                src.where(F.col("field") == field + SHADOW_SUFFIX)
-                .limit(1)
-                .count()
-                > 0
-            )
+            shadow = field + SHADOW_SUFFIX
+            fields = self._store.fields() if self._store is not None else None
+            if fields is not None:
+                self._shadow_ok[field] = shadow in fields
+            else:
+                src = (
+                    self._store.segments
+                    if self._store is not None
+                    else self.index.postings
+                )
+                self._shadow_ok[field] = (
+                    src.where(F.col("field") == shadow).limit(1).count() > 0
+                )
         return self._shadow_ok[field]
 
     def _phrase_use_index(self) -> bool:
@@ -779,7 +784,7 @@ class SparkSearchEngine:
         """Postings source for the fulltext prefilter, pre-filtered to the
         phrase's slot term conditions (first: suffix, last: prefix,
         middles: equality; single token: containment) so segment-serving
-        decodes only matching terms' payloads. ``fulltext_candidates``
+        decodes only matching terms' posting arrays. ``fulltext_candidates``
         re-applies the per-slot conditions on this superset."""
         from phphinder_spark.index.builder import SHADOW_SUFFIX
 
@@ -1216,7 +1221,7 @@ class SparkSearchEngine:
             }
         # dictionary over the cap: one batched probe job for the whole AST
         # — the persisted DICTIONARY in segment-serving mode (probing
-        # postings there would decode payloads), the cached postings frame
+        # postings there would decode posting arrays), the cached postings frame
         # in memory mode
         if self._store is not None:
             src = self.index.dict_df
@@ -1251,7 +1256,7 @@ class SparkSearchEngine:
 
         Segment-serving note: this routes through ``_postings_where`` —
         the (field, term) predicate is applied to segment rows before any
-        payload decode, so it is safe (and warning-free) under
+        posting decode, so it is safe (and warning-free) under
         ``from_index_dir(serve='segments')``; only direct access to
         ``index.postings`` trips the full-decode guard."""
         t = self.schema.analyzer.transform(term)
@@ -1287,7 +1292,7 @@ class SparkSearchEngine:
         the threshold. ``'auto'`` (default) picks exhaustive in memory
         mode (one job, pruning can't beat cached-scan scoring locally)
         and blockmax in segment-serving mode, where skipped chunks are
-        payload bytes never decoded (measured: at worst ~15% over
+        posting arrays never read (measured: at worst ~15% over
         exhaustive on a layout with nothing to skip, 1.6-1.7x ahead on
         clustered layouts — BENCH.md)."""
         if strategy not in ("auto", "exhaustive", "blockmax"):
@@ -1304,7 +1309,7 @@ class SparkSearchEngine:
         terms = self._bm25_terms(phrase)
         if self._store is not None:
             # cold path: score straight off the open segment store — chunk
-            # metadata from its driver map, payload decode bounded to the
+            # metadata from its driver map, posting decode bounded to the
             # query terms (blockmax: to the surviving chunks), no
             # uncompressed postings read
             from phphinder_spark.index.segments import (

@@ -14,7 +14,9 @@ tests/test_segments_resume.py).
 Layout under ``out_dir``:
     docs/                 stored fields + content_sha256 (audit column)
     postings/chunk=<i>/   per-chunk postings parquet
-    segments/             compressed segment store (encode_segments)
+    segments/             segment store (encode_segments): per (field, term,
+                          chunk) doc_ids/tfs/positions arrays, Parquet v2
+                          DELTA_BINARY_PACKED (delta-gaps, bit-packed)
     dictionary/           global (field, term, df, cf, ...) parquet
     ngram/                bigram typo index over dictionary terms
     stats.json            corpus-level stats (n_docs, avgdl per field)

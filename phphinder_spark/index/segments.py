@@ -1,7 +1,7 @@
-"""Compressed posting-list segments: sorted, delta-gap + varint encoded,
-chunked, with per-row skip statistics (min/max doc_id) — the Spark
-replacement for the reference's sorted fixed-width JSON files with binary
-search (reference: src/Index/JsonStorage.php:209-301; SURVEY.md §4 item 1).
+"""Compressed posting-list segments: sorted, delta-gap encoded, chunked,
+with per-row skip statistics (min/max doc_id) — the Spark replacement for
+the reference's sorted fixed-width JSON files with binary search
+(reference: src/Index/JsonStorage.php:209-301; SURVEY.md §4 item 1).
 
 Layout: one segment row per (field, term, chunk) where
 ``chunk = doc_id // chunk_span`` bounds group size for hot terms (a
@@ -12,267 +12,91 @@ row-group min/max statistics give O(log n)-style data skipping on term
 lookups — the distributed analogue of the reference's in-file binary
 search.
 
-Payload format (little-endian varints):
-    doc block: first_doc_id, then gaps (delta >= 1)
-    tf block:  tf per doc
-    pos block: per doc: n_positions, then position deltas
-Encode/decode run inside applyInPandas/mapInPandas (Arrow batches).
+Posting format: three Parquet array columns per row, aligned by index —
+    doc_ids    array<long>         sorted, absolute doc ids
+    tfs        array<long>         tf per doc
+    positions  array<array<int>>   sorted positions per doc
+The delta-gaps live in the file format: ``write_segments`` writes Parquet
+v2 pages without dictionaries, so every integer column (array elements
+included) is ``DELTA_BINARY_PACKED`` — deltas bit-packed in blocks.
+Encode is one JVM aggregate and decode one ``inline(arrays_zip(...))``:
+no Python worker runs on either side, and a scoring read scans only the
+``doc_ids``/``tfs`` columns.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-
-SEGMENT_SCHEMA = (
-    "field string, term string, chunk long, df long, cf long, "
-    "min_doc long, max_doc long, max_tf long, n_bytes long, payload binary"
-)
-
-POSTING_SCHEMA = (
-    "field string, term string, doc_id long, tf long, positions array<int>"
-)
 
 DEFAULT_CHUNK_SPAN = 1 << 20  # 1M doc ids per chunk
 
-
-def _write_varint(out: bytearray, v: int) -> None:
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+# fixed Parquet writer options of the store (see the module docstring)
+_WRITE_OPTIONS = {"parquet.writer.version": "v2", "parquet.enable.dictionary": "false"}
 
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = 0
-    val = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        val |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return val, pos
-        shift += 7
-
-
-def encode_posting_group(doc_ids, tfs, positions_list) -> bytes:
-    """Encode one (field, term, chunk) group; inputs sorted by doc_id."""
-    out = bytearray()
-    prev = None
-    for d in doc_ids:
-        _write_varint(out, d if prev is None else d - prev)
-        prev = d
-    for t in tfs:
-        _write_varint(out, t)
-    for pos in positions_list:
-        _write_varint(out, len(pos))
-        pprev = 0
-        for p in pos:
-            _write_varint(out, p - pprev)
-            pprev = p
-    return bytes(out)
-
-
-def _parse_varints_np(payload: bytes):
-    """All varint values of a payload, vectorized: terminator bytes have
-    the high bit clear; each value is the 0x7f-masked bytes of its run,
-    little-endian base-128. The per-BYTE python loop is the decode
-    hot-spot; this replaces it with numpy segment reductions."""
-    import numpy as np
-
-    b = np.frombuffer(payload, dtype=np.uint8)
-    ends = np.flatnonzero((b & 0x80) == 0)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    # byte index within its value = position - start of its run
-    idx = np.arange(len(b), dtype=np.int64)
-    run_id = np.searchsorted(ends, idx)
-    shifts = (idx - starts[run_id]) * 7
-    contrib = (b & 0x7F).astype(np.int64) << shifts
-    return np.add.reduceat(contrib, starts)
-
-
-def decode_posting_group_np(payload: bytes, df: int, with_positions: bool = True):
-    """Vectorized inverse of ``encode_posting_group`` (same output as
-    ``decode_posting_group``, asserted in tests). Per-byte parsing and
-    the per-doc position cumsums are all segmented numpy ops; python
-    touches only one O(df) header walk and list slicing.
-
-    ``with_positions=False`` skips that O(df) python walk entirely and
-    returns empty position lists — the scoring paths (BM25) only need
-    (doc_id, tf), and positions usually dominate the payload."""
-    import numpy as np
-
-    vals = _parse_varints_np(payload)
-    doc_ids = np.cumsum(vals[:df]).tolist()
-    tfs = vals[df : 2 * df].tolist()
-    if not with_positions:
-        return doc_ids, tfs, [[] for _ in range(df)]
-    tail_np = vals[2 * df :]
-    tail = tail_np.tolist()
-    # header walk: counts + header byte positions (O(df), no slicing)
-    counts = []
-    headers = []
-    p = 0
-    for _ in range(df):
-        n = tail[p]
-        counts.append(n)
-        headers.append(p)
-        p += 1 + n
-    if p == df:  # all position lists empty
-        return doc_ids, tfs, [[] for _ in range(df)]
-    mask = np.ones(len(tail), dtype=bool)
-    mask[headers] = False
-    deltas = tail_np[mask]
-    csum = np.cumsum(deltas)
-    # segmented cumsum: subtract the running total at each doc's start
-    starts = np.cumsum([0] + counts[:-1])
-    bases = np.where(starts > 0, csum[starts - 1], 0)
-    abs_pos = (csum - np.repeat(bases, counts)).tolist()
-    positions = []
-    s = 0
-    for n in counts:
-        positions.append(abs_pos[s : s + n])
-        s += n
-    return doc_ids, tfs, positions
-
-
-def decode_posting_group(payload: bytes, df: int):
-    doc_ids = []
-    pos = 0
-    acc = 0
-    for i in range(df):
-        v, pos = _read_varint(payload, pos)
-        acc = v if i == 0 else acc + v
-        doc_ids.append(acc)
-    tfs = []
-    for _ in range(df):
-        v, pos = _read_varint(payload, pos)
-        tfs.append(v)
-    positions = []
-    for _ in range(df):
-        n, pos = _read_varint(payload, pos)
-        cur = []
-        acc_p = 0
-        for _ in range(n):
-            v, pos = _read_varint(payload, pos)
-            acc_p += v
-            cur.append(acc_p)
-        positions.append(cur)
-    return doc_ids, tfs, positions
+def read_segments(spark, path: str) -> DataFrame:
+    """Open the segment store at ``path``; a store written in the retired
+    varint-payload format fails here with a clear error instead of deep
+    inside a Spark job."""
+    seg = spark.read.parquet(path)
+    if "payload" in seg.columns and "doc_ids" not in seg.columns:
+        raise ValueError(
+            f"{path} is a segment store in the retired varint-payload "
+            "format (one 'payload' blob per row); rebuild the index with "
+            "index.manifest.build_resumable_index to get the columnar format"
+        )
+    return seg
 
 
 def encode_segments(
     postings: DataFrame, chunk_span: int = DEFAULT_CHUNK_SPAN
 ) -> DataFrame:
-    """postings -> segment rows. Shuffles once on (field, term, chunk);
-    group size is bounded by chunk_span regardless of term hotness.
-
-    Implementation note: groupBy().applyInPandas would materialize one
-    pandas DataFrame PER GROUP — with a large vocabulary most groups are
-    a handful of rows and per-group pandas overhead dominates (measured
-    >10x slower at 30k-term vocabularies). Instead: hash-repartition by
-    the full group key (a group never splits across partitions), sort
-    within partitions, and encode with mapInPandas — one pandas frame
-    per Arrow batch, carrying the possibly-incomplete trailing group
-    over to the next batch of the same partition."""
-    with_chunk = postings.withColumn(
-        "chunk", F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
-    )
-    parts = with_chunk.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    arranged = with_chunk.repartition(
-        int(parts), "field", "term", "chunk"
-    ).sortWithinPartitions("field", "term", "chunk", "doc_id")
-
-    def encode_rows(field, term, chunk, sub: pd.DataFrame) -> dict:
-        payload = encode_posting_group(
-            sub["doc_id"].tolist(),
-            sub["tf"].tolist(),
-            [list(p) for p in sub["positions"]],
+    """postings -> segment rows: one aggregate on (field, term, chunk) that
+    collects the doc-id-sorted (doc_id, tf, positions) list, so group size
+    is bounded by chunk_span regardless of term hotness. The skip
+    statistics come from that list: df its size, min/max_doc its ends,
+    max_tf (the block-max bound) its tf ceiling."""
+    p = (
+        postings.withColumn(
+            "chunk", F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
         )
-        return {
-            "field": field,
-            "term": term,
-            "chunk": chunk,
-            "df": len(sub),
-            "cf": int(sub["tf"].sum()),
-            "min_doc": int(sub["doc_id"].min()),
-            "max_doc": int(sub["doc_id"].max()),
-            # block-max skip statistic: the chunk's tf ceiling bounds
-            # any member doc's BM25 contribution
-            "max_tf": int(sub["tf"].max()),
-            "n_bytes": len(payload),
-            "payload": payload,
-        }
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            # hold back the trailing group — it may continue in the next
-            # batch of this partition
-            last = pdf.iloc[-1]
-            tail_mask = (
-                (pdf["field"] == last["field"])
-                & (pdf["term"] == last["term"])
-                & (pdf["chunk"] == last["chunk"])
-            )
-            carry = pdf[tail_mask]
-            head = pdf[~tail_mask]
-            if head.empty:
-                continue
-            out = [
-                encode_rows(f, t, c, sub)
-                for (f, t, c), sub in head.groupby(
-                    ["field", "term", "chunk"], sort=False
-                )
-            ]
-            yield pd.DataFrame(out)
-        if carry is not None and not carry.empty:
-            out = [
-                encode_rows(f, t, c, sub)
-                for (f, t, c), sub in carry.groupby(
-                    ["field", "term", "chunk"], sort=False
-                )
-            ]
-            yield pd.DataFrame(out)
-
-    return arranged.mapInPandas(encode, SEGMENT_SCHEMA)
+        .groupBy("field", "term", "chunk")
+        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "tf", "positions"))).alias("p"))
+    )
+    return p.select(
+        "field",
+        "term",
+        "chunk",
+        F.size("p").cast("long").alias("df"),
+        F.aggregate("p.tf", F.lit(0).cast("long"), lambda acc, x: acc + x).alias("cf"),
+        F.col("p")[0]["doc_id"].alias("min_doc"),
+        F.element_at("p", -1)["doc_id"].alias("max_doc"),
+        F.array_max("p.tf").alias("max_tf"),
+        F.col("p.doc_id").alias("doc_ids"),
+        F.col("p.tf").alias("tfs"),
+        F.col("p.positions").alias("positions"),
+    )
 
 
 def decode_segments(segments: DataFrame, with_positions: bool = True) -> DataFrame:
     """segment rows -> postings (inverse of encode_segments).
 
     ``with_positions=False`` emits empty position arrays (schema-stable)
-    and skips the per-doc position parse — use for scoring-only reads."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                doc_ids, tfs, positions = decode_posting_group_np(
-                    bytes(row.payload), int(row.df), with_positions
-                )
-                for d, t, p in zip(doc_ids, tfs, positions):
-                    out.append((row.field, row.term, d, t, p))
-            yield pd.DataFrame(
-                out, columns=["field", "term", "doc_id", "tf", "positions"]
-            )
-
-    return segments.mapInPandas(decode, POSTING_SCHEMA)
+    and never reads the ``positions`` column — use for scoring-only reads."""
+    zipped = [F.col("doc_ids").alias("doc_id"), F.col("tfs").alias("tf")]
+    if with_positions:
+        return segments.select(
+            "field", "term", F.inline(F.arrays_zip(*zipped, F.col("positions")))
+        )
+    return segments.select(
+        "field",
+        "term",
+        F.inline(F.arrays_zip(*zipped)),
+        F.array().cast("array<int>").alias("positions"),
+    )
 
 
 def write_segments(segments: DataFrame, path: str, n_files: int | None = None) -> None:
@@ -281,13 +105,13 @@ def write_segments(segments: DataFrame, path: str, n_files: int | None = None) -
     out = segments.repartitionByRange(
         *( [n_files] if n_files else [] ), "field", "term"
     ).sortWithinPartitions("field", "term", "chunk")
-    out.write.mode("overwrite").parquet(path)
+    out.write.mode("overwrite").options(**_WRITE_OPTIONS).parquet(path)
 
 
 def read_term_postings(spark, path: str, field: str, term: str) -> DataFrame:
     """Point lookup from the segment store: the (field, term) predicate is
     pushed into the Parquet scan (row-group skipping via sorted layout)."""
-    seg = spark.read.parquet(path).where(
+    seg = read_segments(spark, path).where(
         (F.col("field") == field) & (F.col("term") == term)
     )
     return decode_segments(seg)
@@ -295,13 +119,12 @@ def read_term_postings(spark, path: str, field: str, term: str) -> DataFrame:
 
 def merge_segment_dictionaries(segments: DataFrame) -> DataFrame:
     """Global dictionary from chunked segments: hierarchical merge is a
-    partial-agg sum over chunk stats (never touches payloads)."""
+    partial-agg sum over chunk stats (never reads the posting arrays)."""
     return segments.groupBy("field", "term").agg(
         F.sum("df").alias("df"),
         F.sum("cf").alias("cf"),
         F.min("min_doc").alias("min_doc"),
         F.max("max_doc").alias("max_doc"),
-        F.sum("n_bytes").alias("n_bytes"),
     )
 
 
@@ -327,7 +150,7 @@ def merge_segment_stores(
 
     segs = reduce(
         lambda a, b: a.unionByName(b),
-        [spark.read.parquet(p) for p in paths],
+        [read_segments(spark, p) for p in paths],
     )
     w = Window.partitionBy("field", "term", "chunk")
     tagged = segs.withColumn("_n", F.count("*").over(w))
@@ -354,12 +177,12 @@ class SegmentStore:
       map (field, term) -> ((chunk, df, max_tf), ...); later lookups run
       no Spark job;
     - over the cap, or a store whose stats.json has no row count: one
-      metadata-only collect per lookup (the payload column is never
+      metadata-only collect per lookup (the posting arrays are never
       scanned)."""
 
     def __init__(self, spark, index_dir: str):
         self.spark = spark
-        self.segments = spark.read.parquet(os.path.join(index_dir, "segments"))
+        self.segments = read_segments(spark, os.path.join(index_dir, "segments"))
         self.doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
         with open(os.path.join(index_dir, "stats.json")) as fh:
             self.stats = json.load(fh)
@@ -370,6 +193,13 @@ class SegmentStore:
     def of(cls, spark, store: "SegmentStore | str") -> "SegmentStore":
         """``store`` itself, or a store opened on the spot from a path."""
         return store if isinstance(store, SegmentStore) else cls(spark, store)
+
+    def fields(self) -> set[str] | None:
+        """The fields of the store's rows, from the driver map; None while
+        that map is not loaded (see ``chunk_rows``)."""
+        if self._chunks is None:
+            return None
+        return {f for f, _ in self._chunks}
 
     def chunk_rows(self, field: str, terms: list[str]) -> list[tuple]:
         """(term, chunk, df, max_tf) of every segment row of ``terms`` in
@@ -516,7 +346,7 @@ def segment_bm25_topk_blockmax(
     """WAND-style block-max BM25 served straight from the segment store —
     the true skip-pointer path (north_star: "skip-pointered posting
     lists"): whole chunks whose summed upper bound can't reach the top-k
-    threshold are never decoded, and their payload bytes are never read.
+    threshold are never decoded, and their posting arrays are never read.
 
     ``store`` is an open ``SegmentStore`` (the engine's, read once at
     open: segments and doclens tables, stats.json) or an index directory,
@@ -531,7 +361,7 @@ def segment_bm25_topk_blockmax(
     postings for every query term live in the same chunk id; a doc's
     score is bounded by sum_t ub(t, chunk) and any doc with final score
     >= θ therefore lies in a chunk with bound >= θ. θ is seeded with the
-    exact scores of the rarest terms' docs (cheapest payloads). Asserted
+    exact scores of the rarest terms' docs (shortest posting lists). Asserted
     equal to ``segment_bm25_topk`` in tests. Returns (topk_df, metrics)."""
     return _segment_topk(
         SegmentStore.of(spark, store), terms, field, k, k1, b,

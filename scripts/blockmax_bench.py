@@ -109,7 +109,7 @@ def main() -> None:
         print(json.dumps(rows_out[-1]), flush=True)
 
     # ---- segment-served comparison: here pruning skips real work
-    # (python varint payload decode), not just scoring exprs
+    # (skipped chunks' posting arrays are never read), not just scoring exprs
     import os
     import tempfile
 
@@ -180,7 +180,7 @@ def main() -> None:
                 f"| {r['speedup']}x | {r['pruned_fraction']} | yes |\n"
             )
         fh.write(
-            "\nSegment-served (decode cost is real — pruning skips payload "
+            "\nSegment-served (decode cost is real — pruning skips posting "
             "decode, not just scoring):\n\n"
             "| query | seg exhaustive (s) | seg blockmax (s) | speedup | chunks skipped | identical top-k |\n"
             "|---|---|---|---|---|---|\n"

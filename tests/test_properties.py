@@ -1,14 +1,12 @@
 """Property-based tests (hypothesis): codec round-trips, parser
-robustness, stemmer safety — no Spark session needed."""
+robustness, stemmer safety. Only the segment codec round-trip needs the
+Spark session; it batches each drawn example into one DataFrame."""
 
 from hypothesis import given, settings, strategies as st
 
 from phphinder_spark.analysis.porter2 import stem
 from phphinder_spark.functions.idencoder import base62_decode, base62_encode
-from phphinder_spark.index.segments import (
-    decode_posting_group,
-    encode_posting_group,
-)
+from phphinder_spark.index.segments import decode_segments, encode_segments
 from phphinder_spark.query.parser import QueryParser
 
 
@@ -23,19 +21,42 @@ def posting_groups(draw):
         doc_ids.append(acc)
     tfs = draw(st.lists(st.integers(1, 10**4), min_size=n, max_size=n))
     positions = [
-        sorted(set(draw(st.lists(st.integers(0, 10**5), min_size=1, max_size=8))))
+        sorted(set(draw(st.lists(st.integers(0, 10**5), min_size=0, max_size=8))))
         for _ in range(n)
     ]
     return doc_ids, tfs, positions
 
 
-@settings(max_examples=200, deadline=None)
-@given(posting_groups())
-def test_varint_codec_roundtrip(group):
-    doc_ids, tfs, positions = group
-    payload = encode_posting_group(doc_ids, tfs, positions)
-    d, t, p = decode_posting_group(payload, len(doc_ids))
-    assert d == doc_ids and t == tfs and p == positions
+@settings(max_examples=10, deadline=None)
+@given(st.lists(posting_groups(), min_size=1, max_size=20))
+def test_segment_codec_roundtrip(spark, groups):
+    """encode_segments -> decode_segments is the identity on postings,
+    and each segment row's skip statistics match its postings."""
+    span = 1 << 24  # a 60-doc group with gaps up to 10^6 spans chunks
+    rows = [
+        ("f", f"t{g}", d, tf, pos)
+        for g, (doc_ids, tfs, positions) in enumerate(groups)
+        for d, tf, pos in zip(doc_ids, tfs, positions)
+    ]
+    postings = spark.createDataFrame(
+        rows, "field string, term string, doc_id long, tf long, positions array<int>"
+    )
+    segments = encode_segments(postings, chunk_span=span)
+    back = decode_segments(segments).collect()
+    assert sorted(
+        (r["term"], r["doc_id"], r["tf"], list(r["positions"])) for r in back
+    ) == sorted((t, d, tf, pos) for _, t, d, tf, pos in rows)
+    by_chunk: dict[tuple, list] = {}
+    for _, t, d, tf, _ in rows:
+        by_chunk.setdefault((t, d // span), []).append((d, tf))
+    stats = {
+        (r["term"], r["chunk"]): (r["df"], r["cf"], r["min_doc"], r["max_doc"], r["max_tf"])
+        for r in segments.collect()
+    }
+    assert stats == {
+        key: (len(v), sum(tf for _, tf in v), v[0][0], v[-1][0], max(tf for _, tf in v))
+        for key, v in by_chunk.items()
+    }
 
 
 @settings(max_examples=300, deadline=None)

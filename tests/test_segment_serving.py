@@ -138,6 +138,19 @@ def test_segment_serving_with_stemmed_schema_and_shadow(spark, tmp_path):
         assert a == b, query
     assert seg._shadow_available("text")  # probed on SEGMENT rows
 
+    # once the store's driver chunk map is loaded (by a BM25 query), the
+    # shadow check reads its (field, term) keys: no probe job
+    fresh = SparkSearchEngine.from_index_dir(spark, out_dir, schema, serve="segments")
+    fresh.search_topk_bm25("spark", k=3, field="text").collect()
+    assert fresh._store._chunks is not None
+    sc = spark.sparkContext
+    sc.setJobGroup("shadow-from-chunk-map", "job-count probe")
+    try:
+        assert fresh._shadow_available("text")
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("shadow-from-chunk-map")) == []
+
 
 def test_flush_into_segments_served_engine_demotes_to_storage(spark, tmp_path):
     """Flushing new docs into a segments-served engine hands ownership to

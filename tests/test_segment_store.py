@@ -23,6 +23,8 @@ from phphinder_spark.engine import SparkSearchEngine
 from phphinder_spark.index.manifest import build_resumable_index
 from phphinder_spark.index.segments import (
     SegmentStore,
+    decode_segments,
+    encode_segments,
     segment_bm25_topk,
     segment_bm25_topk_blockmax,
 )
@@ -269,6 +271,48 @@ def test_persisted_postings_bm25_reads_doclens_artifact(spark, tmp_path):
         for q in ["varint delta", "merge return"]
     ]
     assert runs[1][0] + runs[1][1] <= runs[0][0] + runs[0][1]
+
+
+# ------------------------------------------------------------ plan shape
+
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
+
+SEGMENT_SERVED = {
+    "bm25 exhaustive": lambda e: e.search_topk_bm25(
+        "varint delta merge", k=8, field="content", strategy="exhaustive"),
+    "bm25 blockmax": lambda e: e.search_topk_bm25(
+        "ident_1 ident_1003 function", k=2, field="content", strategy="blockmax"),
+    "term": lambda e: e.search_df("function"),
+    "and": lambda e: e.search_df("function return"),
+    "prefix": lambda e: e.search_df("funct*"),
+    "typo": lambda e: e.search_df("functon"),
+    "phrase": lambda e: e.search_df('"function return"'),
+}
+
+
+def formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
+@pytest.mark.parametrize("shape", list(SEGMENT_SERVED))
+def test_segment_served_plans_run_no_python(warm_engine, shape):
+    """Segment decode is ``inline(arrays_zip(...))`` in the JVM: no
+    segment-served query plan holds a Python-worker node."""
+    plan = formatted_plan(SEGMENT_SERVED[shape](warm_engine))
+    assert "segments" in plan
+    assert not [n for n in PYTHON_NODES if n in plan], plan
+
+
+def test_segment_encode_plan_runs_no_python(warm_engine):
+    """Segment encode is one JVM aggregate — also on a merge's decode ->
+    re-encode path."""
+    postings = decode_segments(warm_engine._store.segments)
+    plan = formatted_plan(encode_segments(postings))
+    assert "ObjectHashAggregate" in plan
+    assert not [n for n in PYTHON_NODES if n in plan], plan
 
 
 # ------------------------------------------------------------ BM25 field

@@ -1,5 +1,6 @@
-"""Segment codec round-trip + compression, data-skipping lookup, and
-resumable-build equivalence after an injected crash."""
+"""Segment codec round-trip + compression, the store's Parquet format,
+data-skipping lookup, and resumable-build equivalence after an injected
+crash."""
 
 import json
 import os
@@ -11,9 +12,8 @@ from phphinder_spark.corpus import generate_code_corpus
 from phphinder_spark.index.builder import assign_doc_ids, build_postings
 from phphinder_spark.index.manifest import build_resumable_index
 from phphinder_spark.index.segments import (
-    decode_posting_group,
+    SegmentStore,
     decode_segments,
-    encode_posting_group,
     encode_segments,
     merge_segment_dictionaries,
     read_term_postings,
@@ -31,13 +31,31 @@ def postings(spark):
     return build_postings(docs, code_schema()).cache()
 
 
-def test_varint_roundtrip_unit():
-    doc_ids = [1, 2, 5, 1000, 1001, 999999, 10**12]
-    tfs = [1, 3, 2, 1, 7, 1, 2]
-    poss = [[0], [1, 5, 9], [2, 3], [100], [0, 1, 2, 3, 4, 5, 6], [7], [10, 20]]
-    payload = encode_posting_group(doc_ids, tfs, poss)
-    d, t, p = decode_posting_group(payload, len(doc_ids))
-    assert d == doc_ids and t == tfs and p == poss
+def test_segment_codec_roundtrip_unit(spark):
+    """encode_segments -> decode_segments on edge cases: ids up to 10^13
+    with gaps of one and of ~10^12, large tf, multi-position and empty
+    position lists, and a group spread over several chunks."""
+    import random
+
+    rows = []
+    doc_ids = [1, 2, 5, 1000, 1001, 999999, 10**12, 10**13]
+    tfs = [1, 3, 2, 1, 7, 1, 10**4, 2]
+    poss = [[0], [1, 5, 9], [], [100], [0, 1, 2, 3, 4, 5, 6], [7], [], [10, 20]]
+    rows += [("content", "edge", d, t, p) for d, t, p in zip(doc_ids, tfs, poss)]
+    rng = random.Random(3)
+    for g in range(20):
+        ids = sorted(rng.sample(range(1, 10**13), rng.randrange(1, 40)))
+        for d in ids:
+            pos = sorted(rng.sample(range(0, 100000), rng.randrange(0, 6)))
+            rows.append(("content", f"rand{g}", d, rng.randrange(1, 300), pos))
+    postings = spark.createDataFrame(
+        rows, "field string, term string, doc_id long, tf long, positions array<int>"
+    )
+    back = decode_segments(encode_segments(postings, chunk_span=1 << 30))
+    assert sorted(
+        (r["field"], r["term"], r["doc_id"], r["tf"], list(r["positions"]))
+        for r in back.collect()
+    ) == sorted((f, t, d, tf, p) for f, t, d, tf, p in rows)
 
 
 def test_decode_without_positions_matches_doc_tf(spark, postings):
@@ -53,7 +71,7 @@ def test_decode_without_positions_matches_doc_tf(spark, postings):
     assert all(list(r["positions"]) == [] for r in lrows)
 
 
-def test_segment_roundtrip_and_compression(spark, postings):
+def test_segment_roundtrip_and_compression(spark, postings, tmp_path):
     segments = encode_segments(postings, chunk_span=256).cache()
     back = decode_segments(segments)
     a = sorted(
@@ -71,12 +89,90 @@ def test_segment_roundtrip_and_compression(spark, postings):
     ).collect()
     assert len(hot) >= 2
     assert all(r["df"] <= 256 for r in hot)
-    # compression: payload bytes well under a naive 8B/doc_id + 8B/tf layout
+    # compression: the written store's on-disk bytes are well under a
+    # naive 8B/doc_id + 8B/tf + 8B/position layout. The store is read back
+    # and must hold every posting, so the bytes measured are a full store.
+    seg_path = str(tmp_path / "segments")
+    write_segments(segments, seg_path)
+    on_disk = decode_segments(spark.read.parquet(seg_path))
+    assert sorted(
+        (r["field"], r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
+        for r in on_disk.collect()
+    ) == a
     naive = postings.select(
         (F.lit(16) + F.size("positions") * 8).alias("b")
     ).agg(F.sum("b")).collect()[0][0]
-    packed = segments.agg(F.sum("n_bytes")).collect()[0][0]
-    assert packed < naive / 3
+    packed = sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _, fs in os.walk(seg_path)
+        for f in fs
+    )
+    assert 0 < packed < naive / 3
+
+
+def test_segment_store_is_delta_binary_packed(spark, postings, tmp_path):
+    """Every integer posting column of a written store — doc ids, tfs and
+    positions, array elements included — is DELTA_BINARY_PACKED (v2
+    pages, no dictionary): the store's delta-gaps."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    seg_path = str(tmp_path / "segments")
+    write_segments(encode_segments(postings, chunk_span=256), seg_path)
+    wanted = {
+        "doc_ids.list.element",
+        "tfs.list.element",
+        "positions.list.element.list.element",
+    }
+    seen = set()
+    for path in glob.glob(os.path.join(seg_path, "*.parquet")):
+        meta = pq.ParquetFile(path).metadata
+        for i in range(meta.num_row_groups):
+            rg = meta.row_group(i)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                if col.path_in_schema in wanted:
+                    seen.add(col.path_in_schema)
+                    assert "DELTA_BINARY_PACKED" in col.encodings, (
+                        col.path_in_schema, col.encodings)
+                    assert not any("DICTIONARY" in e for e in col.encodings)
+    assert seen == wanted
+
+
+def test_varint_format_store_is_refused_with_rebuild_hint(spark, tmp_path):
+    """A store written in the retired varint-payload schema fails at open —
+    SegmentStore, from_index_dir(serve="segments"), merge_segment_stores
+    and read_term_postings — naming the format and the rebuild entry point."""
+    from phphinder_spark.engine import SparkSearchEngine
+    from phphinder_spark.index.segments import merge_segment_stores
+
+    out = str(tmp_path / "old")
+    spark.createDataFrame(
+        [("content", "needle", 0, 1, 1, 7, 7, 1, 2, bytearray(b"\x07\x01\x00"))],
+        "field string, term string, chunk long, df long, cf long, min_doc long, "
+        "max_doc long, max_tf long, n_bytes long, payload binary",
+    ).write.parquet(os.path.join(out, "segments"))
+    spark.createDataFrame([(7, "content", 1)], "doc_id long, field string, dl long").write.parquet(
+        os.path.join(out, "doclens")
+    )
+    spark.createDataFrame([(7, "x")], "doc_id long, content string").write.parquet(
+        os.path.join(out, "docs")
+    )
+    with open(os.path.join(out, "stats.json"), "w") as fh:
+        json.dump({"n_docs": 1, "avgdl": {"content": 1.0}}, fh)
+
+    msg = "varint.*build_resumable_index"
+    with pytest.raises(ValueError, match=msg):
+        SegmentStore(spark, out)
+    with pytest.raises(ValueError, match=msg):
+        SparkSearchEngine.from_index_dir(spark, out, code_schema(), serve="segments")
+    with pytest.raises(ValueError, match=msg):
+        merge_segment_stores(
+            spark, [os.path.join(out, "segments")], str(tmp_path / "merged")
+        )
+    with pytest.raises(ValueError, match=msg):
+        read_term_postings(spark, os.path.join(out, "segments"), "content", "needle")
 
 
 def test_segment_store_lookup(spark, postings, tmp_path):
@@ -124,7 +220,7 @@ def test_resumable_build_crash_equivalence(spark, tmp_path):
     # resume only built the remaining chunks
     assert sum(1 for c in m_resumed["chunks"].values() if c["done"]) == 4
 
-    for sub in ["postings", "dictionary"]:
+    for sub in ["postings", "dictionary", "segments"]:
         a = sorted(map(str, spark.read.parquet(f"{clean_dir}/{sub}").collect()))
         b = sorted(map(str, spark.read.parquet(f"{crash_dir}/{sub}").collect()))
         assert a == b, sub
@@ -379,29 +475,3 @@ def test_clustered_ids_make_chunk_skip_effective(spark, tmp_path):
         spark, out, ["t0_id3", "t0_id5", "t0_id9"], "content", k=8
     )
     assert m2["chunks_total"] <= 6, m2
-
-
-def test_vectorized_decode_equals_reference_decode():
-    """decode_posting_group_np == the pure-python decoder on adversarial
-    payloads (multi-byte varints, empty positions, big ids)."""
-    import random
-
-    from phphinder_spark.index.segments import (
-        decode_posting_group,
-        decode_posting_group_np,
-        encode_posting_group,
-    )
-
-    rng = random.Random(3)
-    for _ in range(50):
-        df = rng.randrange(1, 40)
-        doc_ids = sorted(rng.sample(range(1, 10**13), df))
-        tfs = [rng.randrange(1, 300) for _ in range(df)]
-        poss = [
-            sorted(rng.sample(range(0, 100000), rng.randrange(0, 6)))
-            for _ in range(df)
-        ]
-        payload = encode_posting_group(doc_ids, tfs, poss)
-        assert decode_posting_group_np(payload, df) == decode_posting_group(
-            payload, df
-        )
