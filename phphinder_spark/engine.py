@@ -24,6 +24,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
 from phphinder_spark.functions.typo import levenshtein_distance_for_term
+from phphinder_spark.index import segments
 from phphinder_spark.index.builder import InvertedIndex, build_index, build_postings
 from phphinder_spark.index.segments import SegmentStore, decode_segments
 from phphinder_spark.query import (
@@ -40,7 +41,12 @@ from phphinder_spark.query import (
 )
 from phphinder_spark.query.parser import ANY_FIELD
 from phphinder_spark.schema import SearchSchema
-from phphinder_spark.scoring import bm25_topk, reference_score
+from phphinder_spark.scoring import (
+    PostingsSource,
+    bm25_topk,
+    bm25_topk_batch,
+    reference_score,
+)
 
 _MATCH_SCHEMA = "doc_id long, qvalue string, field string, seq long"
 
@@ -383,25 +389,23 @@ class SparkSearchEngine:
                 [], "query_id string, doc_id long, score double, rank int"
             )
         qmap = {phrase: self._bm25_terms(phrase) for phrase in phrases}
-        stats = self.index.stats()
-        from phphinder_spark.scoring import bm25_topk_batch
+        source, df_by_term = self._bm25_source(field, {t for ts in qmap.values() for t in ts})
+        return bm25_topk_batch(source, qmap, field, k, k1, b, df_by_term=df_by_term)
 
+    def _bm25_source(self, field: str, terms: set[str]):
+        """(posting source, df_by_term) BM25 scores from: the open segment
+        store, whose df comes from its chunk metadata, else the index's
+        postings with df from the driver dictionary cache (None over its
+        cap: the kernel then counts df in its plan — the same values, so
+        scores are bit-identical)."""
         if self._store is not None:
-            # decode only the union of the batch's query terms' segments;
-            # their df values are unchanged by this prefilter
-            all_terms = sorted({t for ts in qmap.values() for t in ts})
-            post_src = self._postings_where(
-                (F.col("field") == field) & F.col("term").isin(all_terms)
-            )
-        else:
-            post_src = self.index.postings
-        return bm25_topk_batch(
-            post_src, self.index.doclens, qmap, field,
-            stats["n_docs"], stats["avgdl"].get(field, 1.0), k, k1, b,
-            df_by_term=self._df_for_terms(
-                {t for ts in qmap.values() for t in ts}, field
-            ),
-        )
+            return self._store, None
+        idx = self.index
+        cache = self._term_field_cache()
+        df_by_term = None if cache is None else {
+            t: cache[t][field] for t in terms if field in cache.get(t, {})
+        }
+        return PostingsSource(idx.postings, idx.doclens, idx.stats()), df_by_term
 
     def _bm25_field(self, field: str | None) -> str:
         """The field BM25 scores: the first non-unique indexed field by
@@ -426,23 +430,6 @@ class SparkSearchEngine:
             if t is not None and t != "":
                 terms.append(str(t))
         return terms
-
-    def _df_for_terms(
-        self, terms: set[str], field: str
-    ) -> dict[str, int] | None:
-        """Per-term document frequencies for ``field`` from the driver
-        dictionary cache (None when the dictionary is over the cap —
-        callers then fall back to the per-query dfreq aggregation).
-        Values are dict_df's df, i.e. exactly what the aggregation would
-        compute, so scoring is unchanged."""
-        cache = self._term_field_cache()
-        if cache is None:
-            return None
-        return {
-            t: cache[t][field]
-            for t in terms
-            if t in cache and field in cache[t]
-        }
 
     @classmethod
     def from_index_dir(
@@ -472,8 +459,8 @@ class SparkSearchEngine:
         rebuilt per session). Every postings access routes through
         ``_postings_where`` / ``_postings_for_terms``, which filter SEGMENT
         rows (field/term columns, parquet-pushdown on the sorted store)
-        before decoding any posting array. BM25 top-k runs the segment scorers
-        on the open store; per query they read only the query terms'
+        before decoding any posting array. BM25 top-k runs the scoring
+        kernel on the open store; per query it reads only the query terms'
         chunk metadata — from the store's driver map when
         ``n_segment_rows`` is within ``_DICT_DRIVER_CACHE_MAX`` (built on
         the first BM25 query), else one metadata-only collect — and decode
@@ -1284,17 +1271,22 @@ class SparkSearchEngine:
         self, phrase: str, k: int = 10, field: str | None = None,
         k1: float = 1.2, b: float = 0.75, strategy: str = "auto",
     ) -> DataFrame:
-        """BM25 disjunctive top-k (north_star primary scorer).
+        """BM25 disjunctive top-k (north_star primary scorer): the one
+        kernel ``scoring.bm25_topk`` over this engine's posting source —
+        the open segment store, else the index's postings (cached, or the
+        persisted ``postings/``).
 
         ``strategy='exhaustive'`` is Catalyst's TakeOrderedAndProject over
-        all matching docs; ``strategy='blockmax'`` is the pruned path —
-        identical results by construction, cheaper when rare terms bound
-        the threshold. ``'auto'`` (default) picks exhaustive in memory
-        mode (one job, pruning can't beat cached-scan scoring locally)
-        and blockmax in segment-serving mode, where skipped chunks are
-        posting arrays never read (measured: at worst ~15% over
-        exhaustive on a layout with nothing to skip, 1.6-1.7x ahead on
-        clustered layouts — BENCH.md)."""
+        all matching docs; ``strategy='blockmax'`` is the kernel's
+        chunk-level block-max (doc-id chunks whose bound cannot reach θ
+        are not scored; in memory mode the chunks are ``doc_id // span``
+        ranges of the postings) — identical results by construction,
+        cheaper when rare terms bound the threshold. ``'auto'`` (default)
+        picks exhaustive in memory mode (one job, pruning can't beat
+        cached-scan scoring locally) and blockmax in segment-serving
+        mode, where skipped chunks are posting arrays never read
+        (measured: at worst ~15% over exhaustive on a layout with nothing
+        to skip, 1.6-1.7x ahead on clustered layouts — BENCH.md)."""
         if strategy not in ("auto", "exhaustive", "blockmax"):
             raise ValueError(
                 "strategy must be 'auto', 'exhaustive' or 'blockmax', "
@@ -1307,41 +1299,14 @@ class SparkSearchEngine:
             # reference searches over empty storage return no results
             return self.spark.createDataFrame([], "doc_id long, score double")
         terms = self._bm25_terms(phrase)
-        if self._store is not None:
-            # cold path: score straight off the open segment store — chunk
-            # metadata from its driver map, posting decode bounded to the
-            # query terms (blockmax: to the surviving chunks), no
-            # uncompressed postings read
-            from phphinder_spark.index.segments import (
-                segment_bm25_topk,
-                segment_bm25_topk_blockmax,
-            )
-
-            if strategy == "blockmax":
-                topk, _metrics = segment_bm25_topk_blockmax(
-                    self.spark, self._store, terms, field, k, k1, b
-                )
-                return topk
-            return segment_bm25_topk(self.spark, self._store, terms, field, k, k1, b)
-        stats = self.index.stats()
-        avgdl = stats["avgdl"].get(field, 1.0)
-        if strategy == "blockmax":
-            from phphinder_spark.scoring import bm25_topk_blockmax
-
-            topk, _metrics = bm25_topk_blockmax(
-                self.index.postings, self.index.doclens, terms, field,
-                stats["n_docs"], avgdl, k, k1, b,
-            )
-            return topk
+        source, df_by_term = self._bm25_source(field, set(terms))
+        if strategy == "blockmax" and source is self._store:
+            # looked up on the module per call, so a wrapper installed
+            # there (perfbench/trace.py) sees segment block-max queries
+            return segments.segment_bm25_topk_blockmax(
+                self.spark, source, terms, field, k, k1, b
+            )[0]
         return bm25_topk(
-            self.index.postings,
-            self.index.doclens,
-            terms,
-            field,
-            stats["n_docs"],
-            avgdl,
-            k,
-            k1,
-            b,
-            df_by_term=self._df_for_terms(set(terms), field),
-        )
+            source, terms, field, k, k1, b,
+            prune=strategy == "blockmax", df_by_term=df_by_term,
+        )[0]

@@ -31,6 +31,8 @@ import os
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from phphinder_spark.scoring import bm25_topk
+
 DEFAULT_CHUNK_SPAN = 1 << 20  # 1M doc ids per chunk
 
 # fixed Parquet writer options of the store (see the module docstring)
@@ -162,15 +164,17 @@ def merge_segment_stores(
 
 class SegmentStore:
     """An index directory's segment store, opened once: the ``segments/``
-    and ``doclens/`` parquet tables and ``stats.json``. The scorers below
-    take one, so a serving engine pays the parquet opens and the stats
-    read at open time, never per query.
+    and ``doclens/`` parquet tables and ``stats.json``. It is a posting
+    source of ``scoring.bm25_topk``, so a serving engine pays the parquet
+    opens and the stats read at open time, never per query.
 
-    Per query they read the chunk metadata (term, chunk, df, max_tf) of
-    the query terms — never ``dictionary/``: the dictionary is
+    Per query the kernel reads the chunk metadata (term, chunk, df,
+    max_tf) of the query terms — never ``dictionary/``: the dictionary is
     ``merge_segment_dictionaries`` of these rows, so a term's df is the
-    sum of its chunks' df. That metadata comes from one of two regimes,
-    chosen once by the rule of the engine's driver dictionary cache:
+    sum of its chunks' df (``df_from_chunk_rows``), and the posting
+    arrays of only the chunks it scores (``hits``). That metadata comes
+    from one of two regimes, chosen once by the rule of the engine's
+    driver dictionary cache:
 
     - ``n_segment_rows`` (stats.json) within ``_DICT_DRIVER_CACHE_MAX``:
       the first lookup collects the whole store's metadata into a driver
@@ -179,6 +183,8 @@ class SegmentStore:
     - over the cap, or a store whose stats.json has no row count: one
       metadata-only collect per lookup (the posting arrays are never
       scanned)."""
+
+    df_from_chunk_rows = True
 
     def __init__(self, spark, index_dir: str):
         self.spark = spark
@@ -218,152 +224,35 @@ class SegmentStore:
                 self._chunks = {key: tuple(v) for key, v in by_key.items()}
         if self._chunks is not None:
             return [(t, *r) for t in terms for r in self._chunks.get((field, t), ())]
-        return (
-            self.segments.where((F.col("field") == field) & F.col("term").isin(terms))
-            .select("term", "chunk", "df", "max_tf")
-            .collect()
-        )
+        return self._rows(field, terms).select("term", "chunk", "df", "max_tf").collect()
 
+    def _rows(self, field: str, terms: list[str]) -> DataFrame:
+        return self.segments.where((F.col("field") == field) & F.col("term").isin(terms))
 
-def _segment_topk(
-    store: SegmentStore, terms, field, k, k1, b, prune: bool,
-    collect_metrics: bool = False,
-) -> "tuple[DataFrame, dict]":
-    """BM25 top-k off the segment store; ``prune=False`` is the exhaustive
-    case of the block-max scorer (see ``segment_bm25_topk_blockmax``)."""
-    from phphinder_spark.scoring import _df_lookup_col, bm25_idf, bm25_score_components
-
-    terms = list(dict.fromkeys(str(t) for t in terms))
-    rows = store.chunk_rows(field, terms)
-
-    def metrics(theta: float, total: int, decoded: int, **extra) -> dict:
-        skip = round(1.0 - decoded / total, 4) if total else 0.0
-        return {"theta": theta, "chunks_total": total, "chunks_decoded": decoded,
-                "chunk_skip_fraction": skip, **extra}
-
-    if not rows:
-        empty = store.spark.createDataFrame([], "doc_id long, score double")
-        return empty, metrics(float("-inf"), 0, 0)
-    dfreq: dict[str, int] = {}
-    for t, _, d, _ in rows:
-        dfreq[t] = dfreq.get(t, 0) + d
-    n_docs, avgdl = store.stats["n_docs"], store.stats["avgdl"][field]
-    seg = store.segments.where((F.col("field") == field) & F.col("term").isin(terms))
-    doclens = store.doclens.where(F.col("field") == field).select("doc_id", "dl")
-
-    def topk(chunks: list[int] | None = None) -> DataFrame:
-        """Exact scores of the docs in ``chunks`` (all when None), with the
-        memory engine's BM25 expression and df as a literal map."""
-        src = seg if chunks is None else seg.where(F.col("chunk").isin(chunks))
-        # scoring needs only (doc_id, tf): skip the per-doc position parse
-        scored = (
-            decode_segments(src, with_positions=False)
-            .withColumn("df", _df_lookup_col(dfreq))
-            .join(doclens, "doc_id")
-            .withColumn(
-                "contrib",
-                bm25_score_components(
-                    F.col("tf").cast("double"), F.col("df").cast("double"),
-                    F.col("dl").cast("double"), n_docs, avgdl, k1, b,
-                ),
-            )
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("contrib"), 6).alias("score"))
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    if not prune:
-        return topk(), {}
-    idf = {t: bm25_idf(n_docs, d) for t, d in dfreq.items()}
-    chunk_bound: dict[int, float] = {}
-    terms_per_chunk: dict[int, set] = {}
-    for t, c, _, m in rows:
-        ub = idf[t] * m * (k1 + 1.0) / (m + k1 * (1.0 - b))
-        chunk_bound[c] = chunk_bound.get(c, 0.0) + ub
-        terms_per_chunk.setdefault(c, set()).add(t)
-    total = len(chunk_bound)
-
-    # quick reject (all-hot queries): when EVERY chunk holds EVERY query
-    # term, bound-based skipping can at best shave tf variance while the
-    # θ-seeding pass decodes its seed chunks twice — measured 2x slower
-    # than exhaustive at 1.5M docs (BENCH.md crossover, 'function return
-    # class'). Score everything in one pass instead; identical top-k.
-    if all(len(s) == len(dfreq) for s in terms_per_chunk.values()):
-        return topk(), metrics(float("-inf"), total, total, quick_reject=True)
-
-    # θ seed: rarest terms (ascending global df) until the seed can fill k
-    seed_terms: set[str] = set()
-    cum = 0
-    for t in sorted(dfreq, key=lambda t: (dfreq[t], t)):
-        seed_terms.add(t)
-        cum += dfreq[t]
-        if cum >= k:
-            break
-    seed_chunks = sorted({c for t, c, _, _ in rows if t in seed_terms})
-    if len(seed_chunks) == total:
-        # the θ-seed already touches every chunk (typical for a needle
-        # term paired with spread terms on an unclustered layout): its
-        # exact scores ARE the exhaustive result — skip the bound and
-        # survivor passes outright
-        return topk(), metrics(float("-inf"), total, total, seed_covered_all=True)
-    kth = topk(seed_chunks).collect()
-    theta = kth[-1]["score"] if len(kth) >= k else float("-inf")
-
-    # 1e-6 slack absorbs the 6-dp rounding of θ (scores are compared rounded)
-    survivors = sorted(c for c, bound in chunk_bound.items() if bound >= theta - 1e-6)
-    extra = {"seed_chunks": len(seed_chunks)} if collect_metrics else {}
-    return topk(survivors), metrics(theta, total, len(survivors), **extra)
+    def hits(self, field: str, terms: list[str], chunks: list[int] | None = None) -> DataFrame:
+        """(field, term, doc_id, tf) of ``terms`` in ``field``, decoded from
+        the segment rows of ``chunks`` (all when None) only; scoring reads
+        no positions."""
+        seg = self._rows(field, terms)
+        if chunks is not None:
+            seg = seg.where(F.col("chunk").isin(chunks))
+        return decode_segments(seg, with_positions=False)
 
 
 def segment_bm25_topk(
-    spark,
-    store: "SegmentStore | str",
-    terms: list[str],
-    field: str,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
+    spark, store: "SegmentStore | str", terms: list[str], field: str,
+    k: int = 10, k1: float = 1.2, b: float = 0.75,
 ) -> DataFrame:
-    """BM25 top-k served straight from the compressed segment store: the
-    exhaustive case of ``segment_bm25_topk_blockmax`` (every chunk of the
-    query terms is decoded), same reads and same scores.
-
-    ``store`` is an open ``SegmentStore`` or an index directory, which is
-    opened on the spot."""
-    return _segment_topk(SegmentStore.of(spark, store), terms, field, k, k1, b, prune=False)[0]
+    """Exhaustive ``scoring.bm25_topk`` over the segment store ``store``
+    (an open ``SegmentStore``, or an index directory opened on the spot)."""
+    return bm25_topk(SegmentStore.of(spark, store), terms, field, k, k1, b)[0]
 
 
 def segment_bm25_topk_blockmax(
-    spark,
-    store: "SegmentStore | str",
-    terms: list[str],
-    field: str,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    collect_metrics: bool = False,
+    spark, store: "SegmentStore | str", terms: list[str], field: str,
+    k: int = 10, k1: float = 1.2, b: float = 0.75,
 ) -> "tuple[DataFrame, dict]":
-    """WAND-style block-max BM25 served straight from the segment store —
-    the true skip-pointer path (north_star: "skip-pointered posting
-    lists"): whole chunks whose summed upper bound can't reach the top-k
-    threshold are never decoded, and their posting arrays are never read.
-
-    ``store`` is an open ``SegmentStore`` (the engine's, read once at
-    open: segments and doclens tables, stats.json) or an index directory,
-    which is opened on the spot. Per query this reads only the query
-    terms' chunk metadata (term, chunk, df, max_tf) — from the store's
-    driver map under the dictionary-cache cap, else one metadata-only
-    collect — and df per term is the sum over its chunks; ``dictionary/``
-    is not read. Planning then runs no Spark job unless θ must be seeded
-    (one top-k collect over the seed chunks).
-
-    Exactness: chunk = doc_id // span is TERM-INDEPENDENT, so a doc's
-    postings for every query term live in the same chunk id; a doc's
-    score is bounded by sum_t ub(t, chunk) and any doc with final score
-    >= θ therefore lies in a chunk with bound >= θ. θ is seeded with the
-    exact scores of the rarest terms' docs (shortest posting lists). Asserted
-    equal to ``segment_bm25_topk`` in tests. Returns (topk_df, metrics)."""
-    return _segment_topk(
-        SegmentStore.of(spark, store), terms, field, k, k1, b,
-        prune=True, collect_metrics=collect_metrics,
-    )
+    """Block-max ``scoring.bm25_topk(prune=True)`` over the segment store —
+    chunks whose bound cannot reach θ are never decoded; ``store`` as in
+    ``segment_bm25_topk``. Returns (topk_df, metrics)."""
+    return bm25_topk(SegmentStore.of(spark, store), terms, field, k, k1, b, prune=True)

@@ -1,4 +1,4 @@
-"""Scoring: the reference-compat weight fold and BM25.
+"""Scoring: the reference-compat weight fold and the BM25 top-k kernel.
 
 Reference weight semantics (src/SearchEngine.php:296-347, :362-375): per
 doc, iterate matched fields in first-match order; for each field whose
@@ -7,7 +7,19 @@ boost of that group's query terms if at least one of them matched the doc,
 else 0; then +10 if fulltext, then +2 * |distinct matched terms|. Golden
 values 16.0 / 10.0 (tests/Integration/SearchEngineTest.php:121-122).
 
-Everything here is a pure Column expression (whole-stage codegen; no UDFs).
+BM25 is one kernel, ``bm25_topk``, over a posting source: a postings
+table (``PostingsSource`` — the engine's cached postings or a persisted
+``postings/``) or the segment store (``index.segments.SegmentStore``). A
+source is duck-typed: ``spark``; ``stats`` (``n_docs``, ``avgdl`` per
+field); ``doclens``; ``chunk_rows(field, terms)`` -> [(term, chunk, df,
+max_tf)], where a chunk is a term-independent doc-id range; and
+``hits(field, terms, chunks=None)`` -> rows with (term, doc_id, tf).
+Exhaustive scoring ends in TakeOrderedAndProject; ``prune=True`` is the
+WAND-style block-max over chunks; ``bm25_topk_batch`` is the same
+contribution plan for many queries, ranked with a window.
+
+Everything scored in Spark is a pure Column expression (whole-stage
+codegen; no UDFs): ``bm25_score_components`` is the only BM25 formula.
 """
 
 from __future__ import annotations
@@ -75,129 +87,190 @@ def bm25_score_components(
     return idf * tf * F.lit(k1 + 1.0) / denom
 
 
-def bm25_idf(n_docs: int, df_: int) -> float:
-    return math.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5))
+class PostingsSource:
+    """Posting source over a postings table (cached, or a persisted
+    ``postings/``). A chunk is ``doc_id // span``, the span giving ~256
+    chunks whatever the corpus size; chunk rows cost one aggregate
+    collect, so exhaustive scoring never reads them."""
+
+    df_from_chunk_rows = False
+
+    def __init__(self, postings: DataFrame, doclens: DataFrame, stats: dict):
+        self.spark = postings.sparkSession
+        self.postings, self.doclens, self.stats = postings, doclens, stats
+        span = max(64, 1 << (stats["n_docs"] // 256).bit_length())
+        self._chunk = F.floor(F.col("doc_id") / F.lit(span))
+
+    def chunk_rows(self, field: str, terms: list[str]) -> list:
+        return (
+            self.hits(field, terms)
+            .groupBy("term", self._chunk.alias("chunk"))
+            .agg(F.count("*").alias("df"), F.max("tf").alias("max_tf"))
+            .collect()
+        )
+
+    def hits(self, field: str, terms: list[str], chunks: list[int] | None = None) -> DataFrame:
+        hits = self.postings.where((F.col("field") == field) & F.col("term").isin(terms))
+        return hits if chunks is None else hits.where(self._chunk.isin(chunks))
 
 
-def _df_lookup_col(df_by_term: dict[str, int]) -> Column:
-    """term -> df as a literal CASE/map expression (dictionary-sized:
-    only the query's terms)."""
-    mapping = F.create_map(
-        *[x for t, v in sorted(df_by_term.items()) for x in (F.lit(t), F.lit(int(v)))]
+def _chunk_df(rows) -> dict[str, int]:
+    """term -> df: the sum of the term's chunk rows' df."""
+    dfreq: dict[str, int] = {}
+    for t, _, d, _ in rows:
+        dfreq[t] = dfreq.get(t, 0) + d
+    return dfreq
+
+
+def _contributions(
+    source, field: str, terms: list[str], dfreq: dict[str, int] | None,
+    k1: float, b: float, chunks: list[int] | None = None,
+) -> DataFrame:
+    """Per-(term, doc) BM25 contributions of the query terms' hits in
+    ``chunks`` (all when None). df is the literal ``dfreq`` map when
+    non-empty, else one in-plan count per term over the hits: the same
+    values (one posting row per (field, term, doc)) in the same double
+    expression, so scores are bit-identical."""
+    hits = source.hits(field, terms, chunks)
+    if dfreq:
+        lits = [x for t, v in sorted(dfreq.items()) for x in (F.lit(t), F.lit(int(v)))]
+        hits = hits.withColumn("df", F.create_map(*lits)[F.col("term")])
+    else:
+        # no driver df (over the dictionary-cache cap), or an empty map:
+        # untypable (map()[term]), and no query term is in this field
+        hits = hits.join(F.broadcast(hits.groupBy("term").agg(F.count("*").alias("df"))), "term")
+    n_docs, avgdl = source.stats["n_docs"], source.stats["avgdl"].get(field, 1.0)
+    return hits.join(
+        source.doclens.where(F.col("field") == field).select("doc_id", "dl"), "doc_id"
+    ).withColumn(
+        "contrib",
+        bm25_score_components(
+            F.col("tf").cast("double"), F.col("df").cast("double"),
+            F.col("dl").cast("double"), n_docs, avgdl, k1, b,
+        ),
     )
-    return mapping[F.col("term")]
 
 
 def bm25_topk(
-    postings: DataFrame,
-    doclens: DataFrame,
+    source,
     terms: list[str],
     field: str,
-    n_docs: int,
-    avgdl: float,
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
+    prune: bool = False,
     df_by_term: dict[str, int] | None = None,
-) -> DataFrame:
-    """Disjunctive (OR) BM25 top-k over one field.
+) -> tuple[DataFrame, dict]:
+    """Disjunctive (OR) BM25 top-k of ``terms`` over one field of
+    ``source``; returns (topk_df, metrics). Exhaustive scoring is one hash
+    aggregate and a TakeOrderedAndProject (score desc, doc_id asc). df per
+    term sums its chunk rows when those are read (pruning, or a source
+    with ``df_from_chunk_rows``), else comes from ``df_by_term`` (e.g. the
+    engine's driver dictionary cache) or one in-plan count.
 
-    Plan shape: postings filtered to |terms| dictionary keys (parquet
-    min/max skipping prunes segments), df stats attached, one hash
-    aggregate, then TakeOrderedAndProject for the global top-k — no full
-    sort. Deterministic tie-break (score desc, doc_id asc).
+    ``prune=True`` is block-max over chunks: a chunk is a term-independent
+    doc-id range, so a doc scores at most sum_t ub(t, chunk) with ub =
+    idf·max_tf·(k1+1)/(max_tf + k1(1−b)). θ is the k-th exact score over
+    the rarest terms' chunks, and only chunks bounded at or above θ are
+    scored — the exhaustive top-k (asserted in tests). ``metrics`` are
+    driver-side counts (theta, chunks_total, chunks_decoded,
+    chunk_skip_fraction, and the shortcut taken or seed_chunks); empty
+    when no chunk rows were read."""
+    terms = list(dict.fromkeys(str(t) for t in terms))
 
-    ``df_by_term`` (term -> document frequency for ``field``, e.g. from
-    the engine's driver-side dictionary cache) replaces the per-query
-    dfreq aggregation with a literal lookup — one less shuffle + one less
-    broadcast per query; the JVM arithmetic is identical (df enters the
-    same expression as a double), so scores are bit-identical."""
-    hits = postings.where(
-        (F.col("field") == field) & F.col("term").isin([str(t) for t in terms])
-    )
-    if df_by_term:
-        # non-empty only: an empty map is untypable (map()[term]), and
-        # means no query term exists in this field — the fallback dfreq
-        # aggregation over the (empty) hits is free
-        scored = hits.withColumn("df", _df_lookup_col(df_by_term))
-    else:
-        dfreq = hits.groupBy("term").agg(F.count("*").alias("df"))
-        scored = hits.join(F.broadcast(dfreq), "term")
-    scored = (
-        scored
-        .join(doclens.where(F.col("field") == field).select("doc_id", "dl"), "doc_id")
-        .withColumn(
-            "contrib",
-            bm25_score_components(
-                F.col("tf").cast("double"),
-                F.col("df").cast("double"),
-                F.col("dl").cast("double"),
-                n_docs,
-                avgdl,
-                k1,
-                b,
-            ),
+    def topk(dfreq: dict[str, int] | None, chunks: list[int] | None = None) -> DataFrame:
+        scored = (
+            _contributions(source, field, terms, dfreq, k1, b, chunks)
+            .groupBy("doc_id")
+            .agg(F.round(F.sum("contrib"), 6).alias("score"))
         )
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("contrib"), 6).alias("score"))
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    if not prune and not source.df_from_chunk_rows:
+        return topk(df_by_term), {}
+    rows = source.chunk_rows(field, terms)
+
+    def metrics(theta: float, total: int, decoded: int, **extra) -> dict:
+        skip = round(1.0 - decoded / total, 4) if total else 0.0
+        return {"theta": theta, "chunks_total": total, "chunks_decoded": decoded,
+                "chunk_skip_fraction": skip, **extra}
+
+    if not rows:
+        empty = source.spark.createDataFrame([], "doc_id long, score double")
+        return empty, metrics(float("-inf"), 0, 0)
+    dfreq = _chunk_df(rows)
+    if not prune:
+        return topk(dfreq), {}
+    n_docs = source.stats["n_docs"]
+    idf = {t: math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)) for t, d in dfreq.items()}
+    chunk_bound: dict[int, float] = {}
+    terms_per_chunk: dict[int, set] = {}
+    for t, c, _, m in rows:
+        ub = idf[t] * m * (k1 + 1.0) / (m + k1 * (1.0 - b))
+        chunk_bound[c] = chunk_bound.get(c, 0.0) + ub
+        terms_per_chunk.setdefault(c, set()).add(t)
+    total = len(chunk_bound)
+
+    # quick reject (all-hot queries): when EVERY chunk holds EVERY query
+    # term, bound-based skipping can at best shave tf variance while the
+    # θ-seeding pass decodes its seed chunks twice — measured 2x slower
+    # than exhaustive at 1.5M docs (BENCH.md crossover, 'function return
+    # class'). Score everything in one pass instead; identical top-k.
+    if all(len(s) == len(dfreq) for s in terms_per_chunk.values()):
+        return topk(dfreq), metrics(float("-inf"), total, total, quick_reject=True)
+
+    # θ seed: rarest terms (ascending global df) until the seed can fill k
+    seed_terms: set[str] = set()
+    cum = 0
+    for t in sorted(dfreq, key=lambda t: (dfreq[t], t)):
+        seed_terms.add(t)
+        cum += dfreq[t]
+        if cum >= k:
+            break
+    seed_chunks = sorted({c for t, c, _, _ in rows if t in seed_terms})
+    if len(seed_chunks) == total:
+        # the θ-seed already touches every chunk (typical for a needle
+        # term paired with spread terms on an unclustered layout): its
+        # exact scores ARE the exhaustive result — skip the bound and
+        # survivor passes outright
+        return topk(dfreq), metrics(float("-inf"), total, total, seed_covered_all=True)
+    kth = topk(dfreq, seed_chunks).collect()
+    theta = kth[-1]["score"] if len(kth) >= k else float("-inf")
+
+    # 1e-6 slack absorbs the 6-dp rounding of θ (scores are compared rounded)
+    survivors = sorted(c for c, bound in chunk_bound.items() if bound >= theta - 1e-6)
+    return topk(dfreq, survivors), metrics(
+        theta, total, len(survivors), seed_chunks=len(seed_chunks)
     )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def bm25_topk_batch(
-    postings: DataFrame,
-    doclens: DataFrame,
+    source,
     queries: dict[str, list[str]],
     field: str,
-    n_docs: int,
-    avgdl: float,
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
     df_by_term: dict[str, int] | None = None,
 ) -> DataFrame:
-    """BM25 top-k for a BATCH of queries in one plan.
-
-    Per-query Spark jobs pay fixed scheduling latency; a query batch joins
-    all (query_id, term) pairs against the postings once and ranks per
-    query with a window — total cost ~= one query's job for the whole
-    batch. Returns (query_id, doc_id, score, rank). ``df_by_term``: see
-    :func:`bm25_topk` (skips the batch's dfreq aggregation)."""
-    spark = postings.sparkSession
-    # set semantics per query: a repeated term must contribute once (same as
-    # the single-query path, where `isin` dedups), so dedupe the pairs
+    """BM25 top-k for a BATCH of queries in one plan: the kernel's
+    contributions over the union of the batch's terms, joined to the
+    (query_id, term) pairs and ranked per query with a window — one job
+    for the whole batch. Returns (query_id, doc_id, score, rank); df as
+    in the exhaustive :func:`bm25_topk`."""
+    # set semantics per query: a repeated term must contribute once (same
+    # as the single-query kernel, which dedups its terms)
     pairs = sorted({(qid, str(t)) for qid, ts in queries.items() for t in ts})
     if not pairs:
-        return spark.createDataFrame(
+        return source.spark.createDataFrame(
             [], "query_id string, doc_id long, score double, rank int"
         )
-    qdf = spark.createDataFrame(pairs, "query_id string, term string")
-    hits = postings.where(F.col("field") == field).join(
-        F.broadcast(qdf.select("term").distinct()), "term"
-    )
-    if df_by_term:
-        # non-empty only: an empty map is untypable (map()[term]), and
-        # means no query term exists in this field — the fallback dfreq
-        # aggregation over the (empty) hits is free
-        scored = hits.withColumn("df", _df_lookup_col(df_by_term))
-    else:
-        dfreq = hits.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-        scored = hits.join(F.broadcast(dfreq), "term")
+    terms = sorted({t for _, t in pairs})
+    if source.df_from_chunk_rows:
+        df_by_term = _chunk_df(source.chunk_rows(field, terms))
+    qdf = source.spark.createDataFrame(pairs, "query_id string, term string")
     scored = (
-        scored
-        .join(doclens.where(F.col("field") == field).select("doc_id", "dl"), "doc_id")
-        .withColumn(
-            "contrib",
-            bm25_score_components(
-                F.col("tf").cast("double"),
-                F.col("df").cast("double"),
-                F.col("dl").cast("double"),
-                n_docs,
-                avgdl,
-                k1,
-                b,
-            ),
-        )
+        _contributions(source, field, terms, df_by_term, k1, b)
         .join(F.broadcast(qdf), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
@@ -208,166 +281,3 @@ def bm25_topk_batch(
         .where(F.col("rank") <= k)
         .select("query_id", "doc_id", "score", "rank")
     )
-
-
-def bm25_topk_blockmax(
-    postings: DataFrame,
-    doclens: DataFrame,
-    terms: list[str],
-    field: str,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    chunk_span: int | None = None,
-    collect_metrics: bool = False,
-) -> tuple[DataFrame, dict]:
-    """Block-max pruned BM25 top-k — the WAND-style scale path.
-
-    Exact (provably same top-k as ``bm25_topk``; asserted in tests):
-    1. Collect the tiny (term, chunk) statistics table (≤ n_terms·~256
-       rows) and compute per-chunk upper bounds
-       idf·max_tf·(k1+1)/(max_tf+k1(1−b)) — valid since the BM25
-       tf-saturation term is increasing in tf and decreasing in dl.
-    2. Seed a threshold θ with the exact scores of docs in the few
-       HIGHEST-BOUND chunks (descending bound until the chunks provably
-       hold ≥ k docs) — bounded seed cost even when a query mixes a
-       needle term with corpus-wide hot terms.
-    3. Bound every other doc by its per-(term, chunk) block-max sum;
-       docs bounded below θ cannot enter the top-k and are never
-       exactly scored. Exact-score survivors, merge, take top-k.
-
-    At 100TB the win is step 3: the bound join touches only postings +
-    broadcast chunk stats, and the expensive doclen join + per-doc exact
-    scoring runs on the pruned survivor set. Returns (topk_df, metrics).
-    """
-    terms = [str(t) for t in terms]
-    if chunk_span is None:
-        # ~256 doc-id-range blocks regardless of corpus size: one global
-        # block (the old fixed 2^20 default at < 1M docs) makes the bound
-        # the global max and prunes nothing
-        chunk_span = max(64, 1 << max(0, (n_docs // 256)).bit_length())
-    hits = postings.where(
-        (F.col("field") == field) & F.col("term").isin(terms)
-    ).withColumn("chunk", F.floor(F.col("doc_id") / F.lit(chunk_span)))
-    hits = hits.cache()
-    dl = doclens.where(F.col("field") == field).select("doc_id", "dl")
-
-    stat_rows = hits.groupBy("term", "chunk").agg(
-        F.max("tf").alias("max_tf"), F.count("*").alias("cdf")
-    ).collect()
-    if not stat_rows:
-        empty = postings.sparkSession.createDataFrame([], "doc_id long, score double")
-        metrics = {"theta": float("-inf")}
-        if collect_metrics:
-            metrics.update(candidates=0, scored=0, pruned_fraction=0.0)
-        return empty, metrics
-    dfreq: dict[str, int] = {}
-    for r in stat_rows:
-        dfreq[r["term"]] = dfreq.get(r["term"], 0) + r["cdf"]
-    idf = {t: bm25_idf(n_docs, dfreq[t]) for t in dfreq}
-
-    def exact_scores(cand_hits: DataFrame) -> DataFrame:
-        idf_col = F.create_map(
-            *[x for t, v in idf.items() for x in (F.lit(t), F.lit(v))]
-        )
-        return (
-            cand_hits.join(dl, "doc_id")
-            .withColumn(
-                "contrib",
-                idf_col[F.col("term")]
-                * F.col("tf")
-                * F.lit(k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(float(avgdl)))
-                ),
-            )
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("contrib"), 6).alias("score"))
-        )
-
-    # per-(term, chunk) upper bounds, driver-side on the tiny stats table
-    ub_rows = [
-        (
-            r["term"],
-            r["chunk"],
-            float(
-                idf[r["term"]]
-                * r["max_tf"]
-                * (k1 + 1.0)
-                / (r["max_tf"] + k1 * (1.0 - b))
-            ),
-        )
-        for r in stat_rows
-    ]
-    spark = postings.sparkSession
-    chunk_stats = spark.createDataFrame(
-        ub_rows, "term string, chunk long, ub double"
-    )
-    # doc-level bounds: one agg over the term-filtered postings — no
-    # doclen join, no exact scoring
-    bounded_all = (
-        hits.join(F.broadcast(chunk_stats), ["term", "chunk"])
-        .groupBy("doc_id")
-        .agg(F.sum("ub").alias("bound"))
-        .cache()
-    )
-
-    # 2. seed θ: exact-score the top-4k docs BY BOUND (bound-ordered
-    # probing — the docs most likely to set a high threshold, at a cost
-    # independent of any term's document frequency)
-    seed_ids = [
-        (r["doc_id"],)
-        for r in bounded_all.orderBy(F.desc("bound"), F.asc("doc_id"))
-        .limit(4 * k)
-        .collect()
-    ]
-    # broadcast-join the seed frame rather than embedding up to 4k doc_id
-    # literals in the plan twice (isin over thousands of literals bloats
-    # the plan and re-parses per use)
-    seed_df = spark.createDataFrame(seed_ids, "doc_id long")
-    seed_scores = exact_scores(
-        hits.join(F.broadcast(seed_df), "doc_id", "left_semi")
-    ).cache()
-    kth = (
-        seed_scores.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-    theta = kth[-1]["score"] if len(kth) >= k else float("-inf")
-
-    # 3. survivors: unscored docs whose bound clears θ
-    bounded = bounded_all.join(F.broadcast(seed_df), "doc_id", "left_anti")
-    # 1e-6 slack absorbs the 6-dp rounding of θ (scores are compared rounded)
-    survivors = bounded.where(F.col("bound") >= theta - 1e-6).select("doc_id")
-
-    metrics = {"theta": theta}
-    if collect_metrics:
-        # two extra actions — diagnostics only, keep them out of the hot path
-        n_cands = bounded.count()
-        n_surv = survivors.count()
-        metrics.update(
-            candidates=n_cands,
-            scored=n_surv,
-            pruned_fraction=round(1.0 - n_surv / max(n_cands, 1), 4),
-        )
-
-    survivor_scores = exact_scores(
-        hits.join(survivors, "doc_id", "left_semi")
-    )
-    topk = (
-        seed_scores.unionByName(survivor_scores)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    # the plan is already eager (θ needs a collect), so materialize the ≤k
-    # result rows and release the caches — no cache leak across queries
-    rows = topk.collect()
-    out = postings.sparkSession.createDataFrame(rows, topk.schema)
-    hits.unpersist()
-    bounded_all.unpersist()
-    seed_scores.unpersist()
-    return out, metrics

@@ -6,7 +6,7 @@ strategies on the ZIPF variant of the synthetic code corpus (input_hint
 shape, realistic term-frequency skew — pruning is distribution-
 dependent and a uniform-vocabulary corpus has nothing for ANY top-k
 algorithm to prune), asserts the top-k are IDENTICAL, and reports
-per-query times + pruned fractions. Appends a section to BENCH.md.
+per-query times + skipped-chunk fractions. Appends a section to BENCH.md.
 
 Usage: python scripts/blockmax_bench.py [n_docs] [k]   # default 400_000, 10
 """
@@ -51,7 +51,7 @@ def main() -> None:
     from phphinder_spark.engine import SparkSearchEngine
     from phphinder_spark.index.builder import assign_doc_ids
     from phphinder_spark.schema import code_schema
-    from phphinder_spark.scoring import bm25_topk_blockmax
+    from phphinder_spark.scoring import PostingsSource, bm25_topk
 
     @F.pandas_udf("int")
     def _warm(s: pd.Series) -> pd.Series:
@@ -91,10 +91,9 @@ def main() -> None:
         assert ex == bm, f"top-k mismatch for {q!r}: {ex} vs {bm}"
         # pruning diagnostics (untimed extra run)
         terms = [t for t, _ in eng.schema.analyzer.analyze(q)]
-        _, metrics = bm25_topk_blockmax(
-            eng.index.postings, eng.index.doclens, terms, "content",
-            stats["n_docs"], stats["avgdl"]["content"], k,
-            collect_metrics=True,
+        _, metrics = bm25_topk(
+            PostingsSource(eng.index.postings, eng.index.doclens, stats),
+            terms, "content", k, prune=True,
         )
         rows_out.append(
             {
@@ -102,7 +101,7 @@ def main() -> None:
                 "exhaustive_sec": round(t_ex, 2),
                 "blockmax_sec": round(t_bm, 2),
                 "speedup": round(t_ex / max(t_bm, 1e-9), 2),
-                "pruned_fraction": metrics.get("pruned_fraction"),
+                "chunk_skip_fraction": metrics.get("chunk_skip_fraction"),
                 "identical_topk": True,
             }
         )
@@ -171,13 +170,13 @@ def main() -> None:
         fh.write(
             f"\n### block-max vs exhaustive BM25 (n_docs={n_docs}, k={k}, "
             "local[32])\n\n"
-            "| query | exhaustive (s) | blockmax (s) | speedup | pruned | identical top-k |\n"
+            "| query | exhaustive (s) | blockmax (s) | speedup | chunks skipped | identical top-k |\n"
             "|---|---|---|---|---|---|\n"
         )
         for r in rows_out:
             fh.write(
                 f"| {r['query']} | {r['exhaustive_sec']} | {r['blockmax_sec']} "
-                f"| {r['speedup']}x | {r['pruned_fraction']} | yes |\n"
+                f"| {r['speedup']}x | {r['chunk_skip_fraction']} | yes |\n"
             )
         fh.write(
             "\nSegment-served (decode cost is real — pruning skips posting "

@@ -9,9 +9,9 @@ Setup where the pruning is REAL work skipped, not just expression time:
   only chunks whose bound clears θ — chunks of OTHER topics contain only
   the hot terms and are skipped wholesale.
 
-Also reports the in-memory stage split: the scoring stage alone
-(candidates vs survivors), isolating the data-dependent work from the
-fixed per-query job count that dominates local-mode wall-clock.
+Also reports the in-memory split: the doc-id chunks the kernel scores
+out of all chunks of the query terms, isolating the data-dependent work
+from the fixed per-query job count that dominates local-mode wall-clock.
 
 Appends results to BENCH.md. Usage:
     python scripts/blockmax_crossover.py [n_docs] [k]   # default 1_500_000, 10
@@ -64,7 +64,7 @@ def main() -> None:
         write_segments,
     )
     from phphinder_spark.schema import code_schema
-    from phphinder_spark.scoring import bm25_topk, bm25_topk_blockmax
+    from phphinder_spark.scoring import PostingsSource, bm25_topk
 
     t0 = time.time()
     corpus = generate_code_corpus(
@@ -142,23 +142,19 @@ def main() -> None:
         )
         print(json.dumps(seg_rows[-1]), flush=True)
 
-    # ---- in-memory wall-clock + scoring-stage split
+    # ---- in-memory wall-clock + scored-chunk split
+    source = PostingsSource(postings, doclens, {"n_docs": n_docs, "avgdl": {"content": avgdl}})
     mem_rows = []
     for q in QUERIES:
         terms = analyzer_terms(q)
         t = time.time()
         ex = [
             (r["doc_id"], r["score"])
-            for r in bm25_topk(
-                postings, doclens, terms, "content", n_docs, avgdl, k
-            ).collect()
+            for r in bm25_topk(source, terms, "content", k)[0].collect()
         ]
         t_ex = time.time() - t
         t = time.time()
-        topk, m = bm25_topk_blockmax(
-            postings, doclens, terms, "content", n_docs, avgdl, k,
-            collect_metrics=True,
-        )
+        topk, m = bm25_topk(source, terms, "content", k, prune=True)
         bm = [(r["doc_id"], r["score"]) for r in topk.collect()]
         t_bm = time.time() - t
         assert ex == bm, f"in-memory top-k mismatch for {q!r}"
@@ -168,9 +164,9 @@ def main() -> None:
                 "exhaustive_sec": round(t_ex, 2),
                 "blockmax_sec": round(t_bm, 2),
                 "speedup": round(t_ex / max(t_bm, 1e-9), 2),
-                "candidates": m.get("candidates"),
-                "scored": m.get("scored"),
-                "pruned_fraction": m.get("pruned_fraction"),
+                "chunks_total": m.get("chunks_total"),
+                "chunks_decoded": m.get("chunks_decoded"),
+                "chunk_skip_fraction": m.get("chunk_skip_fraction"),
             }
         )
         print(json.dumps(mem_rows[-1]), flush=True)
@@ -193,17 +189,17 @@ def main() -> None:
                 f"{r['chunk_skip_fraction']} |\n"
             )
         fh.write(
-            "\nIn-memory (scoring-stage split: `scored`/`candidates` is the "
+            "\nIn-memory (chunk split: `scored`/`chunks` is the "
             "data-dependent work ratio; the fixed extra jobs are the "
             "local-mode floor):\n\n"
-            "| query | exhaustive (s) | blockmax (s) | speedup | candidates | scored | pruned |\n"
+            "| query | exhaustive (s) | blockmax (s) | speedup | chunks | scored | skipped |\n"
             "|---|---|---|---|---|---|---|\n"
         )
         for r in mem_rows:
             fh.write(
                 f"| {r['query']} | {r['exhaustive_sec']} | {r['blockmax_sec']} | "
-                f"{r['speedup']}x | {r['candidates']} | {r['scored']} | "
-                f"{r['pruned_fraction']} |\n"
+                f"{r['speedup']}x | {r['chunks_total']} | {r['chunks_decoded']} | "
+                f"{r['chunk_skip_fraction']} |\n"
             )
     speedups = sorted(r["speedup"] for r in seg_rows)
     summary = {

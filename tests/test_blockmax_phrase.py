@@ -1,4 +1,5 @@
-"""Block-max pruned BM25 must equal the TakeOrderedAndProject oracle;
+"""Block-max pruned BM25 (the kernel's chunk-level pruning over the
+in-memory postings) must equal the TakeOrderedAndProject oracle;
 positional phrase candidates must agree with brute-force token alignment
 and verified phrase results with the substring semantics."""
 
@@ -12,7 +13,7 @@ from phphinder_spark.engine import SparkSearchEngine
 from phphinder_spark.index.builder import assign_doc_ids
 from phphinder_spark.index.phrase import phrase_candidates, phrase_match
 from phphinder_spark.schema import code_schema
-from phphinder_spark.scoring import bm25_topk, bm25_topk_blockmax
+from phphinder_spark.scoring import PostingsSource, bm25_topk
 
 N_DOCS = 2000
 
@@ -26,31 +27,30 @@ def eng(spark):
     return e
 
 
+def memory_source(eng):
+    return PostingsSource(eng.index.postings, eng.index.doclens, eng.index.stats())
+
+
 @pytest.mark.parametrize(
     "query",
     ["function return", "varint delta merge", "needle_100 segment", "broadcast"],
 )
 def test_blockmax_equals_bruteforce_topk(eng, query):
-    stats = eng.index.stats()
     terms = [str(t) for t, _ in eng.schema.analyzer.analyze(query)]
-    brute = bm25_topk(
-        eng.index.postings, eng.index.doclens, terms, "content",
-        stats["n_docs"], stats["avgdl"]["content"], k=10,
-    )
-    pruned, metrics = bm25_topk_blockmax(
-        eng.index.postings, eng.index.doclens, terms, "content",
-        stats["n_docs"], stats["avgdl"]["content"], k=10, chunk_span=256,
-        collect_metrics=True,
-    )
+    brute, _ = bm25_topk(memory_source(eng), terms, "content", k=10)
+    pruned, metrics = bm25_topk(memory_source(eng), terms, "content", k=10, prune=True)
     assert [(r["doc_id"], r["score"]) for r in pruned.collect()] == [
         (r["doc_id"], r["score"]) for r in brute.collect()
     ]
-    assert metrics["candidates"] >= 0
+    assert metrics["chunks_total"] > 0
 
 
 def test_blockmax_prunes_skewed_postings(spark):
     """Skewed store (Zipf-like tf): the top-k all carry both query terms
-    with high tf; single-term low-tf docs bound below θ and are pruned."""
+    with high tf. Both terms sit in every doc-id chunk (span 64 at 2000
+    docs -> 32 chunks; "beta" is in every 7th doc), so no chunk bound can
+    fall below θ: the kernel quick-rejects and scores every chunk in one
+    pass, with the exhaustive top-k."""
     rows = []
     for d in range(2000):
         # every doc has "alpha" tf 1; docs 0..19 additionally "beta" tf 6
@@ -66,15 +66,14 @@ def test_blockmax_prunes_skewed_postings(spark):
         rows, "field string, term string, doc_id long, tf long, positions array<int>"
     )
     doclens = postings.groupBy("doc_id", "field").agg(F.sum("tf").alias("dl"))
-    pruned, metrics = bm25_topk_blockmax(
-        postings, doclens, ["alpha", "beta"], "content", 2000, 2.0,
-        k=5, chunk_span=64, collect_metrics=True,
-    )
-    brute = bm25_topk(postings, doclens, ["alpha", "beta"], "content", 2000, 2.0, k=5)
+    source = PostingsSource(postings, doclens, {"n_docs": 2000, "avgdl": {"content": 2.0}})
+    pruned, metrics = bm25_topk(source, ["alpha", "beta"], "content", k=5, prune=True)
+    brute, _ = bm25_topk(source, ["alpha", "beta"], "content", k=5)
     assert [(r["doc_id"], r["score"]) for r in pruned.collect()] == [
         (r["doc_id"], r["score"]) for r in brute.collect()
     ]
-    assert metrics["pruned_fraction"] > 0.5, metrics
+    assert metrics["quick_reject"] is True, metrics
+    assert metrics["chunks_total"] == metrics["chunks_decoded"] == 32, metrics
 
 
 def test_phrase_candidates_bruteforce(spark, eng):

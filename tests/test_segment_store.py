@@ -6,7 +6,9 @@ chunk bounds from the store's chunk metadata — a driver map under the
 dictionary-cache cap, one metadata-only collect above it — and never read
 ``dictionary/``. These tests pin the equivalences that make that safe and
 the Spark job counts it buys (counted with job groups and
-``statusTracker()``; no action is ever run to count)."""
+``statusTracker()``; no action is ever run to count) — and the same job
+counts and df equivalence for the memory engine's BM25, which runs the
+same kernel over its postings."""
 
 import contextlib
 import io
@@ -29,6 +31,7 @@ from phphinder_spark.index.segments import (
     segment_bm25_topk_blockmax,
 )
 from phphinder_spark.schema import IS_FULLTEXT, IS_INDEXED, IS_STORED, SearchSchema, code_schema
+from phphinder_spark.scoring import PostingsSource, bm25_topk
 
 N_DOCS = 300
 # (BM25 query, k) over the fixture: two df-1 identifiers plus a hot term
@@ -271,6 +274,84 @@ def test_persisted_postings_bm25_reads_doclens_artifact(spark, tmp_path):
         for q in ["varint delta", "merge return"]
     ]
     assert runs[1][0] + runs[1][1] <= runs[0][0] + runs[0][1]
+
+
+# ------------------------------------------------------------ memory BM25
+
+
+def test_memory_bm25_warm_exhaustive_job_count(spark, memory_engine):
+    """Warm memory exhaustive BM25 (df from the driver dictionary cache)
+    plans with no Spark job and runs in at most two."""
+    memory_engine.search_topk_bm25("function", k=8, field="content").collect()
+    n_plan, n_run, rows = planned_and_run(
+        spark, lambda: memory_engine.search_topk_bm25("varint delta merge", k=8, field="content")
+    )
+    assert n_plan == 0
+    assert n_run <= 2
+    assert rows
+
+
+def test_memory_bm25_warm_blockmax_job_count(spark, memory_engine):
+    """Warm memory block-max BM25 on a θ-pruned query: one chunk-row
+    collect plus the θ-seed top-k while planning (<= 3 jobs, the seed's
+    doclens broadcast included), <= 2 at collect."""
+    terms = ["ident_1", "ident_1003", "function"]
+    source = PostingsSource(
+        memory_engine.index.postings, memory_engine.index.doclens, memory_engine.index.stats()
+    )
+    _, metrics = bm25_topk(source, terms, "content", k=2, prune=True)
+    assert metrics["theta"] > float("-inf")  # this query really seeds θ
+    assert metrics["chunks_decoded"] < metrics["chunks_total"]
+    memory_engine.search_topk_bm25("function", k=8, field="content").collect()
+    n_plan, n_run, rows = planned_and_run(
+        spark,
+        lambda: memory_engine.search_topk_bm25(
+            " ".join(terms), k=2, field="content", strategy="blockmax"
+        ),
+    )
+    assert n_plan <= 3
+    assert n_run <= 2
+    assert rows == topk(memory_engine.search_topk_bm25(" ".join(terms), k=2, field="content"))
+
+
+def test_memory_bm25_many_warm_job_count(spark, memory_engine):
+    """The warm batch plans with no Spark job and runs in at most three
+    (the (query_id, term) broadcast, the doclens broadcast, the ranking)."""
+    phrases = ["varint delta merge", "function return", "needle_100"]
+    memory_engine.search_topk_bm25_many(phrases, k=5, field="content").collect()
+    with job_group(spark) as planning:
+        df = memory_engine.search_topk_bm25_many(phrases, k=5, field="content")
+        n_plan = planning()
+    with job_group(spark) as running:
+        assert df.collect()
+        n_run = running()
+    assert n_plan == 0
+    assert n_run <= 3
+
+
+@pytest.mark.parametrize("batch", [False, True], ids=["single", "batch"])
+def test_memory_bm25_identical_over_dictionary_cache_cap(spark, memory_engine, monkeypatch, batch):
+    """df from the driver dictionary cache (a literal map) and, over the
+    cache cap, from the in-plan count per term give bit-identical scores."""
+    queries = [q for q, _ in QUERIES]
+
+    def run():
+        if batch:
+            return sorted(
+                tuple(r) for r in memory_engine.search_topk_bm25_many(
+                    queries, k=8, field="content").collect()
+            )
+        return [topk(memory_engine.search_topk_bm25(q, k=8, field="content")) for q in queries]
+
+    cached = run()
+    assert memory_engine._term_field_cache() is not None
+    monkeypatch.setattr(engine_mod, "_DICT_DRIVER_CACHE_MAX", 0)
+    monkeypatch.setattr(memory_engine, "_tf_cache", None)
+    monkeypatch.setattr(memory_engine, "_tf_cache_tried", False)
+    over_cap = run()
+    assert memory_engine._term_field_cache() is None
+    assert over_cap == cached
+    assert any(cached)
 
 
 # ------------------------------------------------------------ plan shape

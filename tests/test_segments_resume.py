@@ -378,9 +378,12 @@ def test_segment_blockmax_quick_rejects_all_hot_queries(spark, tmp_path):
     ]
 
 
-def test_segment_blockmax_skips_chunks(spark, tmp_path):
-    """Handcrafted skewed store: the high-scoring docs live in one chunk;
-    every other chunk's bound falls below θ and is never decoded."""
+@pytest.mark.parametrize("source", ["segments", "postings"])
+def test_segment_blockmax_skips_chunks(spark, tmp_path, source):
+    """Handcrafted skewed postings: the high-scoring docs live in one
+    chunk; every other chunk's bound falls below θ and is never scored —
+    from the segment store (chunk span 32: 10 chunks) and from the
+    postings table (the memory span rule gives 64 at 320 docs: 5 chunks)."""
     import json as _json
     import os
 
@@ -390,6 +393,7 @@ def test_segment_blockmax_skips_chunks(spark, tmp_path):
         segment_bm25_topk_blockmax,
         write_segments,
     )
+    from phphinder_spark.scoring import PostingsSource, bm25_topk
 
     # 320 docs, chunk_span 32 -> 10 chunks. "jackpot" only in docs 0..31
     # (chunk 0) with tf 8; "filler" in every doc with tf 1.
@@ -413,16 +417,26 @@ def test_segment_blockmax_skips_chunks(spark, tmp_path):
     with open(os.path.join(out, "stats.json"), "w") as fh:
         _json.dump({"n_docs": 320, "avgdl": {"content": 1.8}}, fh)
 
-    cold = segment_bm25_topk(spark, out, ["jackpot", "filler"], "content", k=8).collect()
-    pruned, m = segment_bm25_topk_blockmax(
-        spark, out, ["jackpot", "filler"], "content", k=8
-    )
+    terms = ["jackpot", "filler"]
+    if source == "segments":
+        cold = segment_bm25_topk(spark, out, terms, "content", k=8).collect()
+        pruned, m = segment_bm25_topk_blockmax(spark, out, terms, "content", k=8)
+    else:
+        src = PostingsSource(
+            postings, spark.read.parquet(os.path.join(out, "doclens")),
+            {"n_docs": 320, "avgdl": {"content": 1.8}},
+        )
+        cold = bm25_topk(src, terms, "content", k=8)[0].collect()
+        pruned, m = bm25_topk(src, terms, "content", k=8, prune=True)
     assert [(r["doc_id"], r["score"]) for r in pruned.collect()] == [
         (r["doc_id"], r["score"]) for r in cold
     ]
-    assert m["chunks_total"] == 10
     assert m["chunks_decoded"] == 1
-    assert m["chunk_skip_fraction"] == 0.9
+    if source == "segments":
+        assert m["chunks_total"] == 10
+        assert m["chunk_skip_fraction"] == 0.9
+    else:
+        assert m["chunks_total"] == 5
 
 
 def test_clustered_ids_make_chunk_skip_effective(spark, tmp_path):
