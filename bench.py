@@ -60,8 +60,8 @@ def main() -> None:
     t_postings = time.time() - t2
     # first-query warmup, accounted to BUILD (round-4 verdict #6): one
     # term-shaped and one typo-shaped search pay the per-session costs —
-    # whole-stage-codegen compile, python<->jvm warm paths, the typo
-    # dictionary count/cache for the 'auto' gate — so the per-query
+    # whole-stage-codegen compile, python<->jvm warm paths, the driver
+    # dictionary count/collect that picks the typo regime — so the per-query
     # timings below measure query cost, not session warmup. Warmup terms
     # deliberately differ from every timed query's terms.
     t3 = time.time()

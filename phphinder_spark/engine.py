@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
 from phphinder_spark.functions.typo import levenshtein_distance_for_term
 from phphinder_spark.index import segments
-from phphinder_spark.index.builder import InvertedIndex, build_index, build_postings
+from phphinder_spark.index.builder import (
+    SHADOW_SUFFIX,
+    InvertedIndex,
+    build_index,
+    build_postings,
+)
 from phphinder_spark.index.segments import SegmentStore, decode_segments
 from phphinder_spark.query import (
     AndQuery,
@@ -50,19 +55,23 @@ from phphinder_spark.scoring import (
 
 _MATCH_SCHEMA = "doc_id long, qvalue string, field string, seq long"
 
-# typo_strategy='auto' crossover: below this many dictionary terms the
-# length-banded full-dictionary Levenshtein scan beats the bigram probe
-# (measured: 30k terms -> scan 2.1 s vs ngram 3.0 s at sf0.1; the probe's
-# extra join job dominates until the linear scan term catches up)
+# Typo regime boundary: under this many driver dictionary rows the typo
+# candidates come from the banded DP on the driver, else from the bigram
+# index probe. The DP is pure Python and linear in the dictionary
+# (measured per typo query, synthetic terms, one run each: 0.16 s at 30k
+# terms, 1.2 s at 150k, 2.5 s at 500k, 9.2 s at 2M), so it must not
+# widen to the cache cap.
 _TYPO_AUTO_DICT_THRESHOLD = 150_000
 
+# More driver typo candidates than this go through the candidate
+# broadcast join instead of one postings IN-list literal.
+_TYPO_INLIST_MAX = 1024
+
 # Driver-side term->fields dictionary cache cap: under this many (field,
-# term) dictionary rows the existence prefetch is answered from a local
-# dict (ZERO Spark jobs per query — the batched prefetch collect was the
-# last structural per-query driver round-trip in memory-mode serving);
-# above it, fall back to the batched probe job. ~30k rows at sf0.1;
-# 2M rows is ~a few hundred MB of driver strings — dictionary-sized,
-# the same artifact segment-serving persists to parquet.
+# term) dictionary rows (segment serving: segment rows) the existence
+# prefetch is answered from a local dict (ZERO Spark jobs per query);
+# above it, fall back to the batched probe job. ~30k rows at sf0.1; 2M
+# rows is ~a few hundred MB of driver strings.
 _DICT_DRIVER_CACHE_MAX = 2_000_000
 
 # Recommended session conf for INTERACTIVE point-query serving (sub-second
@@ -166,7 +175,6 @@ class SparkSearchEngine:
         self,
         spark: SparkSession,
         schema: SearchSchema,
-        typo_strategy: str = "auto",
         storage=None,
         phrase_strategy: str = "auto",
     ):
@@ -174,12 +182,6 @@ class SparkSearchEngine:
 
         self.spark = spark
         self.schema = schema
-        if typo_strategy not in ("auto", "ngram", "scan"):
-            raise ValueError(
-                "typo_strategy must be 'auto', 'ngram' or 'scan', "
-                f"got {typo_strategy!r}"
-            )
-        self.typo_strategy = typo_strategy
         if phrase_strategy not in ("auto", "index", "scan"):
             raise ValueError(
                 "phrase_strategy must be 'auto', 'index' or 'scan', "
@@ -305,17 +307,15 @@ class SparkSearchEngine:
         self._drop_index_state()
 
     def _drop_index_state(self) -> None:
-        """Forget everything derived from the previous index: the lazy
-        |dictionary| (typo_strategy='auto'), the driver-side term ->
-        {field: df} dictionary (built on the first search under
-        _DICT_DRIVER_CACHE_MAX; None = too big or not yet attempted —
-        _tf_cache_tried disambiguates; carrying df lets BM25 skip its
-        per-query document-frequency shuffle), the <field>#raw presence
-        probes, and the segment store. A flush or rebuild hands the index
-        to the storage, so postings access must stop routing through the
-        (now stale) store."""
-        self._dict_size = -1
+        """Forget everything derived from the previous index: the
+        driver-side term -> {field: df} dictionary and its row count (see
+        ``_term_field_cache``; None = too big or not yet attempted —
+        _tf_cache_tried disambiguates), the <field>#raw presence probes,
+        and the segment store. A flush or rebuild hands the index to the
+        storage, so postings access must stop routing through the (now
+        stale) store."""
         self._tf_cache: dict[str, dict[str, int]] | None = None
+        self._dict_size = 0
         self._tf_cache_tried = False
         self._shadow_ok: dict[str, bool] = {}
         # cold-serving mode (from_index_dir(serve="segments")): postings
@@ -451,20 +451,18 @@ class SparkSearchEngine:
         the chunked postings are still around.
 
         ``serve='segments'``: the cold 100-TB path — ONLY the compressed
-        segment store + persisted doclens/dictionary/stats/ngram artifacts
-        are read; the uncompressed ``postings/`` directory may be deleted.
-        Opened once: an ``index.segments.SegmentStore`` (segments and
-        doclens tables, stats.json), the cached dictionary and the n-gram
-        typo index (loaded from the manifest's ``ngram/`` instead of
-        rebuilt per session). Every postings access routes through
-        ``_postings_where`` / ``_postings_for_terms``, which filter SEGMENT
-        rows (field/term columns, parquet-pushdown on the sorted store)
-        before decoding any posting array. BM25 top-k runs the scoring
-        kernel on the open store; per query it reads only the query terms'
-        chunk metadata — from the store's driver map when
-        ``n_segment_rows`` is within ``_DICT_DRIVER_CACHE_MAX`` (built on
-        the first BM25 query), else one metadata-only collect — and decode
-        only the chunks they score."""
+        segment store + persisted doclens/stats/ngram artifacts are read;
+        ``postings/`` may be deleted, and a ``dictionary/`` left by older
+        builds is ignored. Opened once: an ``index.segments.SegmentStore``
+        and the n-gram typo index (``ngram/``). The store's chunk map is
+        the one dictionary: collected once on the first query when
+        ``n_segment_rows`` is within ``_DICT_DRIVER_CACHE_MAX``, it answers
+        BM25 bounds and df, term prefetch, typo candidates and the
+        ``#raw`` probe; over the cap ``index.dict_df`` is the segment rows'
+        merged metadata, probed per query. Every postings access filters
+        SEGMENT rows (``_postings_where`` / ``_postings_for_terms``,
+        parquet-pushdown on the sorted store) before decoding any posting
+        array; BM25 top-k decodes only the chunks it scores."""
         import os
 
         if serve not in ("postings", "segments"):
@@ -497,8 +495,6 @@ class SparkSearchEngine:
         if store is None:
             return eng
 
-        from phphinder_spark.index.builder import SHADOW_SUFFIX
-
         # the guard makes the no-full-decode invariant structural: any
         # future code touching index.postings while segment-serving warns
         # loudly instead of silently decoding the whole store
@@ -510,10 +506,9 @@ class SparkSearchEngine:
             " / _postings_for_terms (term/field pushdown before decode)."
         )
         idx._dict = (
-            spark.read.parquet(f"{out_dir}/dictionary")
+            segments.merge_segment_dictionaries(store.segments)
             .where(~F.col("field").endswith(SHADOW_SUFFIX))
             .select("field", "term", "df")
-            .cache()
         )
         ngram_path = f"{out_dir}/ngram"
         if os.path.exists(ngram_path):
@@ -617,72 +612,46 @@ class SparkSearchEngine:
     def _typo_candidates(self, t: str, fields: list[str]) -> DataFrame:
         """Same final semantics as the reference's state-set automaton +
         refilter (src/Index/AbstractStorage.php:182-205, SURVEY.md Q5).
+        One path per dictionary regime, identical output (tested against
+        an exhaustive scan):
 
-        Two physical strategies with identical output (equivalence-tested,
-        tests/test_typo_ngram.py):
-
-        - ``'ngram'`` — the scale path: bigram posting index over
-          dictionary terms (provably lossless for the reference's d=1/
-          len>=5, d=2/len>=9 thresholds — index/typo_ngram.py), probed by
-          the query's grams, then length band + exact Levenshtein verify.
-          O(matching grams) instead of O(|dictionary|) per query.
-        - ``'scan'`` — length-banded Levenshtein over the whole dictionary:
-          one cheap scan, no gram-probe join. Faster while the dictionary
-          is small (measured at sf0.1's 30k-term dictionary: scan 2.1 s vs
-          ngram 3.0 s — the probe join's extra job dominates).
-        - ``'auto'`` (default) picks by dictionary size: the scan's cost
-          grows linearly with |dict| while the probe stays O(grams), so
-          above ``_TYPO_AUTO_DICT_THRESHOLD`` terms the ngram index wins.
+        - driver dictionary under ``_TYPO_AUTO_DICT_THRESHOLD`` rows: the
+          length band + banded DP (``_lev_within``) run locally; the
+          candidates become one postings IN-list (postings hold only real
+          (field, term) rows, so isin x isin equals the pair join), or the
+          broadcast join past ``_TYPO_INLIST_MAX`` terms.
+        - otherwise: the bigram index over dictionary terms (lossless for
+          the reference's thresholds, index/typo_ngram.py), probed by the
+          query's grams, then length band + Levenshtein verify.
         """
         d = levenshtein_distance_for_term(t)
         empty = self.spark.createDataFrame([], "doc_id long, field string")
         if d == 0:
             return empty
-        strategy = self.typo_strategy
-        if strategy == "auto":
-            if self._dict_size < 0:
-                self._dict_size = self.index.dict_df.count()
-            strategy = (
-                "ngram" if self._dict_size >= _TYPO_AUTO_DICT_THRESHOLD else "scan"
+        cache = self._term_field_cache()
+        if cache is not None and self._dict_size < _TYPO_AUTO_DICT_THRESHOLD:
+            fset = set(fields)
+            cand_terms = [
+                ct
+                for ct, cfs in cache.items()
+                if abs(len(ct) - len(t)) <= d
+                and not fset.isdisjoint(cfs)
+                and _lev_within(ct, t, d)
+            ]
+            if not cand_terms:
+                return empty
+            if len(cand_terms) <= _TYPO_INLIST_MAX:
+                return self._postings_where(
+                    F.col("term").isin(cand_terms) & F.col("field").isin(fields)
+                ).select("doc_id", "field")
+            cand = self.spark.createDataFrame(
+                [(f, ct) for ct in cand_terms for f in fields if f in cache[ct]],
+                "field string, term string",
             )
-            if strategy == "scan":
-                # driver-refined scan: when the dictionary already lives in
-                # the driver cache, the length-band + Levenshtein filter
-                # runs locally (banded DP, O(|band| * |t| * d) — tens of
-                # ms under the 150k auto threshold) and the leaf becomes a
-                # single postings IN-list scan — no dictionary scan job,
-                # no candidate broadcast join (guide §2.4). Identical
-                # candidates: the banded DP decides lev <= d exactly like
-                # F.levenshtein, and postings only contain real (field,
-                # term) rows, so the isin x isin filter equals the pair
-                # join of the distributed form.
-                cache = self._term_field_cache()
-                if cache is not None:
-                    fset = set(fields)
-                    cand_terms = [
-                        ct
-                        for ct, cfs in cache.items()
-                        if abs(len(ct) - len(t)) <= d
-                        and not fset.isdisjoint(cfs)
-                        and _lev_within(ct, t, d)
-                    ]
-                    if not cand_terms:
-                        return empty
-                    return self._postings_where(
-                        F.col("term").isin(cand_terms)
-                        & F.col("field").isin(fields)
-                    ).select("doc_id", "field")
-        if strategy == "ngram":
+        else:
             from phphinder_spark.index.typo_ngram import typo_candidate_terms
 
             cand = typo_candidate_terms(self.index.ngram_df, t, fields)
-        else:
-            cand = (
-                self.index.dict_df.where(F.col("field").isin(fields))
-                .where(F.abs(F.length("term") - F.lit(len(t))) <= d)
-                .where(F.levenshtein(F.col("term"), F.lit(t)) <= d)
-                .select("field", "term")
-            )
         # no .distinct(): a doc matched by several candidate terms emits
         # duplicate (doc_id, field) rows, but every downstream consumer
         # is set-shaped — the finalize aggregate's array_distinct/min and
@@ -720,11 +689,10 @@ class SparkSearchEngine:
         """Does the loaded index carry ``<field>#raw`` shadow postings?
         Persisted indexes built before the shadow existed don't — those
         fall back to the stored-corpus scan. Answered from the segment
-        store's driver chunk map when it is loaded, else by one probe job
-        per (engine, field); cached, invalidated with the index."""
+        store's chunk map (collected on first use) under the cap, else by
+        one probe job per (engine, field); cached, invalidated with the
+        index."""
         if field not in self._shadow_ok:
-            from phphinder_spark.index.builder import SHADOW_SUFFIX
-
             shadow = field + SHADOW_SUFFIX
             fields = self._store.fields() if self._store is not None else None
             if fields is not None:
@@ -773,8 +741,6 @@ class SparkSearchEngine:
         middles: equality; single token: containment) so segment-serving
         decodes only matching terms' posting arrays. ``fulltext_candidates``
         re-applies the per-slot conditions on this superset."""
-        from phphinder_spark.index.builder import SHADOW_SUFFIX
-
         n = len(analyzed)
         if n == 1:
             tok = analyzed[0][0]
@@ -831,7 +797,6 @@ class SparkSearchEngine:
             )
             cands = None
             if prefilterable:
-                from phphinder_spark.index.builder import SHADOW_SUFFIX
                 from phphinder_spark.index.phrase import fulltext_candidates
 
                 if analyzed:
@@ -1161,24 +1126,24 @@ class SparkSearchEngine:
         return timings
 
     def _term_field_cache(self) -> dict[str, dict[str, int]] | None:
-        """Driver-side term -> {field: df} dictionary, built ONCE per
-        index (from dict_df — the persisted dictionary artifact in
-        segment mode, the shadow-free postings dictionary in memory mode)
-        when the dictionary fits under ``_DICT_DRIVER_CACHE_MAX`` rows;
-        None above the cap. Turns the per-query existence prefetch into a
-        local dict probe — zero Spark jobs per warm query (round-5
-        verdict #3) — and hands BM25 its per-term document frequencies
-        without a per-query dfreq shuffle (the df values are exactly
-        dict_df's, i.e. the postings row count per (field, term))."""
+        """Driver-side term -> {field: df} dictionary (no shadow fields),
+        built ONCE per index; None above ``_DICT_DRIVER_CACHE_MAX``. In
+        segment mode it is the store's ``term_fields`` (its chunk map);
+        otherwise ``dict_df`` counted, then collected. Turns the per-query
+        existence prefetch into a local dict probe — zero Spark jobs per
+        warm query — and hands BM25 its df without a per-query shuffle.
+        ``_dict_size`` is its (field, term) row count."""
         if not self._tf_cache_tried:
             self._tf_cache_tried = True
-            if self._dict_size < 0:
-                self._dict_size = self.index.dict_df.count()
-            if self._dict_size <= _DICT_DRIVER_CACHE_MAX:
+            if self._store is not None:
+                self._tf_cache = self._store.term_fields()
+            elif self.index.dict_df.count() <= _DICT_DRIVER_CACHE_MAX:
                 by_term: dict[str, dict[str, int]] = {}
                 for r in self.index.dict_df.select("term", "field", "df").collect():
                     by_term.setdefault(r["term"], {})[r["field"]] = int(r["df"])
                 self._tf_cache = by_term
+            if self._tf_cache is not None:
+                self._dict_size = sum(len(fs) for fs in self._tf_cache.values())
         return self._tf_cache
 
     def _prefetch_term_hits(self, query) -> dict[tuple[str, str], bool]:
@@ -1207,17 +1172,11 @@ class SparkSearchEngine:
                 (t, f): True for t in terms for f in cache.get(t, ())
             }
         # dictionary over the cap: one batched probe job for the whole AST
-        # — the persisted DICTIONARY in segment-serving mode (probing
-        # postings there would decode posting arrays), the cached postings frame
-        # in memory mode
-        if self._store is not None:
-            src = self.index.dict_df
-        else:
-            src = self.index.postings
+        # on dict_df (never the postings: in segment mode that would decode
+        # posting arrays; in memory mode the count above cached dict_df)
         rows = (
-            src.where(F.col("term").isin(list(terms)))
+            self.index.dict_df.where(F.col("term").isin(list(terms)))
             .select("term", "field")
-            .distinct()
             .collect()
         )
         return {(r["term"], r["field"]): True for r in rows}

@@ -1,9 +1,10 @@
 """Typo-tolerance policy: allowed Levenshtein distance by term length
 (reference: src/Utils/TypoTolerance.php:23-38 — len>=9 => 2, len>=5 => 1,
 else 0). The reference over-generates candidates with a state-set automaton
-then refilters by true Levenshtein; our Spark path goes straight to a
-length-banded dictionary prefilter + built-in ``F.levenshtein`` — same final
-semantics, no automaton needed (SURVEY.md §2.9 Q5).
+then refilters by true Levenshtein; the engine goes straight to a
+length-banded dictionary prefilter + exact Levenshtein (a banded DP over
+the driver dictionary, or the n-gram probe's ``F.levenshtein`` verify) —
+same final semantics, no automaton needed (SURVEY.md §2.9 Q5).
 """
 
 from __future__ import annotations

@@ -11,8 +11,9 @@ All tokenization/transformation runs in Arrow-vectorized pandas UDFs
 (input_hint: no per-row Python UDFs); posting aggregation is a hash
 aggregate with map-side partial combine, so hot terms ("function",
 "return") do NOT skew this stage — doc_id is part of the grouping key.
-The dictionary/stat aggregates that do group by bare (field, term) use a
-salted two-stage combine (see ``dictionary``).
+At scale the bare (field, term) dictionary is not re-aggregated from
+postings: the segment store's per-(field, term, chunk) rows are its
+partial combine, summed per term (index/segments.py).
 
 The postings model is a superset of the reference's docID sets
 (reference stores only comma-joined ids, src/Index/AbstractStorage.php:225):
@@ -191,19 +192,8 @@ def build_doclens(postings: DataFrame) -> DataFrame:
     return postings.groupBy("doc_id", "field").agg(F.sum("tf").alias("dl"))
 
 
-def dictionary(postings: DataFrame, salt_partitions: int = 0) -> DataFrame:
-    """(field, term, df) document frequencies.
-
-    With ``salt_partitions`` > 0, aggregates in two stages keyed by
-    (field, term, crc32(doc_id) % S) first — the skew-proof path for
-    10^12-scale hot terms where even partial aggregation leaves one
-    reducer with a giant final group's traffic (SURVEY.md §4.3).
-    """
-    if salt_partitions > 0:
-        partial = postings.groupBy(
-            "field", "term", (F.crc32(F.col("doc_id").cast("string")) % salt_partitions).alias("_salt")
-        ).agg(F.count("*").alias("pdf"))
-        return partial.groupBy("field", "term").agg(F.sum("pdf").alias("df"))
+def dictionary(postings: DataFrame) -> DataFrame:
+    """(field, term, df) document frequencies."""
     return postings.groupBy("field", "term").agg(F.count("*").alias("df"))
 
 

@@ -17,8 +17,7 @@ Layout under ``out_dir``:
     segments/             segment store (encode_segments): per (field, term,
                           chunk) doc_ids/tfs/positions arrays, Parquet v2
                           DELTA_BINARY_PACKED (delta-gaps, bit-packed)
-    dictionary/           global (field, term, df, cf, ...) parquet
-    ngram/                bigram typo index over dictionary terms
+    ngram/                bigram typo index over the segment rows' terms
     stats.json            corpus-level stats (n_docs, avgdl per field)
     manifest.json         lineage + per-chunk metrics
 """
@@ -31,7 +30,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from phphinder_spark.index.builder import assign_doc_ids, build_postings
+from phphinder_spark.index.builder import SHADOW_SUFFIX, assign_doc_ids, build_postings
 from phphinder_spark.index.segments import (
     encode_segments,
     merge_segment_dictionaries,
@@ -79,7 +78,7 @@ def build_resumable_index(
     chunk_span: int = 1 << 20,
     fail_after_chunks: int | None = None,
 ) -> dict:
-    """Build docs + chunked postings + segments + dictionary under
+    """Build docs + chunked postings + segments + n-gram index under
     ``out_dir``. ``fail_after_chunks`` injects a crash after N chunks
     (test hook for resume semantics). Returns the manifest."""
     os.makedirs(out_dir, exist_ok=True)
@@ -142,23 +141,19 @@ def build_resumable_index(
         if fail_after_chunks is not None and done >= fail_after_chunks:
             raise RuntimeError(f"injected failure after {done} chunks")
 
-    # finalize: segments + dictionary + stats (idempotent overwrite)
+    # finalize: segments + n-gram index + doclens + stats (idempotent
+    # overwrite)
     t1 = time.time()
     postings = spark.read.parquet(os.path.join(out_dir, "postings"))
     segments = encode_segments(postings, chunk_span=chunk_span)
     write_segments(segments, os.path.join(out_dir, "segments"))
     segments_df = spark.read.parquet(os.path.join(out_dir, "segments"))
-    merge_segment_dictionaries(segments_df).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "dictionary")
-    )
-    # persist the bigram typo index with the manifest layout so serving
-    # sessions load it instead of rebuilding per session (engine
-    # from_index_dir(serve="segments")); shadow (#raw) phrase-prefilter
-    # rows are not dictionary terms
-    from phphinder_spark.index.builder import SHADOW_SUFFIX
+    # the bigram typo index is persisted so serving sessions load it; its
+    # terms are the segment rows' dictionary, merged in-plan, without the
+    # shadow (#raw) phrase-prefilter rows
     from phphinder_spark.index.typo_ngram import build_ngram_index
 
-    dict_df = spark.read.parquet(os.path.join(out_dir, "dictionary")).where(
+    dict_df = merge_segment_dictionaries(segments_df).where(
         ~F.col("field").endswith(SHADOW_SUFFIX)
     )
     build_ngram_index(dict_df).write.mode("overwrite").parquet(

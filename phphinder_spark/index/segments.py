@@ -31,6 +31,7 @@ import os
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from phphinder_spark.index.builder import SHADOW_SUFFIX
 from phphinder_spark.scoring import bm25_topk
 
 DEFAULT_CHUNK_SPAN = 1 << 20  # 1M doc ids per chunk
@@ -168,21 +169,19 @@ class SegmentStore:
     source of ``scoring.bm25_topk``, so a serving engine pays the parquet
     opens and the stats read at open time, never per query.
 
-    Per query the kernel reads the chunk metadata (term, chunk, df,
-    max_tf) of the query terms — never ``dictionary/``: the dictionary is
-    ``merge_segment_dictionaries`` of these rows, so a term's df is the
-    sum of its chunks' df (``df_from_chunk_rows``), and the posting
-    arrays of only the chunks it scores (``hits``). That metadata comes
-    from one of two regimes, chosen once by the rule of the engine's
-    driver dictionary cache:
+    The chunk metadata (field, term, chunk, df, max_tf) is the index's
+    only term dictionary: a term's df is the sum of its chunks' df
+    (``df_from_chunk_rows``), and the kernel decodes the posting arrays
+    of only the chunks it scores (``hits``). It comes from one of two
+    regimes, chosen once by the rule of the engine's driver dictionary:
 
     - ``n_segment_rows`` (stats.json) within ``_DICT_DRIVER_CACHE_MAX``:
       the first lookup collects the whole store's metadata into a driver
-      map (field, term) -> ((chunk, df, max_tf), ...); later lookups run
+      map (field, term) -> ((chunk, df, max_tf), ...), which also yields
+      the engine's driver dictionary (``term_fields``); later lookups run
       no Spark job;
     - over the cap, or a store whose stats.json has no row count: one
-      metadata-only collect per lookup (the posting arrays are never
-      scanned)."""
+      metadata-only collect per lookup, and no driver dictionary."""
 
     df_from_chunk_rows = True
 
@@ -192,7 +191,7 @@ class SegmentStore:
         self.doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
         with open(os.path.join(index_dir, "stats.json")) as fh:
             self.stats = json.load(fh)
-        self._chunks: dict[tuple[str, str], tuple] | None = None
+        self._chunks: dict[tuple[str, str], list] | None = None
         self._chunks_tried = False
 
     @classmethod
@@ -200,30 +199,46 @@ class SegmentStore:
         """``store`` itself, or a store opened on the spot from a path."""
         return store if isinstance(store, SegmentStore) else cls(spark, store)
 
-    def fields(self) -> set[str] | None:
-        """The fields of the store's rows, from the driver map; None while
-        that map is not loaded (see ``chunk_rows``)."""
-        if self._chunks is None:
-            return None
-        return {f for f, _ in self._chunks}
-
-    def chunk_rows(self, field: str, terms: list[str]) -> list[tuple]:
-        """(term, chunk, df, max_tf) of every segment row of ``terms`` in
-        ``field``, from the driver map when it fits (see the class)."""
+    def _chunk_map(self) -> dict[tuple[str, str], list] | None:
+        """The driver chunk map, collected on first use (the store's one
+        metadata collect); None over the cap (see the class)."""
         if not self._chunks_tried:
             self._chunks_tried = True
             from phphinder_spark import engine
 
             n_rows = self.stats.get("n_segment_rows")
             if n_rows is not None and n_rows <= engine._DICT_DRIVER_CACHE_MAX:
-                by_key: dict[tuple[str, str], list] = {}
+                self._chunks = {}
                 for f, t, c, d, m in self.segments.select(
                     "field", "term", "chunk", "df", "max_tf"
                 ).collect():
-                    by_key.setdefault((f, t), []).append((c, d, m))
-                self._chunks = {key: tuple(v) for key, v in by_key.items()}
-        if self._chunks is not None:
-            return [(t, *r) for t in terms for r in self._chunks.get((field, t), ())]
+                    self._chunks.setdefault((f, t), []).append((c, d, m))
+        return self._chunks
+
+    def term_fields(self) -> dict[str, dict[str, int]] | None:
+        """The driver dictionary term -> {field: df}: df summed over the
+        term's chunks, shadow fields left out; None over the cap."""
+        chunks = self._chunk_map()
+        if chunks is None:
+            return None
+        terms: dict[str, dict[str, int]] = {}
+        for (f, t), rows in chunks.items():
+            if not f.endswith(SHADOW_SUFFIX):
+                terms.setdefault(t, {})[f] = sum(r[1] for r in rows)
+        return terms
+
+    def fields(self) -> set[str] | None:
+        """The fields of the store's rows, shadow fields included, from
+        the chunk map; None over the cap."""
+        chunks = self._chunk_map()
+        return None if chunks is None else {f for f, _ in chunks}
+
+    def chunk_rows(self, field: str, terms: list[str]) -> list[tuple]:
+        """(term, chunk, df, max_tf) of every segment row of ``terms`` in
+        ``field``, from the chunk map when it fits (see the class)."""
+        chunks = self._chunk_map()
+        if chunks is not None:
+            return [(t, *r) for t in terms for r in chunks.get((field, t), ())]
         return self._rows(field, terms).select("term", "chunk", "df", "max_tf").collect()
 
     def _rows(self, field: str, terms: list[str]) -> DataFrame:

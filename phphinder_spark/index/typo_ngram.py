@@ -1,11 +1,11 @@
 """N-gram dictionary index for typo-tolerant lookup — the scale path for
 Q5 (SURVEY.md §2.9).
 
-The baseline typo path scans the whole dictionary with a length-band +
-``F.levenshtein`` filter (engine._typo_candidates) — exact, but O(|dict|)
-per query. At 10^12-doc dictionary sizes the standard fix is an n-gram
-posting index over the *terms*: a query hits only terms sharing at least
-one n-gram, then the exact Levenshtein verify runs on that small set.
+A full dictionary scan with a length band + Levenshtein filter is exact
+but O(|dict|) per query (the engine runs it on the driver only below
+``engine._TYPO_AUTO_DICT_THRESHOLD`` terms). At scale the standard fix is
+an n-gram posting index over the *terms*: a query hits only terms sharing
+at least one n-gram, then the exact Levenshtein verify runs on that set.
 
 Exactness for the reference's thresholds (src/Utils/TypoTolerance.php:
 d=1 for len>=5, d=2 for len>=9): one edit destroys at most n bigrams, so

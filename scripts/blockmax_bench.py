@@ -12,10 +12,12 @@ Usage: python scripts/blockmax_bench.py [n_docs] [k]   # default 400_000, 10
 """
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 # Zipf corpus: idN has Zipf rank N -> df ~ 1-exp(-9.6/N) of docs.
@@ -33,10 +35,11 @@ QUERIES = [
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("blockmax-bench")
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.sql.adaptive.enabled", "true")
@@ -109,7 +112,6 @@ def main() -> None:
 
     # ---- segment-served comparison: here pruning skips real work
     # (skipped chunks' posting arrays are never read), not just scoring exprs
-    import os
     import tempfile
 
     from phphinder_spark.index.segments import (
@@ -166,10 +168,10 @@ def main() -> None:
         "segment_queries": seg_rows,
     }
     print(json.dumps(summary))
-    with open("/root/repo/BENCH.md", "a") as fh:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as fh:
         fh.write(
             f"\n### block-max vs exhaustive BM25 (n_docs={n_docs}, k={k}, "
-            "local[32])\n\n"
+            f"local[{cpus}])\n\n"
             "| query | exhaustive (s) | blockmax (s) | speedup | chunks skipped | identical top-k |\n"
             "|---|---|---|---|---|---|\n"
         )

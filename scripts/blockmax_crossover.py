@@ -23,7 +23,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 QUERIES = [
     "t0_id100 t0_id200 function",   # topic mid-rank + hot
@@ -37,10 +38,11 @@ QUERIES = [
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_500_000
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("blockmax-crossover")
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.sql.adaptive.enabled", "true")
@@ -171,10 +173,10 @@ def main() -> None:
         )
         print(json.dumps(mem_rows[-1]), flush=True)
 
-    with open("/root/repo/BENCH.md", "a") as fh:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as fh:
         fh.write(
             f"\n### block-max crossover (n_docs={n_docs}, k={k}, CLUSTERED "
-            "topics layout, local[32])\n\n"
+            f"topics layout, local[{cpus}])\n\n"
             "Doc ids clustered by lang (assign_doc_ids_clustered) over the\n"
             "zipf='topics' corpus: a topic's identifiers live in ~1/5 of the\n"
             "chunks, so segment-served block-max skips the other topics'\n"
@@ -212,7 +214,7 @@ def main() -> None:
         "seg": seg_rows,
         "mem": mem_rows,
     }
-    with open("/root/repo/BENCH_blockmax.json", "w") as fh:
+    with open(os.path.join(ROOT, "BENCH_blockmax.json"), "w") as fh:
         json.dump(summary, fh, indent=1)
     print(json.dumps({"done": True, "seg": seg_rows, "mem": mem_rows}))
     spark.stop()

@@ -25,3 +25,28 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def typo_reference():
+    """Exhaustive reference for a typo leaf, independent of the engine's
+    typo regimes: ``(postings, query, fields) -> sorted doc ids`` holding
+    any dictionary (field, term) within the length band and Levenshtein
+    distance of ``query``."""
+    from pyspark.sql import functions as F
+
+    from phphinder_spark.functions.typo import levenshtein_distance_for_term
+    from phphinder_spark.index.builder import dictionary
+
+    def doc_ids(postings, query, fields):
+        d = levenshtein_distance_for_term(query)
+        cand = (
+            dictionary(postings)
+            .where(F.col("field").isin(fields))
+            .where(F.abs(F.length("term") - F.lit(len(query))) <= d)
+            .where(F.levenshtein(F.col("term"), F.lit(query)) <= d)
+            .select("field", "term")
+        )
+        return sorted({r["doc_id"] for r in postings.join(cand, ["field", "term"]).collect()})
+
+    return doc_ids

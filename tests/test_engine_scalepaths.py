@@ -4,7 +4,8 @@ reference-semantics scans they replace:
 - fulltext leaf: positional-index candidates + contains verify == full
   stored-corpus substring scan (adversarial cases: left/right token
   extension, separator mismatch, case, punctuation phrases).
-- typo leaf: n-gram dictionary probe == full dictionary scan.
+- typo leaf: driver banded DP and n-gram dictionary probe == full
+  dictionary scan.
 """
 
 import pytest
@@ -168,16 +169,26 @@ def test_shadow_terms_do_not_leak_into_typo_or_prefix(spark, stemmed_engine):
 
 
 @pytest.mark.parametrize("term", ["sparq", "tabel", "joib", "xx"])
-def test_typo_ngram_path_equals_dict_scan(spark, term):
+def test_typo_ngram_path_equals_dict_scan(spark, monkeypatch, typo_reference, term):
+    """The typo leaf in each dictionary regime — driver banded DP, n-gram
+    probe (threshold 0), over the driver-dictionary cap — returns the
+    docs of the exhaustive length-band + Levenshtein reference."""
+    from phphinder_spark import engine as engine_mod
+
     schema = SearchSchema(
         {"text": IS_INDEXED | IS_STORED | IS_FULLTEXT},
         analyzer=Analyzer.lowercase_only(),
     )
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    e_ngram = SparkSearchEngine(spark, schema, typo_strategy="ngram")
-    e_ngram.index_dataframe(df)
-    e_scan = SparkSearchEngine(spark, schema, typo_strategy="scan")
-    e_scan.index_dataframe(df)
-    a = {r.doc_id for r in e_ngram.search(term)}
-    b = {r.doc_id for r in e_scan.search(term)}
-    assert a == b, term
+    e = SparkSearchEngine(spark, schema)
+    e.index_dataframe(df)
+    expected = typo_reference(e.index.postings, term, ["text"])
+    assert {r.doc_id for r in e.search(term)} == set(expected), term
+    assert e._term_field_cache() is not None
+    monkeypatch.setattr(engine_mod, "_TYPO_AUTO_DICT_THRESHOLD", 0)
+    assert {r.doc_id for r in e.search(term)} == set(expected), term
+    monkeypatch.setattr(engine_mod, "_DICT_DRIVER_CACHE_MAX", 0)
+    monkeypatch.setattr(e, "_tf_cache", None)
+    monkeypatch.setattr(e, "_tf_cache_tried", False)
+    assert {r.doc_id for r in e.search(term)} == set(expected), term
+    assert e._term_field_cache() is None

@@ -4,8 +4,8 @@ observable result.
 1. fused term leaves (one postings scan per field scope) return exactly
    the per-leaf rows — including the duplicate-transformed-term fallback
    (where a CASE could not represent two qvalues for one term);
-2. the driver-refined typo path ('auto' + cached dictionary) equals the
-   distributed scan / ngram strategies;
+2. every typo regime (driver banded DP, with an IN-list or the broadcast
+   join, and the n-gram probe) equals an exhaustive dictionary scan;
 3. the banded-DP Levenshtein used by that path decides <= d exactly
    like the full matrix.
 """
@@ -85,7 +85,13 @@ def test_term_and_not_group(eng):
     assert [d for d, *_ in out] == [1, 2, 5]
 
 
-def test_typo_auto_driver_path_equals_scan_and_ngram(spark):
+def test_typo_auto_driver_path_equals_scan_and_ngram(spark, monkeypatch, typo_reference):
+    """Every typo regime returns the docs of the exhaustive length-band +
+    Levenshtein reference: the driver banded DP with its IN-list, the
+    same with the candidates sent through the broadcast join (IN-list
+    cap 1), the n-gram probe (threshold 0) and the over-cap path."""
+    from phphinder_spark import engine as engine_mod
+
     schema = SearchSchema(
         {"text": IS_INDEXED | IS_STORED | IS_FULLTEXT},
         analyzer=Analyzer.lowercase_only(),
@@ -93,19 +99,32 @@ def test_typo_auto_driver_path_equals_scan_and_ngram(spark):
     )
     rows = [(i, f"window widget wander alpha{i}") for i in range(20)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    results = {}
-    for strat in ("auto", "scan", "ngram"):
-        e = SparkSearchEngine(spark, schema, typo_strategy=strat)
-        e.index_dataframe(docs)
-        e.index.postings.cache().count()
-        if strat == "auto":
-            # the driver dictionary cache must exist so 'auto' takes the
-            # driver-refined path (what this test pins)
-            assert e._term_field_cache() is not None
-        results[strat] = sorted(r.doc_id for r in e.search("windoq"))
-        e.index.unpersist()
-    assert results["auto"] == results["scan"] == results["ngram"]
-    assert results["auto"]  # the typo fallback matched something
+    # 'windoq' has one candidate ('window'), 'alpha1x' eleven ('alpha1',
+    # 'alpha10'..'alpha19'): more than the join regime's cap of 1
+    queries = ["windoq", "alpha1x"]
+    regimes = {
+        "driver": {},
+        "driver_join": {"_TYPO_INLIST_MAX": 1},
+        "ngram": {"_TYPO_AUTO_DICT_THRESHOLD": 0},
+        "over_cap": {"_DICT_DRIVER_CACHE_MAX": 0},
+    }
+    expected = None
+    for regime, patch in regimes.items():
+        with monkeypatch.context() as m:
+            for name, value in patch.items():
+                m.setattr(engine_mod, name, value)
+            e = SparkSearchEngine(spark, schema)
+            e.index_dataframe(docs)
+            e.index.postings.cache().count()
+            if expected is None:
+                expected = [typo_reference(e.index.postings, q, ["text"]) for q in queries]
+                assert all(expected)  # the typo fallback matched something
+                assert len(expected[1]) == 11
+            got = [sorted(r.doc_id for r in e.search(q)) for q in queries]
+            assert got == expected, regime
+            assert (e._term_field_cache() is None) == (regime == "over_cap")
+            assert (e.index._ngram is None) == (regime in ("driver", "driver_join")), regime
+            e.index.unpersist()
 
 
 def _lev_full(a: str, b: str) -> int:

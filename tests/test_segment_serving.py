@@ -45,6 +45,27 @@ def test_ngram_index_is_persisted_and_loaded(served):
     assert seg.index._ngram is not None
 
 
+def test_stale_dictionary_dir_is_ignored(spark, served):
+    """An index dir from a build that still wrote ``dictionary/`` opens
+    as before and never reads it: a stale one with wrong df values
+    changes no search or BM25 result."""
+    mem, _, out_dir = served
+    stale = os.path.join(out_dir, "dictionary")
+    spark.createDataFrame(
+        [("content", "function", 999_999), ("content", "functiom", 7)],
+        "field string, term string, df long",
+    ).write.parquet(stale)
+    try:
+        seg = SparkSearchEngine.from_index_dir(spark, out_dir, code_schema(), serve="segments")
+        for q in ["function", "functiom", "varint delta"]:
+            assert seg.search(q) == mem.search(q), q
+        assert [tuple(r) for r in seg.search_topk_bm25("function delta", k=10).collect()] == [
+            tuple(r) for r in mem.search_topk_bm25("function delta", k=10).collect()
+        ]
+    finally:
+        shutil.rmtree(stale)
+
+
 @pytest.mark.parametrize("strategy", ["exhaustive", "blockmax"])
 def test_segment_bm25_topk_equals_memory(served, strategy):
     mem, seg, _ = served

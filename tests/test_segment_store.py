@@ -3,8 +3,9 @@
 ``from_index_dir(serve="segments")`` opens one ``SegmentStore`` (segments
 and doclens tables, stats.json); the segment scorers take per-term df and
 chunk bounds from the store's chunk metadata — a driver map under the
-dictionary-cache cap, one metadata-only collect above it — and never read
-``dictionary/``. These tests pin the equivalences that make that safe and
+dictionary-cache cap, one metadata-only collect above it — and the engine
+takes its driver dictionary from the same map; no ``dictionary/`` is
+written or read. These tests pin the equivalences that make that safe and
 the Spark job counts it buys (counted with job groups and
 ``statusTracker()``; no action is ever run to count) — and the same job
 counts and df equivalence for the memory engine's BM25, which runs the
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 from phphinder_spark import engine as engine_mod
 from phphinder_spark.corpus import generate_code_corpus
 from phphinder_spark.engine import SparkSearchEngine
+from phphinder_spark.index.builder import dictionary
 from phphinder_spark.index.manifest import build_resumable_index
 from phphinder_spark.index.segments import (
     SegmentStore,
@@ -112,10 +114,11 @@ def topk(df):
 # ------------------------------------------------------------ equivalences
 
 
-def test_chunk_df_sums_equal_dictionary_df(spark, index_dir):
-    """The dictionary artifact is the merge of the chunk metadata, so a
-    term's df summed over its chunks is the dictionary's df — for every
-    (field, term) of the index, shadow fields included."""
+def test_chunk_df_sums_equal_dictionary_df(spark, index_dir, memory_engine):
+    """A term's df summed over its chunks is its document frequency in
+    the postings (``builder.dictionary`` over the memory engine's
+    postings of the same docs) — for every (field, term) of the index,
+    shadow fields included."""
     summed = {
         (r["field"], r["term"]): r["df"]
         for r in spark.read.parquet(f"{index_dir}/segments")
@@ -123,12 +126,51 @@ def test_chunk_df_sums_equal_dictionary_df(spark, index_dir):
         .agg(F.sum("df").alias("df"))
         .collect()
     }
-    dictionary = {
+    by_postings = {
         (r["field"], r["term"]): r["df"]
-        for r in spark.read.parquet(f"{index_dir}/dictionary").collect()
+        for r in dictionary(memory_engine.index.postings).collect()
     }
-    assert summed == dictionary
-    assert len(dictionary) > 1000
+    assert summed == by_postings
+    assert len(by_postings) > 1000
+    assert not os.path.exists(f"{index_dir}/dictionary")
+
+
+def test_segment_driver_dictionary_equals_memory(spark, index_dir, memory_engine):
+    """The segment engine's driver dictionary, taken from the chunk map,
+    is the memory engine's, counted from its postings."""
+    seg = SparkSearchEngine.from_index_dir(spark, index_dir, code_schema(), serve="segments")
+    cache = seg._term_field_cache()
+    assert cache is not None
+    assert cache == memory_engine._term_field_cache()
+    assert seg._dict_size == memory_engine._dict_size > 1000
+
+
+# typo queries over the fixture with no exact hit: one candidate term
+# each ('function', 'varint'), many (distance 2 at 9 letters), and a
+# 4-letter word too short for typo tolerance
+TYPO_QUERIES = ["functiom", "vorint", "ident_99x", "mrge"]
+
+
+@pytest.mark.parametrize("regime", ["driver", "driver_join", "ngram", "over_cap"])
+def test_segment_served_typo_equals_memory(spark, index_dir, memory_engine, monkeypatch, regime):
+    """A segment-served typo query returns the memory engine's results in
+    every regime: driver banded DP (IN-list, or the broadcast join past
+    an IN-list cap of 1), the persisted n-gram index (threshold 0), and
+    over the driver-dictionary cap."""
+    expected = {q: memory_engine.search(q) for q in TYPO_QUERIES}
+    assert all(expected[q] for q in TYPO_QUERIES[:3])
+    patch = {
+        "driver": {},
+        "driver_join": {"_TYPO_INLIST_MAX": 1},
+        "ngram": {"_TYPO_AUTO_DICT_THRESHOLD": 0},
+        "over_cap": {"_DICT_DRIVER_CACHE_MAX": 0},
+    }[regime]
+    for name, value in patch.items():
+        monkeypatch.setattr(engine_mod, name, value)
+    seg = SparkSearchEngine.from_index_dir(spark, index_dir, code_schema(), serve="segments")
+    for q in TYPO_QUERIES:
+        assert seg.search(q) == expected[q], q
+    assert (seg._term_field_cache() is None) == (regime == "over_cap")
 
 
 @pytest.mark.parametrize("query,k", QUERIES)
@@ -226,6 +268,27 @@ def test_warm_theta_pruning_bm25_plans_in_two_jobs(spark, warm_engine):
     )
     assert n_plan <= 2
     assert n_run <= 2
+
+
+def test_segment_open_and_first_queries_job_counts(spark, index_dir):
+    """Upper bounds on the Spark jobs of opening a segment-served index
+    (no ``dictionary/`` read), its first term search (the chunk map's one
+    metadata collect is the whole driver-dictionary load) and the first
+    BM25 after it (chunk bounds and df from that same map)."""
+    with job_group(spark) as n_jobs:
+        eng = SparkSearchEngine.from_index_dir(spark, index_dir, code_schema(), serve="segments")
+        n_open = n_jobs()
+    with job_group(spark) as n_jobs:
+        assert eng.search("function")
+        n_term = n_jobs()
+    with job_group(spark) as n_jobs:
+        assert eng.search_topk_bm25("varint delta", k=5, field="content").collect()
+        n_bm25 = n_jobs()
+    assert eng._store._chunks is not None
+    # bounds = the counts measured on this fixture (AQE off)
+    assert n_open <= 4
+    assert n_term <= 4
+    assert n_bm25 <= 2
 
 
 def test_over_cap_plans_one_metadata_job_and_no_reopen(spark, index_dir, monkeypatch):

@@ -220,10 +220,13 @@ def test_resumable_build_crash_equivalence(spark, tmp_path):
     # resume only built the remaining chunks
     assert sum(1 for c in m_resumed["chunks"].values() if c["done"]) == 4
 
-    for sub in ["postings", "dictionary", "segments"]:
+    for sub in ["postings", "segments", "doclens", "ngram"]:
         a = sorted(map(str, spark.read.parquet(f"{clean_dir}/{sub}").collect()))
         b = sorted(map(str, spark.read.parquet(f"{crash_dir}/{sub}").collect()))
         assert a == b, sub
+    # the segment rows are the index's only dictionary
+    assert not os.path.exists(f"{clean_dir}/dictionary")
+    assert not os.path.exists(f"{crash_dir}/dictionary")
     sa = json.load(open(f"{clean_dir}/stats.json"))
     sb = json.load(open(f"{crash_dir}/stats.json"))
     sa.pop("finalize_sec"), sb.pop("finalize_sec")

@@ -47,9 +47,12 @@ def test_short_term_returns_empty(spark, dict_and_index):
     assert typo_candidate_terms(ngram_idx, "cat", ["content"]).count() == 0
 
 
-def test_auto_strategy_picks_scan_on_small_dict_same_results(spark):
-    """'auto' must resolve to the dictionary scan below the threshold and
-    return exactly the ngram strategy's results either way."""
+def test_auto_strategy_picks_scan_on_small_dict_same_results(spark, monkeypatch, typo_reference):
+    """A small dictionary takes the driver regime (banded DP over the
+    driver dictionary); forcing the n-gram regime (threshold 0) and the
+    over-cap regime (no driver dictionary) returns the same docs, and all
+    three equal the exhaustive length-band + Levenshtein reference."""
+    from phphinder_spark import engine as engine_mod
     from phphinder_spark.engine import _TYPO_AUTO_DICT_THRESHOLD, SparkSearchEngine
     from phphinder_spark.schema import IS_FULLTEXT, IS_INDEXED, IS_STORED, SearchSchema
     from phphinder_spark.analysis import Analyzer
@@ -61,14 +64,24 @@ def test_auto_strategy_picks_scan_on_small_dict_same_results(spark):
     )
     rows = [(i, f"sample spark vector document number{i}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    results = {}
-    for strat in ("auto", "ngram", "scan"):
-        eng = SparkSearchEngine(spark, schema, typo_strategy=strat)
-        eng.index_dataframe(df)
-        results[strat] = sorted(
-            r["doc_id"] for r in eng.search_df("sparq").collect()
-        )
-        if strat == "auto":
-            assert 0 <= eng._dict_size < _TYPO_AUTO_DICT_THRESHOLD
-    assert results["auto"] == results["scan"] == results["ngram"]
-    assert results["auto"]  # typo fallback actually matched something
+    eng = SparkSearchEngine(spark, schema)
+    eng.index_dataframe(df)
+    expected = typo_reference(eng.index.postings, "sparq", ["text"])
+    assert expected  # the typo fallback really matches something
+
+    def run():
+        return sorted(r["doc_id"] for r in eng.search_df("sparq").collect())
+
+    assert run() == expected
+    assert 0 < eng._dict_size < _TYPO_AUTO_DICT_THRESHOLD
+    assert eng.index._ngram is None  # driver regime: no n-gram index built
+
+    monkeypatch.setattr(engine_mod, "_TYPO_AUTO_DICT_THRESHOLD", 0)
+    assert run() == expected
+    assert eng.index._ngram is not None
+
+    monkeypatch.setattr(engine_mod, "_DICT_DRIVER_CACHE_MAX", 0)
+    monkeypatch.setattr(eng, "_tf_cache", None)
+    monkeypatch.setattr(eng, "_tf_cache_tried", False)
+    assert run() == expected
+    assert eng._term_field_cache() is None
