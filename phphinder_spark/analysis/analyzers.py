@@ -12,14 +12,21 @@ Mirrors the behavior (not the code) of the reference analyzers:
 - Chain: transformers run in order; a ``None`` kills the token and stops the
   chain (reference: src/Index/AbstractStorage.php:336-345).
 
-These are pure-Python callables so they can run identically on the driver
-(query-term transformation) and inside Arrow-vectorized pandas UDFs
-(corpus tokenization) — one code path, byte-identical terms.
+Each piece is a pure-Python callable, which the driver runs on query terms.
+The pieces that Spark can express also carry their JVM form next to it
+(``spark_tokens``, ``spark_apply``, ``spark_allow``), and
+``Analyzer.spark_analyze`` compiles a chain of them into Column expressions,
+so index-time analysis of such a chain starts no Python worker. A chain
+with any other piece (a stemmer, a user's own transformer or filter)
+has no Spark form; ``index/builder.py`` runs it in an Arrow-vectorized
+pandas UDF instead.
 """
 
 from __future__ import annotations
 
+import functools
 import re
+import sys
 from collections.abc import Iterable
 
 from phphinder_spark.analysis.porter2 import stem
@@ -33,6 +40,64 @@ STOPWORDS = dict(STOPWORDS_BY_LANG)
 STOPWORDS["en"] = STOPWORDS_EN
 
 
+def _word_ranges() -> list[tuple[int, int]]:
+    """Maximal code-point ranges of Python's ``\\w``: ``str.isalnum()``
+    or ``_``, from this interpreter's own Unicode tables."""
+    ranges: list[tuple[int, int]] = []
+    start = None
+    for c in range(sys.maxunicode + 2):
+        word = c <= sys.maxunicode and (chr(c).isalnum() or c == 0x5F)
+        if word and start is None:
+            start = c
+        elif not word and start is not None:
+            ranges.append((start, c - 1))
+            start = None
+    return ranges
+
+
+def _java_class(ranges: list[tuple[int, int]]) -> str:
+    """Java character-class body matching ``ranges``. A flat union is a
+    chain of range tests that a character outside it walks to the end
+    (~730 tests for ``\\w``), so groups of ranges nest as
+    ``[lo-hi&&[...]]``: a character outside a group's span skips the
+    group after one test."""
+
+    def x(c: int) -> str:
+        return f"\\x{{{c:X}}}"
+
+    fan = 8
+    if len(ranges) <= fan:
+        return "".join(x(a) if a == b else f"{x(a)}-{x(b)}" for a, b in ranges)
+    size = -(-len(ranges) // fan)
+    groups = [ranges[i : i + size] for i in range(0, len(ranges), size)]
+    return "".join(f"[{x(g[0][0])}-{x(g[-1][1])}&&[{_java_class(g)}]]" for g in groups)
+
+
+@functools.cache
+def _word_run_regex() -> str:
+    """Java regex of one ``\\w`` run, built from Python's tables rather
+    than Java's ``\\p{...}`` ones: the JVM and the interpreter can ship
+    different Unicode versions (Java 17: 13, Python 3.11: 14), and Java's
+    ``(?U)\\w`` also admits combining marks. ASCII is tested first."""
+    ranges = _word_ranges()
+    ascii_part = [(a, min(b, 0x7F)) for a, b in ranges if a <= 0x7F]
+    rest = [(max(a, 0x80), b) for a, b in ranges if b > 0x7F]
+    return (
+        f"[{_java_class(ascii_part)}"
+        f"[\\x{{80}}-\\x{{{sys.maxunicode:X}}}&&[{_java_class(rest)}]]]+"
+    )
+
+
+def _jvm_method(obj: object, method: str, spark_method: str):
+    """``obj``'s bound ``spark_method``, or None. It counts only when the
+    class that defines ``method`` defines it too: a subclass that
+    overrides ``apply`` (or ``allow``) alone has no JVM form."""
+    for klass in type(obj).__mro__:
+        if method in vars(klass):
+            return getattr(obj, spark_method) if spark_method in vars(klass) else None
+    return None
+
+
 class RegexTokenizer:
     """Split text on non-word runs; non-strings pass through whole."""
 
@@ -40,6 +105,13 @@ class RegexTokenizer:
         if not isinstance(text, str):
             return [text]
         return [t for t in _WORD_SPLIT.split(text) if t != ""]
+
+    def spark_tokens(self, text):
+        """JVM form of ``apply`` on a string column: the ``\\w`` runs,
+        which are exactly the non-empty pieces of the ``\\W+`` split."""
+        from pyspark.sql import functions as F
+
+        return F.regexp_extract_all(text, F.lit(_word_run_regex()), 0)
 
 
 class _Filtered:
@@ -52,6 +124,19 @@ class _Filtered:
     def _allowed(self, term: str) -> bool:
         return all(f.allow(term) for f in self.filters)
 
+    def _spark_allowed(self, term):
+        """JVM form of ``_allowed`` (a Column predicate), or None when a
+        filter has no JVM form."""
+        from pyspark.sql import functions as F
+
+        keep = F.lit(True)
+        for f in self.filters:
+            allow = _jvm_method(f, "allow", "spark_allow")
+            if allow is None:
+                return None
+            keep = keep & allow(term)
+        return keep
+
 
 class StopWordsFilter:
     def __init__(self, lang_iso: str = "en"):
@@ -60,6 +145,20 @@ class StopWordsFilter:
     def allow(self, term: str) -> bool:
         return term not in self.stop_words
 
+    def spark_allow(self, term):
+        # isin over more than a handful of literals plans as a hash-set
+        # lookup (InSet), not a scan of the list
+        from pyspark.sql import functions as F
+
+        if not self.stop_words:
+            return F.lit(True)
+        return ~term.isin(sorted(self.stop_words))
+
+
+# JVM default-locale languages whose case mapping differs from Python's
+# locale-free str.lower() (dotted/dotless i in tr/az, i + dot in lt)
+_LOCALE_CASED_LANGS = ("tr", "az", "lt")
+
 
 class LowerCaseTransformer(_Filtered):
     def apply(self, term: str) -> str | None:
@@ -67,12 +166,43 @@ class LowerCaseTransformer(_Filtered):
             return None
         return term.lower()
 
+    def spark_apply(self, term, spark):
+        """(lower(term), allowed) — or None where Spark's ``lower`` is
+        not Python's: with ``spark.sql.icu.caseMappings.enabled`` off it
+        is Java's, Unicode 13 with its own final-sigma context, and ICU
+        follows the JVM's default locale. Under ICU and a locale outside
+        ``_LOCALE_CASED_LANGS`` no Python word character lowers
+        differently (enumerated in tests/test_jvm_analysis.py). Applied
+        per token, after the split, as ``Analyzer.analyze`` does."""
+        from pyspark.sql import functions as F
+
+        icu = spark.conf.get("spark.sql.icu.caseMappings.enabled") == "true"
+        lang = spark._jvm.java.util.Locale.getDefault().getLanguage()
+        keep = self._spark_allowed(term)
+        if not icu or lang in _LOCALE_CASED_LANGS or keep is None:
+            return None
+        return F.lower(term), keep
+
 
 class SymbolTransformer(_Filtered):
     def apply(self, term: str) -> str | None:
         if not self._allowed(term):
             return None
         return _SYMBOL.sub("", term)
+
+    def spark_apply(self, term, spark):
+        """(the term's ASCII letters and digits, allowed and non-empty):
+        the result is empty exactly when the term has no ASCII letter or
+        digit, and ``Analyzer.analyze`` drops empty terms."""
+        from pyspark.sql import functions as F
+
+        keep = self._spark_allowed(term)
+        if keep is None:
+            return None
+        return (
+            F.regexp_replace(term, _SYMBOL.pattern, ""),
+            keep & term.rlike("[a-zA-Z0-9]"),
+        )
 
 
 # ISO code -> PyStemmer algorithm name, for languages WITHOUT a pinned
@@ -263,6 +393,32 @@ class Analyzer:
                 continue
             out.append((tok, pos))
         return out
+
+    def spark_analyze(self, df, text: str, *carry: str, unique: bool = False):
+        """``analyze`` of the string column ``df[text]`` as Column
+        expressions: (carry..., term, pos) per kept token, or None when a
+        piece of the chain has no JVM form in this session. Positions
+        come from ``posexplode`` over all tokens, before the chain drops
+        any, so a dropped token leaves a gap as in ``analyze``; a null
+        text has no tokens. A unique field is tokenized only (reference:
+        src/Index/AbstractStorage.php:114-119)."""
+        from pyspark.sql import functions as F
+
+        tokens = _jvm_method(self.tokenizer, "apply", "spark_tokens")
+        if tokens is None:
+            return None
+        term, keep = F.col("_tok"), F.lit(True)
+        for t in [] if unique else self.transformers:
+            apply = _jvm_method(t, "apply", "spark_apply")
+            step = None if apply is None else apply(term, df.sparkSession)
+            if step is None:
+                return None
+            # each step's predicate reads the step's input, as the
+            # Python chain's filters do
+            term, allowed = step
+            keep = keep & allowed
+        exploded = df.select(*carry, F.posexplode(tokens(F.col(text))).alias("pos", "_tok"))
+        return exploded.where(keep).select(*carry, term.alias("term"), "pos")
 
     def terms(self, text: object) -> list:
         return [t for t, _ in self.analyze(text)]

@@ -18,6 +18,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from phphinder_spark.functions.frames import local_frame
+
 LANGS = ["py", "php", "js", "go", "md"]
 
 HOT_TERMS = ["function", "return", "import", "class", "def", "value", "data"]
@@ -179,7 +181,8 @@ def load_text_corpus(
         if row["_part"] in hdr_summary:
             running_chapter = hdr_summary[row["_part"]]
 
-    off_df = spark.createDataFrame(
+    off_df = local_frame(
+        spark,
         [(p, line_off[p], carry[p]) for p in line_off],
         "_part int, _off long, _carry string",
     )
@@ -203,9 +206,7 @@ def load_text_corpus(
     for p in sorted(line_off):
         koff[p] = run
         run += kept_counts.get(p, 0)
-    koff_df = spark.createDataFrame(
-        [(p, koff[p]) for p in koff], "_part int, _koff long"
-    )
+    koff_df = local_frame(spark, [(p, koff[p]) for p in koff], "_part int, _koff long")
     return (
         kept.join(F.broadcast(koff_df), "_part")
         .withColumn("doc_id", (F.col("_koff") + F.col("_krn")).cast("long"))

@@ -23,6 +23,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
+from phphinder_spark.functions.frames import local_frame
 from phphinder_spark.functions.typo import levenshtein_distance_for_term
 from phphinder_spark.index import segments
 from phphinder_spark.index.builder import (
@@ -250,7 +251,8 @@ class SparkSearchEngine:
                 }
             )
             if keys:
-                kdf = self.spark.createDataFrame(
+                kdf = local_frame(
+                    self.spark,
                     [(k,) for k in keys],
                     T.StructType([T.StructField(uniq, self.schema.spark_type(uniq))]),
                 )
@@ -280,13 +282,14 @@ class SparkSearchEngine:
                     batch_by_uniq[key] = doc_id
             assigned.append((doc_id, doc))
 
-        struct = self.schema.to_struct_type()
+        # values take their declared types here, by the coercion the
+        # unique-key probe above uses
         data = [
-            tuple([doc_id] + [doc.get(f) for f in self.schema.fields])
+            (doc_id, *(self.schema.coerce_value(f, doc.get(f)) for f in self.schema.fields))
             for doc_id, doc in assigned
         ]
-        new_df = self.spark.createDataFrame(data, struct)
-        new_index = build_index(new_df.withColumn("doc_id", F.col("doc_id")), self.schema)
+        new_df = local_frame(self.spark, data, self.schema.to_struct_type())
+        new_index = build_index(new_df, self.schema)
 
         if self.storage.is_empty and self.index is not None:
             # index came from a bulk load (index_dataframe/from_index_dir):
@@ -358,7 +361,7 @@ class SparkSearchEngine:
 
         The source is widened to the session parallelism first when the
         input plan yields fewer partitions (a small corpus in one parquet
-        file scans as ONE split, serializing the analyzer UDF stage on a
+        file scans as ONE split, serializing the analysis stage on a
         single core — guide §2.5); at scale the guard is a no-op."""
         from phphinder_spark.functions.parallel import ensure_min_partitions
 
@@ -385,8 +388,8 @@ class SparkSearchEngine:
         if self.index is None:
             # reference searches over empty storage return no results
             # (src/SearchEngine.php:100-105 over a truncated index)
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double, rank int"
+            return local_frame(
+                self.spark, [], "query_id string, doc_id long, score double, rank int"
             )
         qmap = {phrase: self._bm25_terms(phrase) for phrase in phrases}
         source, df_by_term = self._bm25_source(field, {t for ts in qmap.values() for t in ts})
@@ -548,7 +551,7 @@ class SparkSearchEngine:
     # ------------------------------------------------------------------ read
 
     def _empty_matches(self) -> DataFrame:
-        return self.spark.createDataFrame([], _MATCH_SCHEMA)
+        return local_frame(self.spark, [], _MATCH_SCHEMA)
 
     def _field_pos_col(self) -> F.Column:
         labels = self._all_field_labels()
@@ -625,7 +628,7 @@ class SparkSearchEngine:
           query's grams, then length band + Levenshtein verify.
         """
         d = levenshtein_distance_for_term(t)
-        empty = self.spark.createDataFrame([], "doc_id long, field string")
+        empty = local_frame(self.spark, [], "doc_id long, field string")
         if d == 0:
             return empty
         cache = self._term_field_cache()
@@ -644,7 +647,8 @@ class SparkSearchEngine:
                 return self._postings_where(
                     F.col("term").isin(cand_terms) & F.col("field").isin(fields)
                 ).select("doc_id", "field")
-            cand = self.spark.createDataFrame(
+            cand = local_frame(
+                self.spark,
                 [(f, ct) for ct in cand_terms for f in fields if f in cache[ct]],
                 "field string, term string",
             )
@@ -844,7 +848,7 @@ class SparkSearchEngine:
             for p in parts[1:]:
                 rows = rows.unionByName(p)
         else:
-            rows = self.spark.createDataFrame([], "doc_id long, field string")
+            rows = local_frame(self.spark, [], "doc_id long, field string")
         out = self._attach(matches, rows, q.value, base_seq)
         ctx.events.append((ctx.next() * 1000, q.value))
         return out
@@ -1061,7 +1065,7 @@ class SparkSearchEngine:
                 T.StructField(f, self.schema.spark_type(f))
                 for f in self.schema.stored_fields
             ]
-            return self.spark.createDataFrame([], T.StructType(fields))
+            return local_frame(self.spark, [], T.StructType(fields))
         query = QueryParser(ANY_FIELD).parse(phrase)
         ctx = _Ctx()
         ctx.term_hits = self._prefetch_term_hits(query)
@@ -1256,7 +1260,7 @@ class SparkSearchEngine:
             strategy = "blockmax" if self._store is not None else "exhaustive"
         if self.index is None:
             # reference searches over empty storage return no results
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, [], "doc_id long, score double")
         terms = self._bm25_terms(phrase)
         source, df_by_term = self._bm25_source(field, set(terms))
         if strategy == "blockmax" and source is self._store:

@@ -4,11 +4,16 @@ src/SearchEngine.php:53-63 + src/Index/AbstractStorage.php:108-128).
 
 One declarative dataflow per indexed field:
 
-    docs --pandas-UDF analyze--> (doc_id, field, term, pos)
+    docs --analyze--> (doc_id, field, term, pos)
          --groupBy(field, term, doc_id)--> postings (tf, positions)
 
-All tokenization/transformation runs in Arrow-vectorized pandas UDFs
-(input_hint: no per-row Python UDFs); posting aggregation is a hash
+A chain that Spark can express (``Analyzer.spark_analyze``: the regex
+tokenizer with lowercase, stopword and symbol steps, every unique field
+and every ``#raw`` shadow field) is analyzed by Column expressions in
+the JVM: token regex, ``posexplode``, then the per-token chain, so no
+Python worker starts. Any other chain (stemmers, a user's own
+transformer) runs in one Arrow-vectorized pandas UDF per field
+(input_hint: no per-row Python UDFs). Posting aggregation is a hash
 aggregate with map-side partial combine, so hot terms ("function",
 "return") do NOT skew this stage — doc_id is part of the grouping key.
 At scale the bare (field, term) dictionary is not re-aggregated from
@@ -27,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from phphinder_spark.analysis import Analyzer
+from phphinder_spark.functions.frames import local_frame
 from phphinder_spark.schema import SearchSchema
 
 _ANALYZED_TYPE = T.ArrayType(
@@ -40,25 +46,12 @@ _ANALYZED_TYPE = T.ArrayType(
 
 
 def _analyze_udf(analyzer: Analyzer, unique: bool):
-    """Arrow-vectorized analyzer: Series[str] -> Series[list[(term, pos)]].
+    """Arrow-vectorized analyzer for a chain with no JVM form:
+    Series[str] -> Series[list[(term, pos)]].
 
     Unique fields bypass the transformer chain (reference:
     src/Index/AbstractStorage.php:114-119) but are still tokenized.
-    A lowercase-only chain takes a fast path (single regex split of the
-    pre-lowered string — identical output, ~2x fewer Python ops/token).
     """
-    from phphinder_spark.analysis.analyzers import (
-        LowerCaseTransformer,
-        _WORD_SPLIT,
-    )
-
-    lowercase_only = (
-        not unique
-        and len(analyzer.transformers) == 1
-        and type(analyzer.transformers[0]) is LowerCaseTransformer
-        and not analyzer.transformers[0].filters
-        and type(analyzer.tokenizer).__name__ == "RegexTokenizer"
-    )
 
     def analyze_batch(s: pd.Series) -> pd.Series:
         if unique:
@@ -67,17 +60,6 @@ def _analyze_udf(analyzer: Analyzer, unique: bool):
                 if v is None
                 else [(str(t), i) for i, t in enumerate(analyzer.tokenizer.apply(v))]
             )
-        if lowercase_only:
-            split = _WORD_SPLIT.split
-
-            def fast(v):
-                if v is None:
-                    return []
-                return [
-                    (t, i) for i, t in enumerate(tk for tk in split(v.lower()) if tk)
-                ]
-
-            return s.map(fast)
         return s.map(
             lambda v: []
             if v is None
@@ -126,8 +108,8 @@ def tokenize_field(
     unique: bool = False,
     label: str | None = None,
 ) -> DataFrame:
-    """(doc_id, <field>) -> exploded (doc_id, field, term, pos)."""
-    col = df[field]
+    """(doc_id, <field>) -> exploded (doc_id, field, term, pos): in the
+    JVM when the chain has a Spark form, else through the pandas UDF."""
     label = label or field
     if dict(df.dtypes).get(field) not in ("string",):
         # non-strings pass through as one whole token (reference:
@@ -137,21 +119,17 @@ def tokenize_field(
             .select(
                 "doc_id",
                 F.lit(label).alias("field"),
-                col.cast("string").alias("term"),
+                F.col(field).cast("string").alias("term"),
                 F.lit(0).alias("pos"),
             )
         )
-    udf = _analyze_udf(analyzer, unique)
-    return (
-        df.select("doc_id", udf(col).alias("toks"))
-        .select("doc_id", F.explode("toks").alias("tk"))
-        .select(
-            "doc_id",
-            F.lit(label).alias("field"),
-            F.col("tk.term").alias("term"),
-            F.col("tk.pos").alias("pos"),
+    toks = analyzer.spark_analyze(df, field, "doc_id", unique=unique)
+    if toks is None:
+        toks = (
+            df.select("doc_id", F.explode(_analyze_udf(analyzer, unique)(df[field])).alias("tk"))
+            .select("doc_id", F.col("tk.term").alias("term"), F.col("tk.pos").alias("pos"))
         )
-    )
+    return toks.select("doc_id", F.lit(label).alias("field"), "term", "pos")
 
 
 def build_postings(df: DataFrame, schema: SearchSchema) -> DataFrame:
@@ -173,8 +151,8 @@ def build_postings(df: DataFrame, schema: SearchSchema) -> DataFrame:
             tokenize_field(df, field, raw_analyzer, label=field + SHADOW_SUFFIX)
         )
     if not parts:
-        spark = df.sparkSession
-        return spark.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [],
             "field string, term string, doc_id long, tf long, positions array<int>",
         )

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from phphinder_spark.functions.frames import local_frame
+
 
 def phrase_candidates(
     postings: DataFrame, analyzed_terms: list[tuple[str, int]], field: str
@@ -30,7 +32,7 @@ def phrase_candidates(
     is one aggregation on (doc_id, anchor)."""
     spark = postings.sparkSession
     if not analyzed_terms:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     base = analyzed_terms[0][1]
     # every (term, offset) SLOT must align to the same anchor — counting
     # distinct terms alone over-matches phrases with repeated tokens
@@ -80,7 +82,7 @@ def fulltext_candidates(
     spark = postings.sparkSession
     n = len(analyzed_terms)
     if n == 0:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     fp = postings.where(F.col("field") == field)
     if n == 1:
         # single-token phrase: both sides may extend, so the only index

@@ -51,6 +51,8 @@ from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from phphinder_spark.functions.frames import local_frame
+
 
 class IndexStorage(ABC):
     """Transactional owner of the (docs, postings) relations."""
@@ -118,10 +120,19 @@ class MemoryStorage(IndexStorage):
             if drop:
                 keep_docs = keep_docs.where(~F.col("doc_id").isin(drop))
                 keep_post = keep_post.where(~F.col("doc_id").isin(drop))
-            docs = keep_docs.unionByName(new_docs)
-            postings = keep_post.unionByName(new_postings)
+            docs = self._bounded(keep_docs.unionByName(new_docs), self._docs)
+            postings = self._bounded(keep_post.unionByName(new_postings), self._postings)
         self._docs = docs.localCheckpoint(eager=True)
         self._postings = postings.localCheckpoint(eager=True)
+
+    def _bounded(self, merged: DataFrame, base: DataFrame) -> DataFrame:
+        """``merged`` coalesced to the base's partition count, or to the
+        session parallelism when that is higher. A batch built from
+        driver rows is small, so the anti-joins broadcast it and keep
+        the base's partitions; without the bound every flush would add
+        the batch's partitions, and tasks to every later query."""
+        sc = self.spark.sparkContext
+        return merged.coalesce(max(base.rdd.getNumPartitions(), sc.defaultParallelism))
 
     def truncate(self) -> None:
         self._docs = None
@@ -247,7 +258,8 @@ class ParquetSnapshotStorage(IndexStorage):
             del_df = new_docs.select("doc_id")
             if replaced_doc_ids:
                 del_df = del_df.unionByName(
-                    self.spark.createDataFrame(
+                    local_frame(
+                        self.spark,
                         [(int(i),) for i in sorted(set(replaced_doc_ids))],
                         "doc_id long",
                     )

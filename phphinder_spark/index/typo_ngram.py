@@ -18,9 +18,9 @@ tests/test_typo_ngram.py).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from phphinder_spark.functions.frames import local_frame
 from phphinder_spark.functions.typo import levenshtein_distance_for_term
 
 
@@ -30,17 +30,23 @@ def term_ngrams(term: str, n: int = 2) -> list[str]:
     return list({term[i : i + n] for i in range(len(term) - n + 1)})
 
 
+def ngrams_col(term: Column, n: int = 2) -> Column:
+    """JVM form of ``term_ngrams`` on a string column. Spark's ``length``
+    and ``substring`` count code points, as Python's ``len`` and slicing
+    do, so non-BMP terms give the same grams."""
+    grams = F.transform(
+        F.sequence(F.lit(1), F.length(term) - (n - 1)),
+        lambda i: F.substring(term, i, F.lit(n)),
+    )
+    return F.when(F.length(term) < n, F.array(term)).otherwise(F.array_distinct(grams))
+
+
 def build_ngram_index(dict_df: DataFrame, n: int = 2) -> DataFrame:
     """(field, term) dictionary -> (gram, field, term, term_len) posting
     index over terms. Built once per index; partitioned by gram at scale."""
-
-    @F.pandas_udf("array<string>")
-    def grams_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: term_ngrams(t, n))
-
     return (
         dict_df.select("field", "term")
-        .withColumn("gram", F.explode(grams_udf(F.col("term"))))
+        .withColumn("gram", F.explode(ngrams_col(F.col("term"), n)))
         .withColumn("term_len", F.length("term"))
     )
 
@@ -82,7 +88,7 @@ def typo_candidate_terms(
     spark = ngram_index.sparkSession
     d = levenshtein_distance_for_term(query_term)
     if d == 0:
-        return spark.createDataFrame([], "field string, term string")
+        return local_frame(spark, [], "field string, term string")
     grams = term_ngrams(query_term, n)
     return (
         ngram_index.where(

@@ -28,6 +28,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from phphinder_spark.functions.frames import local_frame
+
 ANY_FIELD = "*"
 
 
@@ -196,7 +198,7 @@ def bm25_topk(
                 "chunk_skip_fraction": skip, **extra}
 
     if not rows:
-        empty = source.spark.createDataFrame([], "doc_id long, score double")
+        empty = local_frame(source.spark, [], "doc_id long, score double")
         return empty, metrics(float("-inf"), 0, 0)
     dfreq = _chunk_df(rows)
     if not prune:
@@ -262,13 +264,13 @@ def bm25_topk_batch(
     # as the single-query kernel, which dedups its terms)
     pairs = sorted({(qid, str(t)) for qid, ts in queries.items() for t in ts})
     if not pairs:
-        return source.spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int"
+        return local_frame(
+            source.spark, [], "query_id string, doc_id long, score double, rank int"
         )
     terms = sorted({t for _, t in pairs})
     if source.df_from_chunk_rows:
         df_by_term = _chunk_df(source.chunk_rows(field, terms))
-    qdf = source.spark.createDataFrame(pairs, "query_id string, term string")
+    qdf = local_frame(source.spark, pairs, "query_id string, term string")
     scored = (
         _contributions(source, field, terms, df_by_term, k1, b)
         .join(F.broadcast(qdf), "term")

@@ -459,6 +459,32 @@ def test_segment_encode_plan_runs_no_python(warm_engine):
     assert not [n for n in PYTHON_NODES if n in plan], plan
 
 
+@pytest.mark.parametrize("stopwords", [False, True], ids=["lowercase", "lowercase+stopwords"])
+def test_build_plans_run_no_python(spark, stopwords):
+    """Index-time analysis (with the ``#raw`` shadow rows of the
+    stopword chain) and the n-gram index are Column expressions: neither
+    the postings plan nor the n-gram plan holds a Python-worker node."""
+    from phphinder_spark.analysis import Analyzer, LowerCaseTransformer, StopWordsFilter
+    from phphinder_spark.corpus import make_row
+    from phphinder_spark.functions.frames import local_frame
+    from phphinder_spark.index.builder import build_postings
+    from phphinder_spark.index.typo_ngram import build_ngram_index
+
+    filters = [StopWordsFilter("en")] if stopwords else []
+    schema = code_schema(Analyzer(transformers=[LowerCaseTransformer("en", filters)]))
+    docs = local_frame(
+        spark,
+        [(i + 1, *make_row(i, 9, 40)) for i in range(40)],
+        schema.to_struct_type(),
+    )
+    postings = build_postings(docs, schema)
+    shadows = postings.where(F.col("field") == "content#raw").limit(1).count()
+    assert shadows == int(stopwords)
+    for plan in (formatted_plan(postings), formatted_plan(build_ngram_index(dictionary(postings)))):
+        assert "Generate" in plan
+        assert not [n for n in PYTHON_NODES if n in plan], plan
+
+
 # ------------------------------------------------------------ BM25 field
 
 

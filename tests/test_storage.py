@@ -23,15 +23,21 @@ def test_memory_storage_flush_plan_depth_is_bounded(spark):
     eng = SparkSearchEngine(spark, make_test_schema())
     eng.add_document(_doc(1, "seed words"))
     eng.flush()
-    depths = []
+    depths, parts = [], []
     for k in range(6):
         eng.add_document(_doc(100 + k, f"batch {k} words"))
         eng.add_document(_doc(1, f"rewrite {k} cat"))  # replace every round
         eng.flush()
         plan = eng.index.docs._jdf.queryExecution().optimizedPlan().toString()
         depths.append(plan.count("\n"))
-    # lineage is cut at every commit: plan depth must NOT grow with flushes
+        parts.append(
+            (eng.storage.docs().rdd.getNumPartitions(), eng.storage.postings().rdd.getNumPartitions())
+        )
+    # lineage is cut at every commit: plan depth must NOT grow with flushes,
+    # and neither may the partition count every later query runs tasks for
     assert max(depths) == min(depths), depths
+    bound = spark.sparkContext.defaultParallelism
+    assert all(d <= bound and p <= bound for d, p in parts), parts
     # correctness after 6 replacement rounds: last write wins, one row
     rows = eng.index.docs.where(F.col("_id") == 1).collect()
     assert len(rows) == 1 and rows[0]["text"] == "rewrite 5 cat"
