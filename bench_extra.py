@@ -14,6 +14,7 @@ Prints one JSON object (indented; this file's output is not driver-parsed).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -138,10 +139,8 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             with open(
                 os.path.join(args.explain_dir, f"{name}_{args.suffix}.txt"), "w"
-            ) as fh:
-                fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                ))
+            ) as fh, contextlib.redirect_stdout(fh):
+                df.explain(mode="formatted")
 
     result = {
         "sf": sf_dir,

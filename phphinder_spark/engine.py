@@ -27,10 +27,12 @@ from phphinder_spark.functions.frames import local_frame
 from phphinder_spark.functions.typo import levenshtein_distance_for_term
 from phphinder_spark.index import segments
 from phphinder_spark.index.builder import (
+    POSTINGS_DDL,
     SHADOW_SUFFIX,
     InvertedIndex,
     build_index,
-    build_postings,
+    index_stats,
+    postings_of_rows,
 )
 from phphinder_spark.index.segments import SegmentStore, decode_segments
 from phphinder_spark.query import (
@@ -200,9 +202,7 @@ class SparkSearchEngine:
         self._max_id = 0
         self._drop_index_state()
         if not self.storage.is_empty:
-            self.index = InvertedIndex(
-                self.schema, self.storage.docs(), self.storage.postings()
-            ).cache()
+            self.index = self._storage_index()
             self._max_id = -1
 
     # ------------------------------------------------------------------ write
@@ -218,7 +218,23 @@ class SparkSearchEngine:
     def flush(self) -> None:
         """Assign ids, upsert docs + postings (reference flush,
         src/SearchEngine.php:53-63; unique-field replacement semantics of
-        :69-82 — old doc's id is reused, its postings removed)."""
+        :69-82 — old doc's id is reused, its postings removed).
+
+        The driver-side work is bounded by the batch: the batch's
+        postings are analysed on the driver (``postings_of_rows``; no
+        Spark plan, no Python worker), the replaced documents' old
+        postings come back in one filtered read, and the driver state —
+        the term dictionary, ``_dict_size``, the BM25 stats and the
+        ``#raw`` probes — is updated in place by that delta instead of
+        being dropped. The first query after a flush therefore plans with
+        the jobs of a steady one. The storage commit is not bounded by
+        the batch: ``MemoryStorage`` still rewrites each relation once
+        per flush (see its docstring).
+
+        With ``MemoryStorage`` a flush releases the previous snapshot's
+        blocks, so a DataFrame returned before the flush (``search_df``,
+        ``search_topk_bm25``) must be run before it: run after it, it may
+        fail."""
         if not self._buffer:
             return
         self._ensure_max_id()
@@ -236,9 +252,10 @@ class SparkSearchEngine:
         replaced_ids: list[int] = []
         existing_by_uniq: dict[Any, int] = {}
         if uniq and self.index is not None:
-            # probe by broadcast-joining the batch's keys against the index —
-            # the collected result is bounded by the BATCH size, never the
-            # index size (reference getUniqueDocument probe, scale-correct)
+            # probe with the batch's keys as an IN-list — the collected
+            # result is bounded by the BATCH size, never the index size
+            # (reference getUniqueDocument probe, scale-correct), and a
+            # literal list needs no broadcast job of its own.
             # coerce to the declared key type: the collected index values are
             # post-ingest-coercion, so an int passed for a string-typed key
             # must probe as its string form (verified end-to-end: without
@@ -251,14 +268,9 @@ class SparkSearchEngine:
                 }
             )
             if keys:
-                kdf = local_frame(
-                    self.spark,
-                    [(k,) for k in keys],
-                    T.StructType([T.StructField(uniq, self.schema.spark_type(uniq))]),
-                )
                 existing_by_uniq = {
                     r[uniq]: r["doc_id"]
-                    for r in self.index.docs.join(F.broadcast(kdf), uniq, "left_semi")
+                    for r in self.index.docs.where(F.col(uniq).isin(keys))
                     .select(uniq, "doc_id")
                     .collect()
                 }
@@ -284,39 +296,132 @@ class SparkSearchEngine:
 
         # values take their declared types here, by the coercion the
         # unique-key probe above uses
-        data = [
-            (doc_id, *(self.schema.coerce_value(f, doc.get(f)) for f in self.schema.fields))
+        batch = [
+            {"doc_id": doc_id, **{f: self.schema.coerce_value(f, doc.get(f)) for f in self.schema.fields}}
             for doc_id, doc in assigned
         ]
-        new_df = local_frame(self.spark, data, self.schema.to_struct_type())
-        new_index = build_index(new_df, self.schema)
-
+        replaced = sorted(set(replaced_ids))
+        added = postings_of_rows(self.schema, batch)
+        removed = self._postings_of_docs(replaced).collect() if replaced else []
         if self.storage.is_empty and self.index is not None:
             # index came from a bulk load (index_dataframe/from_index_dir):
-            # seed the storage with it so the MERGE commit has a base
-            self.storage.commit(self.index.docs, self.index.postings, [])
-        self.storage.commit(new_index.docs, new_index.postings, sorted(set(replaced_ids)))
+            # it becomes the storage's base for the MERGE commit
+            self.storage.seed(self.index.docs, self.index.postings, self.index.doclens)
+        self.storage.commit(
+            local_frame(
+                self.spark,
+                [tuple(d.values()) for d in batch],
+                self.schema.to_struct_type(),
+            ),
+            local_frame(self.spark, added, POSTINGS_DDL),
+            # the replaced ids are reused by the batch, so its ids are
+            # exactly the ones whose earlier rows it supersedes
+            [d["doc_id"] for d in batch],
+        )
+        self._update_dictionary(removed, added)
+        stats = self._updated_stats(removed, added, len(batch) - len(replaced))
         self._refresh_index()
+        self.index._stats = stats
+
+    def _postings_of_docs(self, ids: list[int]) -> DataFrame:
+        """(field, term, doc_id, tf) rows of the documents ``ids``. In
+        segment serving only the segment rows whose doc id range and
+        array hold one of the ids are decoded, never the whole store."""
+        cond = F.col("doc_id").isin(ids)
+        if self._store is not None:
+            seg = self._store.segments.where(
+                (F.col("min_doc") <= max(ids))
+                & (F.col("max_doc") >= min(ids))
+                & F.arrays_overlap("doc_ids", F.array(*(F.lit(i).cast("long") for i in ids)))
+            )
+            return decode_segments(seg, with_positions=False).where(cond).drop("positions")
+        return self.index.postings.where(cond).select("field", "term", "doc_id", "tf")
+
+    def _update_dictionary(self, removed: list, added: list) -> None:
+        """Apply a flush's delta to the driver dictionary: df -1 per old
+        posting row of a replaced doc, +1 per batch row; shadow fields are
+        not dictionary terms, and entries that reach 0 go. A dictionary
+        not yet collected stays so (the next query collects the new
+        index's); one the flush grows over the cap is dropped, as the
+        collect would have been."""
+        cache = self._tf_cache
+        if cache is None:
+            return
+        for sign, rows in ((-1, removed), (1, added)):
+            for f, t, *_ in rows:
+                if f.endswith(SHADOW_SUFFIX):
+                    continue
+                fields = cache.setdefault(t, {})
+                df = fields.get(f, 0) + sign
+                if df == 0:
+                    del fields[f]
+                    self._dict_size -= 1
+                    if not fields:
+                        del cache[t]
+                else:
+                    if f not in fields:
+                        self._dict_size += 1
+                    fields[f] = df
+        if self._dict_size > _DICT_DRIVER_CACHE_MAX:
+            self._tf_cache = None
+
+    def _updated_stats(self, removed: list, added: list, new_docs: int) -> dict | None:
+        """The index's BM25 stats after a flush's delta: ``n_docs`` plus
+        the new documents, and per field the (sum of dl, docs) pair minus
+        the replaced docs' lengths plus the batch's. None when the stats
+        were not counted yet, or were read without the per-field sums
+        (``from_index_dir``): the new index then counts them once."""
+        st = self.index._stats if self.index is not None else None
+        if st is None or "dl" not in st:
+            return None
+        dl = dict(st["dl"])
+        for sign, rows in ((-1, removed), (1, added)):
+            lens: dict[tuple[int, str], int] = {}
+            for f, _t, d, tf, *_ in rows:
+                lens[(d, f)] = lens.get((d, f), 0) + tf
+            for (_d, f), n in lens.items():
+                s, c = dl.get(f, (0, 0))
+                dl[f] = (s + sign * n, c + sign)
+        return index_stats(
+            st["n_docs"] + new_docs, {f: v for f, v in dl.items() if v[1]}
+        )
+
+    def _storage_index(self) -> InvertedIndex:
+        """The index over the storage's current snapshot: resident
+        storage frames as they are, others cached."""
+        idx = InvertedIndex(
+            self.schema,
+            self.storage.docs(),
+            self.storage.postings(),
+            self.storage.doclens(),
+            resident=self.storage.resident,
+        )
+        return idx if idx.resident else idx.cache()
 
     def _refresh_index(self) -> None:
-        """Re-open the index over the storage's current snapshot. The plan
-        depth is bounded by the STORAGE (lineage-cut checkpoint or snapshot
-        files), not by the number of flushes since startup."""
+        """Re-open the index over the storage's current snapshot and
+        release the previous index's caches, a bulk load's included. The
+        plan depth is bounded by the STORAGE (lineage-cut checkpoint or
+        snapshot files), not by the number of flushes since startup. The
+        driver dictionary and ``#raw`` probes stay (``flush`` keeps them
+        current); postings access stops routing through a segment store,
+        since the storage now owns the index."""
         if self.index is not None:
             self.index.unpersist()
-        self.index = InvertedIndex(
-            self.schema, self.storage.docs(), self.storage.postings()
-        ).cache()
-        self._drop_index_state()
+        if self._source_df is not None:
+            self._source_df.unpersist()
+            self._source_df = None
+        self.index = self._storage_index()
+        self._store = None
 
     def _drop_index_state(self) -> None:
-        """Forget everything derived from the previous index: the
+        """Forget everything derived from a previous index, for a new
+        index that does not derive from it (bulk load, truncate): the
         driver-side term -> {field: df} dictionary and its row count (see
         ``_term_field_cache``; None = too big or not yet attempted —
         _tf_cache_tried disambiguates), the <field>#raw presence probes,
-        and the segment store. A flush or rebuild hands the index to the
-        storage, so postings access must stop routing through the (now
-        stale) store."""
+        and the segment store. A flush does not call it: it updates that
+        state in place (``flush``)."""
         self._tf_cache: dict[str, dict[str, int]] | None = None
         self._dict_size = 0
         self._tf_cache_tried = False
@@ -383,7 +488,8 @@ class SparkSearchEngine:
     ) -> DataFrame:
         """Batched BM25 top-k: all queries share one plan/job — the
         throughput path (per-query jobs pay fixed scheduler latency).
-        Returns (query_id = the phrase, doc_id, score, rank)."""
+        Returns (query_id = the phrase, doc_id, score, rank). Lazy like
+        ``search_topk_bm25``: run it before the next ``flush``."""
         field = self._bm25_field(field)
         if self.index is None:
             # reference searches over empty storage return no results
@@ -483,12 +589,18 @@ class SparkSearchEngine:
             # full-decode view: ONLY the correctness fallback for access
             # paths not routed through the segment helpers (none in the
             # query engine; kept so index.postings stays a valid DataFrame)
-            idx = InvertedIndex(schema, docs, decode_segments(store.segments))
-            idx.doclens, st = store.doclens, store.stats
+            idx = InvertedIndex(
+                schema, docs, decode_segments(store.segments), store.doclens
+            )
+            st = store.stats
         else:
             store = None
-            idx = InvertedIndex(schema, docs, spark.read.parquet(f"{out_dir}/postings"))
-            idx.doclens = spark.read.parquet(f"{out_dir}/doclens")
+            idx = InvertedIndex(
+                schema,
+                docs,
+                spark.read.parquet(f"{out_dir}/postings"),
+                spark.read.parquet(f"{out_dir}/doclens"),
+            )
             with open(f"{out_dir}/stats.json") as fh:
                 st = json.load(fh)
         idx._stats = {"n_docs": st["n_docs"], "avgdl": st["avgdl"]}
@@ -728,16 +840,17 @@ class SparkSearchEngine:
             return False
         if self._store is not None:
             return True
-        # memory mode: scan iff the stored corpus is cached in memory
-        # (index_dataframe/flush paths cache it; from_index_dir(postings)
-        # leaves docs on parquet, where the prefilter avoids re-reading
-        # the whole text column per query). Caveat: useMemory reflects the
-        # DECLARED storage level from the moment .cache() is called, not
-        # the materialized/non-evicted fraction — a mostly-evicted or
+        # memory mode: scan iff the stored corpus sits in executor memory
+        # (index_dataframe caches it, MemoryStorage's checkpoints hold it,
+        # other storages' frames are cached after a flush);
+        # from_index_dir(postings) leaves docs on parquet, where the
+        # prefilter avoids re-reading the whole text column per query.
+        # Caveat: residency is the DECLARED placement, not the
+        # materialized/non-evicted fraction — a mostly-evicted or
         # disk-spilled cache still routes to the scan path and re-reads
         # cold data per query; callers with eviction pressure should pin
         # phrase_strategy='index' (the cold-storage plan) explicitly.
-        return not self.index.docs.storageLevel.useMemory
+        return not self.index.resident
 
     def _phrase_postings_src(self, analyzed: list[tuple[str, int]], label: str) -> DataFrame:
         """Postings source for the fulltext prefilter, pre-filtered to the
@@ -1050,7 +1163,13 @@ class SparkSearchEngine:
 
     def search_df(self, phrase: str) -> DataFrame:
         """Full reference semantics; returns (doc_id, terms, fields,
-        fulltext, weight, <stored fields>) ordered like the reference."""
+        fulltext, weight, <stored fields>) ordered like the reference.
+
+        The frame is lazy and reads the index snapshot it was planned
+        over: with the default ``MemoryStorage`` a later ``flush``
+        releases that snapshot's blocks, and running the frame after it
+        may fail ("Checkpoint block ... not found"). Run it before
+        flushing."""
         if self.index is None:
             # reference searches over empty storage return no results;
             # stored columns keep their DECLARED types so unions with
@@ -1249,7 +1368,13 @@ class SparkSearchEngine:
         cached-scan scoring locally) and blockmax in segment-serving
         mode, where skipped chunks are posting arrays never read
         (measured: at worst ~15% over exhaustive on a layout with nothing
-        to skip, 1.6-1.7x ahead on clustered layouts — BENCH.md)."""
+        to skip, 1.6-1.7x ahead on clustered layouts — BENCH.md).
+
+        The frame is lazy and reads the index snapshot it was planned
+        over: with the default ``MemoryStorage`` a later ``flush``
+        releases that snapshot's blocks, and running the frame after it
+        may fail ("Checkpoint block ... not found"). Run it before
+        flushing."""
         if strategy not in ("auto", "exhaustive", "blockmax"):
             raise ValueError(
                 "strategy must be 'auto', 'exhaustive' or 'blockmax', "

@@ -21,19 +21,35 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# logical plan nodes whose partition count is known without a job
+_SCAN_ONLY_NODES = {
+    "Project", "Filter", "SubqueryAlias", "LogicalRelation",
+    "LocalRelation", "LogicalRDD", "Range", "DataSourceV2ScanRelation",
+}
+
+
+def _scan_only(df: DataFrame) -> bool:
+    """True when every node of ``df``'s optimized plan is a scan, a
+    projection or a filter."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() not in _SCAN_ONLY_NODES:
+            return False
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return True
+
 
 def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame:
     """Round-robin repartition ``df`` to ``target`` partitions (default:
-    the session's ``sparkContext.defaultParallelism``) iff its current
-    plan yields fewer; otherwise return ``df`` unchanged."""
+    the session's ``sparkContext.defaultParallelism``) iff it is a
+    scan-only plan that yields fewer; otherwise return ``df`` unchanged.
+    Starts no Spark job."""
     sc = df.sparkSession.sparkContext
     n_target = int(target or sc.defaultParallelism)
-    if n_target <= 1:
+    if n_target <= 1 or not _scan_only(df):
         return df
-    try:
-        n_now = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if n_now >= n_target:
+    if df.rdd.getNumPartitions() >= n_target:
         return df
     return df.repartition(n_target)

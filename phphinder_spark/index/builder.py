@@ -44,6 +44,8 @@ _ANALYZED_TYPE = T.ArrayType(
     )
 )
 
+POSTINGS_DDL = "field string, term string, doc_id long, tf long, positions array<int>"
+
 
 def _analyze_udf(analyzer: Analyzer, unique: bool):
     """Arrow-vectorized analyzer for a chain with no JVM form:
@@ -151,11 +153,7 @@ def build_postings(df: DataFrame, schema: SearchSchema) -> DataFrame:
             tokenize_field(df, field, raw_analyzer, label=field + SHADOW_SUFFIX)
         )
     if not parts:
-        return local_frame(
-            df.sparkSession,
-            [],
-            "field string, term string, doc_id long, tf long, positions array<int>",
-        )
+        return local_frame(df.sparkSession, [], POSTINGS_DDL)
     tokens = parts[0]
     for p in parts[1:]:
         tokens = tokens.unionByName(p)
@@ -165,9 +163,68 @@ def build_postings(df: DataFrame, schema: SearchSchema) -> DataFrame:
     )
 
 
+def _whole_token(value) -> str:
+    """A non-string value as the one token Spark's ``cast("string")``
+    makes of it: booleans in lower case, doubles by the driver JVM's
+    ``Double.toString``, the function the cast calls."""
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, float):
+        from pyspark import SparkContext
+
+        return SparkContext._active_spark_context._jvm.java.lang.Double.toString(value)
+    return str(value)
+
+
+def postings_of_rows(schema: SearchSchema, rows: list[dict]) -> list[tuple]:
+    """``build_postings`` of driver rows, computed on the driver:
+    (field, term, doc_id, tf, positions) tuples. Rows carry ``doc_id``
+    and values already coerced to the schema's types. String fields go
+    through ``Analyzer.analyze`` (the tokenizer alone for the unique
+    field), other values are one whole token, and ``#raw`` shadow fields
+    take the lowercase chain — the same terms and positions the Spark
+    build makes (pinned equal in tests/test_jvm_analysis.py)."""
+    acc: dict[tuple, list[int]] = {}
+    analyzer = schema.analyzer
+    raw = Analyzer.lowercase_only()
+    for row in rows:
+        doc_id = row["doc_id"]
+        for f in schema.indexed_fields:
+            v = row.get(f)
+            if v is None:
+                continue
+            if schema.types[f] != "string":
+                toks = [(_whole_token(v), 0)]
+            elif schema.is_unique(f):
+                toks = [(str(t), i) for i, t in enumerate(analyzer.tokenizer.apply(v))]
+            else:
+                toks = [(str(t), p) for t, p in analyzer.analyze(v)]
+            for t, p in toks:
+                acc.setdefault((f, t, doc_id), []).append(p)
+        for f in shadow_fields(schema):
+            v = row.get(f)
+            if v is None or schema.types[f] != "string":
+                continue
+            for t, p in raw.analyze(v):
+                acc.setdefault((f + SHADOW_SUFFIX, str(t), doc_id), []).append(p)
+    return [(f, t, d, len(ps), sorted(ps)) for (f, t, d), ps in acc.items()]
+
+
 def build_doclens(postings: DataFrame) -> DataFrame:
     """(doc_id, field, dl) — post-analysis token counts for BM25."""
     return postings.groupBy("doc_id", "field").agg(F.sum("tf").alias("dl"))
+
+
+def index_stats(n_docs: int, dl: dict[str, tuple[int, int]]) -> dict:
+    """BM25 corpus stats from the document count and, per field, the
+    (sum of dl, number of docs with the field) pair. One formula for
+    ``InvertedIndex.stats`` and for the stats a flush maintains, so both
+    give bit-identical scores."""
+    return {
+        "n_docs": n_docs,
+        "avgdl": {f: s / n for f, (s, n) in dl.items()},
+        "dl": dl,
+    }
 
 
 def dictionary(postings: DataFrame) -> DataFrame:
@@ -176,13 +233,25 @@ def dictionary(postings: DataFrame) -> DataFrame:
 
 
 class InvertedIndex:
-    """In-memory (cached-DataFrame) index: docs + postings + stats."""
+    """Index relations: docs + postings + doclens, and the BM25 stats.
 
-    def __init__(self, schema: SearchSchema, docs: DataFrame, postings: DataFrame):
+    ``resident`` says whether docs and postings sit in executor memory:
+    cached here, or materialised by the storage that owns them
+    (``MemoryStorage``). Phrase routing keys on it."""
+
+    def __init__(
+        self,
+        schema: SearchSchema,
+        docs: DataFrame,
+        postings: DataFrame,
+        doclens: DataFrame | None = None,
+        resident: bool = False,
+    ):
         self.schema = schema
         self.docs = docs
         self._postings = postings
-        self.doclens = build_doclens(postings)
+        self.doclens = build_doclens(postings) if doclens is None else doclens
+        self.resident = resident
         self._dict = None
         self._ngram = None
         self._stats = None
@@ -221,16 +290,22 @@ class InvertedIndex:
         return self._ngram
 
     def stats(self) -> dict:
+        """``index_stats`` of the docs count and the doclens sums per
+        field; counted once, or handed over by a flush that maintained
+        them (``SparkSearchEngine.flush``)."""
         if self._stats is None:
             n = self.docs.count()
-            avgdl = {
-                r["field"]: r["avgdl"]
-                for r in self.doclens.groupBy("field").agg(F.avg("dl").alias("avgdl")).collect()
+            dl = {
+                r["field"]: (int(r["s"]), int(r["n"]))
+                for r in self.doclens.groupBy("field")
+                .agg(F.sum("dl").alias("s"), F.count("*").alias("n"))
+                .collect()
             }
-            self._stats = {"n_docs": n, "avgdl": avgdl}
+            self._stats = index_stats(n, dl)
         return self._stats
 
     def cache(self) -> "InvertedIndex":
+        self.resident = True
         self.docs.cache()
         self._postings.cache()
         # doclens is an index ARTIFACT (segment-serving persists it as a

@@ -9,9 +9,12 @@ relations (docs, postings) and the transactional commit that flush() needs:
 
 Backends:
 
-- ``MemoryStorage`` — session-lifetime cached DataFrames. Every commit
-  cuts lineage with ``localCheckpoint`` so K incremental flushes produce a
-  bounded plan, not a K-deep union/filter chain (the round-1 flaw).
+- ``MemoryStorage`` — the relations as materialised RDD blocks in
+  executor memory. A commit merges by the batch's doc ids (an IN-list
+  known on the driver) and runs one eager ``localCheckpoint`` per
+  relation: docs, postings and doclens. The checkpoint cuts lineage, so
+  K incremental flushes plan against a flat scan, not a K-deep
+  union/filter chain.
 - ``ParquetSnapshotStorage`` — a transactional parquet table implementing
   the Iceberg *merge-on-read* model in miniature: each commit appends
   immutable data files plus a delete file (replaced doc_ids) and publishes
@@ -52,16 +55,26 @@ from abc import ABC, abstractmethod
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from phphinder_spark.functions.frames import local_frame
+from phphinder_spark.index.builder import build_doclens
 
 
 class IndexStorage(ABC):
     """Transactional owner of the (docs, postings) relations."""
+
+    # True when docs() and postings() are already materialised in
+    # executor memory, so a reader puts no cache of its own on top
+    resident = False
 
     @abstractmethod
     def docs(self) -> DataFrame: ...
 
     @abstractmethod
     def postings(self) -> DataFrame: ...
+
+    def doclens(self) -> DataFrame | None:
+        """(doc_id, field, dl) when the storage keeps it; None: readers
+        derive it from postings()."""
+        return None
 
     @abstractmethod
     def commit(
@@ -71,8 +84,18 @@ class IndexStorage(ABC):
         replaced_doc_ids: list[int],
     ) -> None:
         """Atomically upsert one flushed batch: rows for ``replaced_doc_ids``
-        (and any doc_id present in ``new_docs``) are superseded; the new
-        rows become visible. MERGE INTO semantics."""
+        are superseded; the new rows become visible. MERGE INTO
+        semantics. The caller lists the batch's own doc ids there too
+        (``SparkSearchEngine.flush`` passes exactly the batch's ids, which
+        reuse the replaced ones): ``MemoryStorage`` merges by that list
+        alone, while the other backends also supersede any doc_id present
+        in ``new_docs`` by themselves."""
+
+    def seed(self, docs: DataFrame, postings: DataFrame, doclens: DataFrame) -> None:
+        """Take a bulk-built index as the storage's first content. The
+        default commits it; ``MemoryStorage`` adopts the frames as they
+        are, for its next commit to merge into and materialise."""
+        self.commit(docs, postings, [])
 
     @abstractmethod
     def truncate(self) -> None: ...
@@ -83,17 +106,38 @@ class IndexStorage(ABC):
 
 
 class MemoryStorage(IndexStorage):
-    """Cached-DataFrame storage with per-commit lineage cuts.
+    """Docs, postings and doclens as materialised RDD blocks.
 
-    ``localCheckpoint(eager=True)`` materializes the merged state as RDD
-    blocks and truncates the logical plan, so the K-th incremental flush
-    plans against a flat scan — not K stacked union/anti-filter layers
-    with every historical drop-list serialized into the plan."""
+    A commit merges each relation as ``base.where(~doc_id IN ids) ∪
+    batch``, where ``ids`` is ``replaced_doc_ids``, which must list the
+    batch's own doc ids (see ``IndexStorage.commit``): a driver-side
+    IN-list bounded by the batch, so no join runs. The batch itself is
+    driver-sized rows: its doclens aggregate runs in one partition. The
+    union is coalesced back to the base's partition count (``_bounded``)
+    and materialised by one eager ``localCheckpoint``, which also cuts
+    the lineage, so the K-th flush plans against a flat scan — not K
+    stacked union/filter layers. So every commit rewrites each relation
+    whole, a cost that grows with the index, not the batch. The
+    checkpoints are the only copy:
+    readers put no cache on top (``resident``), and a commit releases
+    the blocks of the checkpoints it replaces, so a DataFrame planned
+    over the storage before a commit must not run after it (it may fail
+    with "Checkpoint block ... not found").
+
+    ``seed`` adopts a bulk-built (cached) index as the base without
+    copying it; the next commit materialises the merge, after which the
+    caller may release the bulk caches."""
+
+    resident = True
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._docs: DataFrame | None = None
         self._postings: DataFrame | None = None
+        self._doclens: DataFrame | None = None
+        # whether the frames are this storage's own checkpoints, whose
+        # blocks it releases, or adopted by seed()
+        self._own = False
 
     def docs(self) -> DataFrame:
         if self._docs is None:
@@ -105,38 +149,57 @@ class MemoryStorage(IndexStorage):
             raise RuntimeError("storage is empty")
         return self._postings
 
+    def doclens(self) -> DataFrame | None:
+        return self._doclens
+
     @property
     def is_empty(self) -> bool:
         return self._docs is None
 
+    def seed(self, docs, postings, doclens):
+        self._release()
+        self._docs, self._postings, self._doclens = docs, postings, doclens
+        self._own = False
+
     def commit(self, new_docs, new_postings, replaced_doc_ids):
-        drop = sorted(set(replaced_doc_ids))
-        if self._docs is None:
-            docs, postings = new_docs, new_postings
-        else:
-            batch_ids = new_docs.select("doc_id")
-            keep_docs = self._docs.join(batch_ids, "doc_id", "left_anti")
-            keep_post = self._postings.join(batch_ids, "doc_id", "left_anti")
-            if drop:
-                keep_docs = keep_docs.where(~F.col("doc_id").isin(drop))
-                keep_post = keep_post.where(~F.col("doc_id").isin(drop))
-            docs = self._bounded(keep_docs.unionByName(new_docs), self._docs)
-            postings = self._bounded(keep_post.unionByName(new_postings), self._postings)
-        self._docs = docs.localCheckpoint(eager=True)
-        self._postings = postings.localCheckpoint(eager=True)
+        # the batch is driver rows, small enough for one partition, where
+        # its aggregate needs no shuffle (one partition satisfies any
+        # clustering), so the doclens checkpoint stays one job under
+        # adaptive execution
+        new_doclens = build_doclens(new_postings.coalesce(1))
+        frames = (new_docs, new_postings, new_doclens)
+        if self._docs is not None:
+            keep = ~F.col("doc_id").isin(sorted({int(i) for i in replaced_doc_ids}))
+            frames = tuple(
+                self._bounded(base.where(keep).unionByName(new), base)
+                for base, new in zip((self._docs, self._postings, self._doclens), frames)
+            )
+        merged = tuple(f.localCheckpoint(eager=True) for f in frames)
+        self._release()
+        self._docs, self._postings, self._doclens = merged
+        self._own = True
 
     def _bounded(self, merged: DataFrame, base: DataFrame) -> DataFrame:
         """``merged`` coalesced to the base's partition count, or to the
-        session parallelism when that is higher. A batch built from
-        driver rows is small, so the anti-joins broadcast it and keep
-        the base's partitions; without the bound every flush would add
-        the batch's partitions, and tasks to every later query."""
+        session parallelism when that is higher: without the bound every
+        flush would add the batch's partitions, and tasks to every later
+        query."""
         sc = self.spark.sparkContext
         return merged.coalesce(max(base.rdd.getNumPartitions(), sc.defaultParallelism))
 
+    def _release(self) -> None:
+        """Free the blocks of this storage's own checkpoints (a
+        checkpointed frame's plan is the ``LogicalRDD`` over them)."""
+        if self._own:
+            for df in (self._docs, self._postings, self._doclens):
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        self._own = False
+
     def truncate(self) -> None:
+        self._release()
         self._docs = None
         self._postings = None
+        self._doclens = None
 
 
 class ParquetSnapshotStorage(IndexStorage):

@@ -26,7 +26,7 @@ from phphinder_spark.analysis import (
 )
 from phphinder_spark.corpus import make_row
 from phphinder_spark.functions.frames import local_frame
-from phphinder_spark.index.builder import SHADOW_SUFFIX, build_postings, shadow_fields
+from phphinder_spark.index.builder import build_postings, postings_of_rows
 from phphinder_spark.index.typo_ngram import ngrams_col, term_ngrams
 from phphinder_spark.schema import (
     IS_FULLTEXT,
@@ -234,29 +234,6 @@ def test_ngrams_col_equals_term_ngrams(spark, terms):
 # ------------------------------------------------------------ postings identity
 
 
-def reference_postings(schema: SearchSchema, rows: list[dict]) -> set:
-    """(field, term, doc_id, tf, positions) from ``Analyzer.analyze``, the
-    tokenizer alone for the unique field, and the lowercase chain for
-    the ``#raw`` shadow fields."""
-    acc = defaultdict(list)
-    raw = Analyzer.lowercase_only()
-    for row in rows:
-        for f in schema.indexed_fields:
-            v = row.get(f)
-            if v is None:
-                continue
-            if not isinstance(v, str):  # non-strings are one whole token
-                acc[(f, str(v), row["doc_id"])].append(0)
-                continue
-            for t, p in python_analyze(schema.analyzer, schema.is_unique(f), v):
-                acc[(f, t, row["doc_id"])].append(p)
-        for f in shadow_fields(schema):
-            if row.get(f) is not None:
-                for t, p in raw.analyze(row[f]):
-                    acc[(f + SHADOW_SUFFIX, t, row["doc_id"])].append(p)
-    return {(f, t, d, len(ps), tuple(sorted(ps))) for (f, t, d), ps in acc.items()}
-
-
 def assert_postings_equal_reference(spark, schema, rows):
     cols = ["doc_id"] + list(schema.fields)
     df = local_frame(
@@ -266,7 +243,8 @@ def assert_postings_equal_reference(spark, schema, rows):
         (r["field"], r["term"], r["doc_id"], r["tf"], tuple(r["positions"]))
         for r in build_postings(df, schema).collect()
     }
-    assert got == reference_postings(schema, rows)
+    want = {(f, t, d, tf, tuple(ps)) for f, t, d, tf, ps in postings_of_rows(schema, rows)}
+    assert got == want
 
 
 FIXTURE_ROWS = [  # FIXTURES.md F2, the reference's 3-doc integration fixture
@@ -307,6 +285,29 @@ def test_code_corpus_postings_equal_analyze(spark, analyzer):
         },
         analyzer=analyzer,
     )
+    assert_postings_equal_reference(spark, schema, rows)
+
+
+def test_typed_and_null_postings_equal_analyze(spark):
+    """Non-string values are one whole token, spelled as Spark's cast
+    spells them (lower-case booleans, Java's double format); nulls make
+    no postings."""
+    schema = SearchSchema(
+        {
+            "key": IS_STORED | IS_INDEXED | IS_UNIQUE,
+            "n": IS_STORED | IS_INDEXED,
+            "x": IS_STORED | IS_INDEXED,
+            "ok": IS_STORED | IS_INDEXED,
+            "text": IS_STORED | IS_INDEXED | IS_FULLTEXT,
+        },
+        types={"key": "long", "n": "long", "x": "double", "ok": "bool"},
+    )
+    xs = [1e20, 0.1 + 0.2, 1e-5, 2.82879384806159e17, 100.0, 12345678.0, -0.0, 1e23, None]
+    rows = [
+        {"doc_id": i + 1, "key": i, "n": None if i % 3 == 0 else -i * 7, "x": x,
+         "ok": None if i % 4 == 0 else bool(i % 2), "text": None if i % 5 == 0 else f"Running dogs {i}"}
+        for i, x in enumerate(xs)
+    ]
     assert_postings_equal_reference(spark, schema, rows)
 
 

@@ -23,8 +23,9 @@ def test_memory_storage_flush_plan_depth_is_bounded(spark):
     eng = SparkSearchEngine(spark, make_test_schema())
     eng.add_document(_doc(1, "seed words"))
     eng.flush()
-    depths, parts = [], []
-    for k in range(6):
+    jsc = spark.sparkContext._jsc
+    depths, parts, persisted = [], [], []
+    for k in range(20):
         eng.add_document(_doc(100 + k, f"batch {k} words"))
         eng.add_document(_doc(1, f"rewrite {k} cat"))  # replace every round
         eng.flush()
@@ -33,15 +34,23 @@ def test_memory_storage_flush_plan_depth_is_bounded(spark):
         parts.append(
             (eng.storage.docs().rdd.getNumPartitions(), eng.storage.postings().rdd.getNumPartitions())
         )
+        persisted.append(jsc.getPersistentRDDs().size())
     # lineage is cut at every commit: plan depth must NOT grow with flushes,
     # and neither may the partition count every later query runs tasks for
     assert max(depths) == min(depths), depths
     bound = spark.sparkContext.defaultParallelism
     assert all(d <= bound and p <= bound for d, p in parts), parts
-    # correctness after 6 replacement rounds: last write wins, one row
+    # a one-doc base grows to the session parallelism, then holds there
+    assert len(set(parts[1:])) == 1, parts
+    # each commit releases the checkpoints it replaces: one copy of each
+    # relation stays persisted, not one more per flush (the count may only
+    # fall, when the JVM cleans up blocks other tests left behind)
+    assert max(persisted) <= persisted[0], persisted
+    # correctness after 20 replacement rounds: last write wins, one row
     rows = eng.index.docs.where(F.col("_id") == 1).collect()
-    assert len(rows) == 1 and rows[0]["text"] == "rewrite 5 cat"
-    assert eng.index.docs.count() == 7
+    assert len(rows) == 1 and rows[0]["text"] == "rewrite 19 cat"
+    assert eng.index.docs.count() == 21
+    eng.truncate()
 
 
 @pytest.fixture()
