@@ -472,6 +472,9 @@ class SparkSearchEngine:
 
         if self._source_df is not None:
             self._source_df.unpersist()
+        # the storage holds no earlier content: the next flush seeds it
+        # with this index instead of merging into what it held before
+        self.storage.truncate()
         self._source_df = ensure_min_partitions(df).cache()
         self.index = build_index(self._source_df, self.schema).cache()
         self._max_id = -1
@@ -551,16 +554,19 @@ class SparkSearchEngine:
         """Serve from a persisted index built by
         ``index.manifest.build_resumable_index``.
 
-        Both modes read ``doclens/`` and ``stats.json`` (n_docs, avgdl)
-        once, here: BM25 never re-aggregates document lengths or re-counts
-        the corpus per query.
+        Both modes read ``stats.json`` (n_docs, avgdl) once, here, and
+        open ``doclens/``: BM25 never re-aggregates document lengths or
+        re-counts the corpus per query. Segment-served BM25 reads each
+        hit's length from its segment row (``dls``) and never scans
+        ``doclens/``; the postings mode joins it per query.
 
         ``serve='postings'``: reads the uncompressed postings parquet
         (term/field predicates push into the scans) — the warm path when
         the chunked postings are still around.
 
         ``serve='segments'``: the cold 100-TB path — ONLY the compressed
-        segment store + persisted doclens/stats/ngram artifacts are read;
+        segment store + persisted stats/ngram artifacts are read by
+        queries (``doclens/`` only by a flush that seeds the storage);
         ``postings/`` may be deleted, and a ``dictionary/`` left by older
         builds is ignored. Opened once: an ``index.segments.SegmentStore``
         and the n-gram typo index (``ngram/``). The store's chunk map is
@@ -584,22 +590,18 @@ class SparkSearchEngine:
         # as build_index; keeping extras breaks the flush MERGE union
         keep = ["doc_id"] + [f for f in schema.fields if f in docs.columns]
         docs = docs.select(*keep)
+        doclens = spark.read.parquet(f"{out_dir}/doclens")
         if serve == "segments":
             store = SegmentStore(spark, out_dir)
             # full-decode view: ONLY the correctness fallback for access
             # paths not routed through the segment helpers (none in the
             # query engine; kept so index.postings stays a valid DataFrame)
-            idx = InvertedIndex(
-                schema, docs, decode_segments(store.segments), store.doclens
-            )
+            idx = InvertedIndex(schema, docs, decode_segments(store.segments), doclens)
             st = store.stats
         else:
             store = None
             idx = InvertedIndex(
-                schema,
-                docs,
-                spark.read.parquet(f"{out_dir}/postings"),
-                spark.read.parquet(f"{out_dir}/doclens"),
+                schema, docs, spark.read.parquet(f"{out_dir}/postings"), doclens
             )
             with open(f"{out_dir}/stats.json") as fh:
                 st = json.load(fh)
@@ -1364,11 +1366,17 @@ class SparkSearchEngine:
         are not scored; in memory mode the chunks are ``doc_id // span``
         ranges of the postings) — identical results by construction,
         cheaper when rare terms bound the threshold. ``'auto'`` (default)
-        picks exhaustive in memory mode (one job, pruning can't beat
-        cached-scan scoring locally) and blockmax in segment-serving
-        mode, where skipped chunks are posting arrays never read
-        (measured: at worst ~15% over exhaustive on a layout with nothing
-        to skip, 1.6-1.7x ahead on clustered layouts — BENCH.md).
+        is exhaustive in both serve modes: one Spark job, since each hit
+        carries its document length (the segment rows' ``dls``), while
+        block-max adds a chunk-row collect (memory mode) and its θ-seed
+        top-k while planning. Block-max stays an explicit choice for
+        doc-id layouts that cluster a query's vocabulary: BENCH.md has it
+        1.57-1.73x ahead on ``assign_doc_ids_clustered`` at 1.5M docs
+        (local[32], with the per-query ``doclens`` join exhaustive then
+        paid), while the same-window A/B of
+        ``scripts/blockmax_crossover.py`` at 20,000 docs and local[4]
+        puts segment-served block-max at 0.54-0.94x of exhaustive on the
+        clustered layout and 0.40-0.93x on the random one.
 
         The frame is lazy and reads the index snapshot it was planned
         over: with the default ``MemoryStorage`` a later ``flush``
@@ -1382,7 +1390,7 @@ class SparkSearchEngine:
             )
         field = self._bm25_field(field)
         if strategy == "auto":
-            strategy = "blockmax" if self._store is not None else "exhaustive"
+            strategy = "exhaustive"
         if self.index is None:
             # reference searches over empty storage return no results
             return local_frame(self.spark, [], "doc_id long, score double")

@@ -15,8 +15,11 @@ Layout under ``out_dir``:
     docs/                 stored fields + content_sha256 (audit column)
     postings/chunk=<i>/   per-chunk postings parquet
     segments/             segment store (encode_segments): per (field, term,
-                          chunk) doc_ids/tfs/positions arrays, Parquet v2
-                          DELTA_BINARY_PACKED (delta-gaps, bit-packed)
+                          chunk) doc_ids/tfs/dls/positions arrays (dls: each
+                          doc's length in the field, as in doclens/),
+                          Parquet v2 DELTA_BINARY_PACKED (delta-gaps,
+                          bit-packed)
+    doclens/              (doc_id, field, dl): document lengths per field
     ngram/                bigram typo index over the segment rows' terms
     stats.json            corpus-level stats (n_docs, avgdl per field)
     manifest.json         lineage + per-chunk metrics
@@ -165,7 +168,11 @@ def build_resumable_index(
         r["field"]: r["avgdl"]
         for r in doclens.groupBy("field").agg(F.avg("dl").alias("avgdl")).collect()
     }
-    n_postings_total = postings.count()
+    # one posting per (field, term, doc): the segment rows' df sums to the
+    # posting count, read in the same job as the row count
+    n_segment_rows, n_postings_total = segments_df.agg(
+        F.count("*"), F.coalesce(F.sum("df"), F.lit(0))
+    ).first()
     # segment-size metrics (north_star: "metrics (docs/sec, postings/sec,
     # segment sizes)"): store bytes on disk + per-posting density
     seg_root = os.path.join(out_dir, "segments")
@@ -174,7 +181,6 @@ def build_resumable_index(
         for dp, _, fs in os.walk(seg_root)
         for f in fs
     )
-    n_segment_rows = segments_df.count()
     stats = {
         "n_docs": n_docs,
         "n_postings": n_postings_total,

@@ -12,16 +12,19 @@ row-group min/max statistics give O(log n)-style data skipping on term
 lookups — the distributed analogue of the reference's in-file binary
 search.
 
-Posting format: three Parquet array columns per row, aligned by index —
+Posting format: four Parquet array columns per row, aligned by index —
     doc_ids    array<long>         sorted, absolute doc ids
     tfs        array<long>         tf per doc
+    dls        array<long>         the doc's length in the row's field
+                                   (its sum of tf, the ``doclens/`` value)
     positions  array<array<int>>   sorted positions per doc
 The delta-gaps live in the file format: ``write_segments`` writes Parquet
 v2 pages without dictionaries, so every integer column (array elements
 included) is ``DELTA_BINARY_PACKED`` — deltas bit-packed in blocks.
 Encode is one JVM aggregate and decode one ``inline(arrays_zip(...))``:
 no Python worker runs on either side, and a scoring read scans only the
-``doc_ids``/``tfs`` columns.
+``doc_ids``/``tfs``/``dls`` columns — every BM25 input of a hit is in its
+segment row, so scoring joins no document-length table.
 """
 
 from __future__ import annotations
@@ -41,15 +44,21 @@ _WRITE_OPTIONS = {"parquet.writer.version": "v2", "parquet.enable.dictionary": "
 
 
 def read_segments(spark, path: str) -> DataFrame:
-    """Open the segment store at ``path``; a store written in the retired
-    varint-payload format fails here with a clear error instead of deep
-    inside a Spark job."""
+    """Open the segment store at ``path``; a store written in a retired
+    format (the varint payload, or columnar rows without ``dls``) fails
+    here with a clear error instead of deep inside a Spark job."""
     seg = spark.read.parquet(path)
     if "payload" in seg.columns and "doc_ids" not in seg.columns:
         raise ValueError(
             f"{path} is a segment store in the retired varint-payload "
             "format (one 'payload' blob per row); rebuild the index with "
             "index.manifest.build_resumable_index to get the columnar format"
+        )
+    if "dls" not in seg.columns:
+        raise ValueError(
+            f"{path} is a segment store without the 'dls' document-length "
+            "column that BM25 scores from; rebuild the index with "
+            "index.manifest.build_resumable_index"
         )
     return seg
 
@@ -58,16 +67,27 @@ def encode_segments(
     postings: DataFrame, chunk_span: int = DEFAULT_CHUNK_SPAN
 ) -> DataFrame:
     """postings -> segment rows: one aggregate on (field, term, chunk) that
-    collects the doc-id-sorted (doc_id, tf, positions) list, so group size
-    is bounded by chunk_span regardless of term hotness. The skip
+    collects the doc-id-sorted (doc_id, tf, dl, positions) list, so group
+    size is bounded by chunk_span regardless of term hotness. The skip
     statistics come from that list: df its size, min/max_doc its ends,
-    max_tf (the block-max bound) its tf ceiling."""
+    max_tf (the block-max bound) its tf ceiling.
+
+    dl is the postings' ``dl`` column when they carry one (a merge's
+    decode keeps the lengths it read, since colliding rows hold only part
+    of each document), else each doc's sum of tf per field over
+    ``postings``, which must then hold every posting of its docs."""
+    if "dl" not in postings.columns:
+        postings = postings.withColumn(
+            "dl", F.sum("tf").over(Window.partitionBy("doc_id", "field"))
+        )
     p = (
         postings.withColumn(
             "chunk", F.floor(F.col("doc_id") / F.lit(chunk_span)).cast("long")
         )
         .groupBy("field", "term", "chunk")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "tf", "positions"))).alias("p"))
+        .agg(
+            F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl", "positions"))).alias("p")
+        )
     )
     return p.select(
         "field",
@@ -80,26 +100,28 @@ def encode_segments(
         F.array_max("p.tf").alias("max_tf"),
         F.col("p.doc_id").alias("doc_ids"),
         F.col("p.tf").alias("tfs"),
+        F.col("p.dl").alias("dls"),
         F.col("p.positions").alias("positions"),
     )
 
 
-def decode_segments(segments: DataFrame, with_positions: bool = True) -> DataFrame:
+def decode_segments(
+    segments: DataFrame, with_positions: bool = True, with_dl: bool = False
+) -> DataFrame:
     """segment rows -> postings (inverse of encode_segments).
 
     ``with_positions=False`` emits empty position arrays (schema-stable)
-    and never reads the ``positions`` column — use for scoring-only reads."""
+    and never reads the ``positions`` column — use for scoring-only reads;
+    ``with_dl=True`` adds each posting's document length ``dl``."""
     zipped = [F.col("doc_ids").alias("doc_id"), F.col("tfs").alias("tf")]
     if with_positions:
-        return segments.select(
-            "field", "term", F.inline(F.arrays_zip(*zipped, F.col("positions")))
-        )
-    return segments.select(
-        "field",
-        "term",
-        F.inline(F.arrays_zip(*zipped)),
-        F.array().cast("array<int>").alias("positions"),
-    )
+        zipped.append(F.col("positions"))
+    if with_dl:
+        zipped.append(F.col("dls").alias("dl"))
+    out = segments.select("field", "term", F.inline(F.arrays_zip(*zipped)))
+    if with_positions:
+        return out
+    return out.withColumn("positions", F.array().cast("array<int>"))
 
 
 def write_segments(segments: DataFrame, path: str, n_files: int | None = None) -> None:
@@ -145,7 +167,9 @@ def merge_segment_stores(
     Scale design: a (field, term, chunk) group that exists in only ONE
     input store passes through byte-identical — no decode. Only colliding
     groups (same term chunk written by several incremental builds) are
-    decoded, concatenated doc-id-sorted, and re-encoded. For typical
+    decoded, concatenated doc-id-sorted, and re-encoded; they keep the
+    document lengths they were written with, which the colliding rows
+    alone could not recount. For typical
     incremental ingestion (new builds cover new doc-id ranges -> new
     chunks) the merge is almost pure file re-layout; the expensive path is
     proportional to actual overlap, not store size."""
@@ -159,15 +183,16 @@ def merge_segment_stores(
     tagged = segs.withColumn("_n", F.count("*").over(w))
     passthrough = tagged.where(F.col("_n") == 1).drop("_n")
     colliding = tagged.where(F.col("_n") > 1).drop("_n")
-    reencoded = encode_segments(decode_segments(colliding), chunk_span)
+    reencoded = encode_segments(decode_segments(colliding, with_dl=True), chunk_span)
     write_segments(passthrough.unionByName(reencoded), out_path, n_files)
 
 
 class SegmentStore:
     """An index directory's segment store, opened once: the ``segments/``
-    and ``doclens/`` parquet tables and ``stats.json``. It is a posting
-    source of ``scoring.bm25_topk``, so a serving engine pays the parquet
-    opens and the stats read at open time, never per query.
+    parquet table and ``stats.json``. It is a posting source of
+    ``scoring.bm25_topk``, so a serving engine pays the parquet open and
+    the stats read at open time, never per query; each hit's document
+    length is decoded from its segment row, so no ``doclens/`` is read.
 
     The chunk metadata (field, term, chunk, df, max_tf) is the index's
     only term dictionary: a term's df is the sum of its chunks' df
@@ -188,7 +213,6 @@ class SegmentStore:
     def __init__(self, spark, index_dir: str):
         self.spark = spark
         self.segments = read_segments(spark, os.path.join(index_dir, "segments"))
-        self.doclens = spark.read.parquet(os.path.join(index_dir, "doclens"))
         with open(os.path.join(index_dir, "stats.json")) as fh:
             self.stats = json.load(fh)
         self._chunks: dict[tuple[str, str], list] | None = None
@@ -245,13 +269,13 @@ class SegmentStore:
         return self.segments.where((F.col("field") == field) & F.col("term").isin(terms))
 
     def hits(self, field: str, terms: list[str], chunks: list[int] | None = None) -> DataFrame:
-        """(field, term, doc_id, tf) of ``terms`` in ``field``, decoded from
+        """(field, term, doc_id, tf, dl) of ``terms`` in ``field``, decoded from
         the segment rows of ``chunks`` (all when None) only; scoring reads
         no positions."""
         seg = self._rows(field, terms)
         if chunks is not None:
             seg = seg.where(F.col("chunk").isin(chunks))
-        return decode_segments(seg, with_positions=False)
+        return decode_segments(seg, with_positions=False, with_dl=True)
 
 
 def segment_bm25_topk(

@@ -8,9 +8,13 @@ dependent and a uniform-vocabulary corpus has nothing for ANY top-k
 algorithm to prune), asserts the top-k are IDENTICAL, and reports
 per-query times + skipped-chunk fractions. Appends a section to BENCH.md.
 
-Usage: python scripts/blockmax_bench.py [n_docs] [k]   # default 400_000, 10
+Usage: python scripts/blockmax_bench.py [n_docs] [k] [--driver-memory 4g]
+    # defaults: 400_000 docs, k=10, a 4 GB driver heap
+The master is local[$SPARK_GRAFT_CPUS] (default 32), with as many shuffle
+partitions.
 """
 
+import argparse
 import json
 import os
 import sys
@@ -33,18 +37,22 @@ QUERIES = [
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
-    k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("n_docs", type=int, nargs="?", default=400_000)
+    ap.add_argument("k", type=int, nargs="?", default=10)
+    ap.add_argument("--driver-memory", default="4g")
+    args = ap.parse_args()
+    n_docs, k = args.n_docs, args.k
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("blockmax-bench")
-        .config("spark.sql.shuffle.partitions", "64")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", args.driver_memory)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -128,7 +136,6 @@ def main() -> None:
         encode_segments(eng.index.postings, chunk_span=span),
         os.path.join(seg_dir, "segments"),
     )
-    eng.index.doclens.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclens"))
     with open(os.path.join(seg_dir, "stats.json"), "w") as fh:
         json.dump({"n_docs": stats["n_docs"], "avgdl": stats["avgdl"]}, fh)
     # one open store for every query: the timings are the scorers' own

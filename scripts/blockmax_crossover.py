@@ -1,9 +1,11 @@
 """Block-max wall-clock crossover evidence (VERDICT r02 #6).
 
 Setup where the pruning is REAL work skipped, not just expression time:
-- 1.5M-doc Zipf "topics" corpus (per-language identifier vocabulary) with
+- a Zipf "topics" corpus (per-language identifier vocabulary) with
   CLUSTERED doc ids (assign_doc_ids_clustered by lang) — the IR
-  doc-reordering that localizes a topic's terms into few chunks.
+  doc-reordering that localizes a topic's terms into few chunks — or,
+  with ``--layout random``, the same corpus with hash-ordered doc ids
+  (assign_doc_ids), where a topic's terms spread over every chunk.
 - segment-served BM25: exhaustive decodes every chunk of every query
   term's postings (hot terms span the whole corpus); block-max decodes
   only chunks whose bound clears θ — chunks of OTHER topics contain only
@@ -13,12 +15,23 @@ Also reports the in-memory split: the doc-id chunks the kernel scores
 out of all chunks of the query terms, isolating the data-dependent work
 from the fixed per-query job count that dominates local-mode wall-clock.
 
-Appends results to BENCH.md. Usage:
-    python scripts/blockmax_crossover.py [n_docs] [k]   # default 1_500_000, 10
+Each query runs ``--reps`` times per strategy, exhaustive and block-max
+interleaved (the order alternates per rep), and the tables report the
+median of each — a same-window A/B of the two strategies.
+
+Appends results to BENCH.md and writes the summary to ``--json``.
+Usage:
+    python scripts/blockmax_crossover.py [n_docs] [k] [--layout clustered|random]
+        [--reps N] [--driver-memory 4g] [--json BENCH_blockmax.json]
+    # defaults: 1_500_000 docs, k=10, clustered, 1 rep, 4g
+The master is local[$SPARK_GRAFT_CPUS] (default 32), with as many shuffle
+partitions.
 """
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -35,19 +48,48 @@ QUERIES = [
 ]
 
 
+def ab(exhaustive, blockmax, reps: int) -> dict:
+    """Run the two strategies ``reps`` times each, interleaved with the
+    order alternating per rep; both must return the same top-k. Returns
+    the median seconds of each and the block-max metrics."""
+    times = {"ex": [], "bm": []}
+    metrics = {}
+    for rep in range(reps):
+        order = ("ex", "bm") if rep % 2 == 0 else ("bm", "ex")
+        got = {}
+        for name in order:
+            t = time.time()
+            if name == "ex":
+                got[name] = [(r["doc_id"], r["score"]) for r in exhaustive().collect()]
+            else:
+                topk, metrics = blockmax()
+                got[name] = [(r["doc_id"], r["score"]) for r in topk.collect()]
+            times[name].append(time.time() - t)
+        assert got["ex"] == got["bm"], "top-k mismatch"
+    ex, bm = statistics.median(times["ex"]), statistics.median(times["bm"])
+    return {"ex": ex, "bm": bm, "speedup": ex / max(bm, 1e-9), "metrics": metrics}
+
+
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_500_000
-    k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("n_docs", type=int, nargs="?", default=1_500_000)
+    ap.add_argument("k", type=int, nargs="?", default=10)
+    ap.add_argument("--layout", choices=("clustered", "random"), default="clustered")
+    ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--driver-memory", default="4g")
+    ap.add_argument("--json", default=os.path.join(ROOT, "BENCH_blockmax.json"))
+    args = ap.parse_args()
+    n_docs, k = args.n_docs, args.k
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     from pyspark.sql import SparkSession, functions as F
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("blockmax-crossover")
-        .config("spark.sql.shuffle.partitions", "64")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", args.driver_memory)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
@@ -55,6 +97,7 @@ def main() -> None:
 
     from phphinder_spark.corpus import generate_code_corpus
     from phphinder_spark.index.builder import (
+        assign_doc_ids,
         assign_doc_ids_clustered,
         build_postings,
     )
@@ -72,21 +115,25 @@ def main() -> None:
     corpus = generate_code_corpus(
         spark, n_docs, seed=42, partitions=128, zipf="topics"
     )
-    # Cluster key: (lang, xxhash(repo) % B) — NOT bare lang. Chunk skipping
-    # only needs each chunk to hold ONE topic (ids contiguous per subcluster),
-    # and bare-lang clustering makes one window partition per language:
-    # at 5M docs that is 5 single-task 1M-row windows, and every downstream
-    # stage (the pandas-UDF tokenizer included) inherits 5-way parallelism
-    # — the exact skew caveat assign_doc_ids_clustered documents. B=64
-    # subclusters per lang bounds the window partitions at ~n_docs/320
-    # rows while keeping chunk-level topic purity intact.
-    sub = corpus.withColumn(
-        "_sub", F.pmod(F.xxhash64("repo"), F.lit(64)).cast("int")
-    )
-    docs = assign_doc_ids_clustered(
-        sub, ["lang", "_sub"], ["repo", "path", "commit"]
-    ).drop("_sub").repartition(128)
-    postings = build_postings(docs, code_schema()).where(
+    if args.layout == "clustered":
+        # Cluster key: (lang, xxhash(repo) % B) — NOT bare lang. Chunk
+        # skipping only needs each chunk to hold ONE topic (ids contiguous
+        # per subcluster), and bare-lang clustering makes one window
+        # partition per language: at 5M docs that is 5 single-task 1M-row
+        # windows, and every downstream stage (the pandas-UDF tokenizer
+        # included) inherits 5-way parallelism — the exact skew caveat
+        # assign_doc_ids_clustered documents. B=64 subclusters per lang
+        # bounds the window partitions at ~n_docs/320 rows while keeping
+        # chunk-level topic purity intact.
+        sub = corpus.withColumn(
+            "_sub", F.pmod(F.xxhash64("repo"), F.lit(64)).cast("int")
+        )
+        docs = assign_doc_ids_clustered(
+            sub, ["lang", "_sub"], ["repo", "path", "commit"]
+        ).drop("_sub")
+    else:
+        docs = assign_doc_ids(corpus, ["repo", "path", "commit"])
+    postings = build_postings(docs.repartition(128), code_schema()).where(
         F.col("field") == "content"
     ).cache()
     n_post = postings.count()
@@ -103,42 +150,34 @@ def main() -> None:
         encode_segments(postings, chunk_span=span),
         os.path.join(seg_dir, "segments"),
     )
-    doclens.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclens"))
     with open(os.path.join(seg_dir, "stats.json"), "w") as fh:
         json.dump({"n_docs": n_docs, "avgdl": {"content": avgdl}}, fh)
     # one open store for every query: the timings are the scorers' own
     store = SegmentStore(spark, seg_dir)
+    seg_bytes = sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _, fs in os.walk(os.path.join(seg_dir, "segments"))
+        for f in fs
+    )
     print(json.dumps({"segment_store_sec": round(time.time() - t, 1),
-                      "chunk_span": span}), flush=True)
-
-    analyzer_terms = lambda q: q.split()
+                      "chunk_span": span, "segment_store_bytes": seg_bytes}), flush=True)
 
     # ---- segment-served: decode work is the real cost
     seg_rows = []
     for q in QUERIES:
-        terms = analyzer_terms(q)
-        t = time.time()
-        cold = [
-            (r["doc_id"], r["score"])
-            for r in segment_bm25_topk(
-                spark, store, terms, "content", k=k
-            ).collect()
-        ]
-        t_cold = time.time() - t
-        t = time.time()
-        topk, m = segment_bm25_topk_blockmax(
-            spark, store, terms, "content", k=k
+        terms = q.split()
+        r = ab(
+            lambda: segment_bm25_topk(spark, store, terms, "content", k=k),
+            lambda: segment_bm25_topk_blockmax(spark, store, terms, "content", k=k),
+            args.reps,
         )
-        bm = [(r["doc_id"], r["score"]) for r in topk.collect()]
-        t_bm = time.time() - t
-        assert cold == bm, f"segment top-k mismatch for {q!r}"
         seg_rows.append(
             {
                 "query": q,
-                "seg_exhaustive_sec": round(t_cold, 2),
-                "seg_blockmax_sec": round(t_bm, 2),
-                "speedup": round(t_cold / max(t_bm, 1e-9), 2),
-                "chunk_skip_fraction": m["chunk_skip_fraction"],
+                "seg_exhaustive_sec": round(r["ex"], 3),
+                "seg_blockmax_sec": round(r["bm"], 3),
+                "speedup": round(r["speedup"], 2),
+                "chunk_skip_fraction": r["metrics"]["chunk_skip_fraction"],
                 "identical_topk": True,
             }
         )
@@ -148,24 +187,19 @@ def main() -> None:
     source = PostingsSource(postings, doclens, {"n_docs": n_docs, "avgdl": {"content": avgdl}})
     mem_rows = []
     for q in QUERIES:
-        terms = analyzer_terms(q)
-        t = time.time()
-        ex = [
-            (r["doc_id"], r["score"])
-            for r in bm25_topk(source, terms, "content", k)[0].collect()
-        ]
-        t_ex = time.time() - t
-        t = time.time()
-        topk, m = bm25_topk(source, terms, "content", k, prune=True)
-        bm = [(r["doc_id"], r["score"]) for r in topk.collect()]
-        t_bm = time.time() - t
-        assert ex == bm, f"in-memory top-k mismatch for {q!r}"
+        terms = q.split()
+        r = ab(
+            lambda: bm25_topk(source, terms, "content", k)[0],
+            lambda: bm25_topk(source, terms, "content", k, prune=True),
+            args.reps,
+        )
+        m = r["metrics"]
         mem_rows.append(
             {
                 "query": q,
-                "exhaustive_sec": round(t_ex, 2),
-                "blockmax_sec": round(t_bm, 2),
-                "speedup": round(t_ex / max(t_bm, 1e-9), 2),
+                "exhaustive_sec": round(r["ex"], 3),
+                "blockmax_sec": round(r["bm"], 3),
+                "speedup": round(r["speedup"], 2),
                 "chunks_total": m.get("chunks_total"),
                 "chunks_decoded": m.get("chunks_decoded"),
                 "chunk_skip_fraction": m.get("chunk_skip_fraction"),
@@ -173,14 +207,27 @@ def main() -> None:
         )
         print(json.dumps(mem_rows[-1]), flush=True)
 
+    layout = "CLUSTERED" if args.layout == "clustered" else "RANDOM"
     with open(os.path.join(ROOT, "BENCH.md"), "a") as fh:
         fh.write(
-            f"\n### block-max crossover (n_docs={n_docs}, k={k}, CLUSTERED "
-            f"topics layout, local[{cpus}])\n\n"
-            "Doc ids clustered by lang (assign_doc_ids_clustered) over the\n"
-            "zipf='topics' corpus: a topic's identifiers live in ~1/5 of the\n"
-            "chunks, so segment-served block-max skips the other topics'\n"
-            "chunks wholesale — the decode work exhaustive cannot avoid.\n\n"
+            f"\n### block-max crossover (n_docs={n_docs}, k={k}, {layout} "
+            f"topics layout, local[{cpus}], median of {args.reps} interleaved "
+            f"reps, store {seg_bytes} bytes)\n\n"
+        )
+        if args.layout == "clustered":
+            fh.write(
+                "Doc ids clustered by lang (assign_doc_ids_clustered) over the\n"
+                "zipf='topics' corpus: a topic's identifiers live in ~1/5 of the\n"
+                "chunks, so segment-served block-max skips the other topics'\n"
+                "chunks wholesale — the decode work exhaustive cannot avoid.\n\n"
+            )
+        else:
+            fh.write(
+                "Hash-ordered doc ids (assign_doc_ids) over the zipf='topics'\n"
+                "corpus: a topic's identifiers spread over every chunk, so\n"
+                "block-max has little to skip.\n\n"
+            )
+        fh.write(
             "| query | seg exhaustive (s) | seg blockmax (s) | speedup | chunks skipped |\n"
             "|---|---|---|---|---|\n"
         )
@@ -207,14 +254,16 @@ def main() -> None:
     summary = {
         "n_docs": n_docs,
         "k": k,
-        "layout": "clustered-topics",
+        "layout": f"{args.layout}-topics",
+        "reps": args.reps,
+        "segment_store_bytes": seg_bytes,
         "seg_best_speedup": speedups[-1],
         "seg_median_speedup": speedups[len(speedups) // 2],
         "identical_topk": True,
         "seg": seg_rows,
         "mem": mem_rows,
     }
-    with open(os.path.join(ROOT, "BENCH_blockmax.json"), "w") as fh:
+    with open(args.json, "w") as fh:
         json.dump(summary, fh, indent=1)
     print(json.dumps({"done": True, "seg": seg_rows, "mem": mem_rows}))
     spark.stop()

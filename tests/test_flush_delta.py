@@ -181,6 +181,27 @@ def test_flushed_index_equals_fresh_build(spark, tmp_path, backend, schema_name)
     eng.truncate()
 
 
+@pytest.mark.parametrize("backend", ["memory", "parquet_snapshot", "duckdb", "kv"])
+def test_bulk_load_after_flush_survives_next_flush(spark, tmp_path, backend):
+    """A bulk load replaces what earlier flushes put in the storage: the
+    next flush seeds the storage from the bulk index and merges into it,
+    so the bulk-loaded document is still found after it."""
+    schema = lowercase_schema()
+    eng = SparkSearchEngine(spark, schema, storage=_storage(spark, tmp_path, backend))
+    eng.add_documents([{"key": "before", "title": "early", "body": "alpha", "score": None}])
+    eng.flush()
+    eng.index_dataframe(_frame(spark, schema, [
+        {"doc_id": 1, "key": "bulk", "title": "zebra", "body": "zebra crossing", "score": None},
+    ]))
+    assert [r.document["key"] for r in eng.search("zebra")] == ["bulk"]
+    eng.add_documents([{"key": "after", "title": "late", "body": "beta", "score": None}])
+    eng.flush()
+    assert [r.document["key"] for r in eng.search("zebra")] == ["bulk"]
+    assert [(r.doc_id, r.document["key"]) for r in eng.search("beta")] == [(2, "after")]
+    assert eng.search("alpha") == []
+    eng.truncate()
+
+
 # ------------------------------------------------------------- job and cache pins
 
 

@@ -1,7 +1,7 @@
 """Cold BM25 planned from the engine-held segment store.
 
 ``from_index_dir(serve="segments")`` opens one ``SegmentStore`` (segments
-and doclens tables, stats.json); the segment scorers take per-term df and
+table, stats.json); the segment scorers take per-term df and
 chunk bounds from the store's chunk metadata — a driver map under the
 dictionary-cache cap, one metadata-only collect above it — and the engine
 takes its driver dictionary from the same map; no ``dictionary/`` is
@@ -239,24 +239,32 @@ def test_flush_drops_store_and_bm25_equals_memory(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "query,strategy",
-    [("varint delta merge", "exhaustive"), ("function", "blockmax")],
+    [
+        ("varint delta merge", "exhaustive"),
+        ("varint delta merge", "auto"),
+        ("ident_1 ident_1003 function", "auto"),
+        ("function", "blockmax"),
+    ],
 )
 def test_warm_non_pruning_bm25_plans_without_jobs(spark, warm_engine, query, strategy):
-    """Exhaustive scoring and a block-max op with nothing to prune (one
-    hot term: every chunk holds every query term) plan with ZERO Spark
-    jobs — no parquet open, no dictionary read, no metadata collect — and
-    execute in at most two."""
+    """Exhaustive scoring, ``'auto'`` (exhaustive in segment serving too,
+    also on a query block-max would θ-prune) and a block-max op with
+    nothing to prune (one hot term: every chunk holds every query term)
+    plan with ZERO Spark jobs — no parquet open, no dictionary read, no
+    metadata collect — and execute in one: each hit's document length is
+    decoded from its segment row, so no doclens broadcast runs."""
     n_plan, n_run, rows = planned_and_run(
         spark,
         lambda: warm_engine.search_topk_bm25(query, k=8, field="content", strategy=strategy),
     )
     assert n_plan == 0
-    assert n_run <= 2
+    assert n_run == 1
     assert rows
 
 
 def test_warm_theta_pruning_bm25_plans_in_two_jobs(spark, warm_engine):
-    """A θ-pruned op runs only the θ-seed top-k while planning."""
+    """A θ-pruned block-max op runs in two jobs: the θ-seed top-k while
+    planning, the survivors' top-k at collect."""
     # two df-1 identifiers seed θ for k=2 from at most two of the ten
     # chunks; the hot term spreads the candidates over all of them
     terms = ["ident_1", "ident_1003", "function"]
@@ -264,10 +272,13 @@ def test_warm_theta_pruning_bm25_plans_in_two_jobs(spark, warm_engine):
     assert metrics["theta"] > float("-inf")  # this query really seeds θ
     assert metrics["chunks_total"] == 10
     n_plan, n_run, _ = planned_and_run(
-        spark, lambda: warm_engine.search_topk_bm25(" ".join(terms), k=2, field="content")
+        spark,
+        lambda: warm_engine.search_topk_bm25(
+            " ".join(terms), k=2, field="content", strategy="blockmax"
+        ),
     )
-    assert n_plan <= 2
-    assert n_run <= 2
+    assert n_plan == 1
+    assert n_run == 1
 
 
 def test_segment_open_and_first_queries_job_counts(spark, index_dir):
@@ -288,7 +299,7 @@ def test_segment_open_and_first_queries_job_counts(spark, index_dir):
     # bounds = the counts measured on this fixture (AQE off)
     assert n_open <= 4
     assert n_term <= 4
-    assert n_bm25 <= 2
+    assert n_bm25 == 1
 
 
 def test_over_cap_plans_one_metadata_job_and_no_reopen(spark, index_dir, monkeypatch):
@@ -439,6 +450,34 @@ def formatted_plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(mode="formatted")
     return buf.getvalue()
+
+
+def test_segment_served_bm25_plans_scan_no_doclens(warm_engine, monkeypatch):
+    """No segment-served BM25 plan reads ``doclens/``: exhaustive, the
+    θ-seed and survivor plans of a θ-pruned block-max, and the batch
+    all score from the segment rows' ``dls``."""
+    from phphinder_spark import scoring
+
+    built = []
+    real = scoring._contributions
+
+    def recording(*args, **kwargs):
+        built.append(real(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(scoring, "_contributions", recording)
+    e = warm_engine
+    plans = [
+        e.search_topk_bm25("varint delta merge", k=8, field="content", strategy="exhaustive"),
+        e.search_topk_bm25("ident_1 ident_1003 function", k=2, field="content", strategy="blockmax"),
+        e.search_topk_bm25_many(["varint delta merge", "function return"], k=5, field="content"),
+    ]
+    # exhaustive; the θ seed and the survivors; the batch
+    assert len(built) == 4
+    for df in plans + built:
+        plan = formatted_plan(df)
+        assert "segments" in plan
+        assert "doclens" not in plan, plan
 
 
 @pytest.mark.parametrize("shape", list(SEGMENT_SERVED))

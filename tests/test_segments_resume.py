@@ -4,12 +4,13 @@ crash."""
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from phphinder_spark.corpus import generate_code_corpus
-from phphinder_spark.index.builder import assign_doc_ids, build_postings
+from phphinder_spark.index.builder import assign_doc_ids, build_doclens, build_postings
 from phphinder_spark.index.manifest import build_resumable_index
 from phphinder_spark.index.segments import (
     SegmentStore,
@@ -17,6 +18,7 @@ from phphinder_spark.index.segments import (
     encode_segments,
     merge_segment_dictionaries,
     read_term_postings,
+    segment_bm25_topk,
     write_segments,
 )
 from phphinder_spark.schema import code_schema
@@ -29,6 +31,28 @@ def postings(spark):
     corpus = generate_code_corpus(spark, N_DOCS, seed=7, partitions=4)
     docs = assign_doc_ids(corpus, ["repo", "path", "commit"])
     return build_postings(docs, code_schema()).cache()
+
+
+def _hand_built_store(out: str, postings, chunk_span: int, n_docs: int, avgdl=None) -> None:
+    """An index directory built from ``postings`` by hand: segments/, whose
+    ``dls`` encode_segments counts as each doc's sum of tf per field,
+    doclens/ from the same formula (``build_doclens``) and stats.json
+    (``avgdl`` per field defaults to the mean dl)."""
+    os.makedirs(out, exist_ok=True)
+    write_segments(encode_segments(postings, chunk_span=chunk_span), os.path.join(out, "segments"))
+    doclens = build_doclens(postings)
+    doclens.write.parquet(os.path.join(out, "doclens"))
+    if avgdl is None:
+        avgdl = {
+            r["field"]: r["avgdl"]
+            for r in doclens.groupBy("field").agg(F.avg("dl").alias("avgdl")).collect()
+        }
+    with open(os.path.join(out, "stats.json"), "w") as fh:
+        json.dump({"n_docs": n_docs, "avgdl": avgdl}, fh)
+
+
+def topk(df) -> list[tuple]:
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
 def test_segment_codec_roundtrip_unit(spark):
@@ -111,8 +135,9 @@ def test_segment_roundtrip_and_compression(spark, postings, tmp_path):
 
 
 def test_segment_store_is_delta_binary_packed(spark, postings, tmp_path):
-    """Every integer posting column of a written store — doc ids, tfs and
-    positions, array elements included — is DELTA_BINARY_PACKED (v2
+    """Every integer posting column of a written store — doc ids, tfs,
+    document lengths and positions, array elements included — is
+    DELTA_BINARY_PACKED (v2
     pages, no dictionary): the store's delta-gaps."""
     import glob
 
@@ -123,6 +148,7 @@ def test_segment_store_is_delta_binary_packed(spark, postings, tmp_path):
     wanted = {
         "doc_ids.list.element",
         "tfs.list.element",
+        "dls.list.element",
         "positions.list.element.list.element",
     }
     seen = set()
@@ -173,6 +199,55 @@ def test_varint_format_store_is_refused_with_rebuild_hint(spark, tmp_path):
         )
     with pytest.raises(ValueError, match=msg):
         read_term_postings(spark, os.path.join(out, "segments"), "content", "needle")
+
+
+def test_store_without_dls_is_refused_with_rebuild_hint(spark, tmp_path, postings):
+    """A columnar store written before segment rows carried ``dls`` fails
+    at open — SegmentStore, from_index_dir(serve="segments") and
+    merge_segment_stores — naming the column and the rebuild entry point;
+    nothing falls back to joining ``doclens/``."""
+    from phphinder_spark.engine import SparkSearchEngine
+    from phphinder_spark.index.segments import merge_segment_stores
+
+    out = str(tmp_path / "nodls")
+    part = postings.where(F.col("doc_id") <= 20)
+    encode_segments(part, chunk_span=256).drop("dls").write.parquet(
+        os.path.join(out, "segments")
+    )
+    build_doclens(part).write.parquet(os.path.join(out, "doclens"))
+    spark.createDataFrame([(1, "x")], "doc_id long, content string").write.parquet(
+        os.path.join(out, "docs")
+    )
+    with open(os.path.join(out, "stats.json"), "w") as fh:
+        json.dump({"n_docs": 20, "avgdl": {"content": 1.0}}, fh)
+
+    msg = "'dls'.*build_resumable_index"
+    with pytest.raises(ValueError, match=msg):
+        SegmentStore(spark, out)
+    with pytest.raises(ValueError, match=msg):
+        SparkSearchEngine.from_index_dir(spark, out, code_schema(), serve="segments")
+    with pytest.raises(ValueError, match=msg):
+        merge_segment_stores(
+            spark, [os.path.join(out, "segments")], str(tmp_path / "merged")
+        )
+
+
+def test_built_store_dls_equal_doclens(spark, tmp_path):
+    """After ``build_resumable_index`` every segment row's ``dls`` holds,
+    for each of its ``doc_ids``, that doc's ``doclens/`` value in the
+    row's field — the length BM25 scores the hit with."""
+    out = str(tmp_path / "dls")
+    corpus = generate_code_corpus(spark, 200, seed=5, partitions=4)
+    build_resumable_index(spark, corpus, code_schema(), out, n_chunks=2, chunk_span=32)
+    seg = spark.read.parquet(os.path.join(out, "segments"))
+    assert seg.where(F.size("dls") != F.size("doc_ids")).count() == 0
+    hits = seg.select(
+        "field", F.inline(F.arrays_zip(F.col("doc_ids").alias("doc_id"), F.col("dls").alias("seg_dl")))
+    )
+    doclens = spark.read.parquet(os.path.join(out, "doclens"))
+    joined = hits.join(doclens, ["doc_id", "field"], "left")
+    assert joined.where(F.col("dl").isNull() | (F.col("dl") != F.col("seg_dl"))).count() == 0
+    assert joined.count() == seg.agg(F.sum("df")).first()[0] > 0
 
 
 def test_segment_store_lookup(spark, postings, tmp_path):
@@ -311,6 +386,26 @@ def test_merge_segment_stores_equivalence(spark, tmp_path, postings):
         seg.groupBy("field", "term", "chunk").count().where("count > 1").count()
         == 0
     )
+    # the colliding chunk-1 rows kept the lengths they were written with
+    # (recounted over a collision they would be partial sums): every
+    # posting's dl, and so BM25 top-k, equals the single-shot store's
+    single_dir, merged_dir = str(tmp_path / "single"), str(tmp_path / "merged_idx")
+    _hand_built_store(single_dir, postings, 256, N_DOCS)
+    merge_segment_stores(spark, [p1, p2], os.path.join(merged_dir, "segments"), chunk_span=256)
+    shutil.copy(os.path.join(single_dir, "stats.json"), merged_dir)
+
+    def with_dl(path):
+        return sorted(
+            tuple(r) for r in decode_segments(
+                spark.read.parquet(os.path.join(path, "segments")), with_positions=False, with_dl=True
+            ).select("field", "term", "doc_id", "tf", "dl").collect()
+        )
+
+    assert with_dl(merged_dir) == with_dl(single_dir)
+    for terms in (["varint", "delta", "merge"], ["needle_100", "function"], ["return"]):
+        assert topk(segment_bm25_topk(spark, merged_dir, terms, "content", k=8)) == topk(
+            segment_bm25_topk(spark, single_dir, terms, "content", k=8)
+        ), terms
 
 
 def test_segment_blockmax_equals_exhaustive(spark, tmp_path):
@@ -342,15 +437,7 @@ def test_segment_blockmax_quick_rejects_all_hot_queries(spark, tmp_path):
     """When every chunk holds every query term (all-hot query), the
     metadata-only quick reject skips the θ-seeding pass entirely (it was
     measured 2x slower than exhaustive at 1.5M docs) — identical top-k."""
-    import json as _json
-    import os
-
-    from phphinder_spark.index.segments import (
-        encode_segments,
-        segment_bm25_topk,
-        segment_bm25_topk_blockmax,
-        write_segments,
-    )
+    from phphinder_spark.index.segments import segment_bm25_topk_blockmax
 
     rows = []
     for d in range(160):
@@ -360,16 +447,7 @@ def test_segment_blockmax_quick_rejects_all_hot_queries(spark, tmp_path):
         rows, "field string, term string, doc_id long, tf long, positions array<int>"
     )
     out = str(tmp_path / "hot")
-    os.makedirs(out, exist_ok=True)
-    write_segments(encode_segments(postings, chunk_span=32), os.path.join(out, "segments"))
-    postings.groupBy("field", "term").count().withColumnRenamed("count", "df").write.parquet(
-        os.path.join(out, "dictionary")
-    )
-    postings.groupBy("doc_id", "field").agg(F.sum("tf").alias("dl")).write.parquet(
-        os.path.join(out, "doclens")
-    )
-    with open(os.path.join(out, "stats.json"), "w") as fh:
-        _json.dump({"n_docs": 160, "avgdl": {"content": 4.0}}, fh)
+    _hand_built_store(out, postings, 32, 160, {"content": 4.0})
 
     cold = segment_bm25_topk(spark, out, ["hot_a", "hot_b"], "content", k=8).collect()
     pruned, m = segment_bm25_topk_blockmax(
@@ -387,15 +465,7 @@ def test_segment_blockmax_skips_chunks(spark, tmp_path, source):
     chunk; every other chunk's bound falls below θ and is never scored —
     from the segment store (chunk span 32: 10 chunks) and from the
     postings table (the memory span rule gives 64 at 320 docs: 5 chunks)."""
-    import json as _json
-    import os
-
-    from phphinder_spark.index.segments import (
-        encode_segments,
-        segment_bm25_topk,
-        segment_bm25_topk_blockmax,
-        write_segments,
-    )
+    from phphinder_spark.index.segments import segment_bm25_topk_blockmax
     from phphinder_spark.scoring import PostingsSource, bm25_topk
 
     # 320 docs, chunk_span 32 -> 10 chunks. "jackpot" only in docs 0..31
@@ -409,16 +479,7 @@ def test_segment_blockmax_skips_chunks(spark, tmp_path, source):
         rows, "field string, term string, doc_id long, tf long, positions array<int>"
     )
     out = str(tmp_path / "skew")
-    os.makedirs(out, exist_ok=True)
-    write_segments(encode_segments(postings, chunk_span=32), os.path.join(out, "segments"))
-    postings.groupBy("field", "term").count().withColumnRenamed("count", "df").write.parquet(
-        os.path.join(out, "dictionary")
-    )
-    postings.groupBy("doc_id", "field").agg(F.sum("tf").alias("dl")).write.parquet(
-        os.path.join(out, "doclens")
-    )
-    with open(os.path.join(out, "stats.json"), "w") as fh:
-        _json.dump({"n_docs": 320, "avgdl": {"content": 1.8}}, fh)
+    _hand_built_store(out, postings, 32, 320, {"content": 1.8})
 
     terms = ["jackpot", "filler"]
     if source == "segments":
@@ -446,16 +507,8 @@ def test_clustered_ids_make_chunk_skip_effective(spark, tmp_path):
     """Doc-id clustering by language localizes topic vocabulary into
     contiguous chunks; a topic-specific query then skips most chunks of
     the segment store — the IR doc-reordering effect, end to end."""
-    import json as _json
-    import os
-
     from phphinder_spark.index.builder import assign_doc_ids_clustered
-    from phphinder_spark.index.segments import (
-        encode_segments,
-        segment_bm25_topk,
-        segment_bm25_topk_blockmax,
-        write_segments,
-    )
+    from phphinder_spark.index.segments import segment_bm25_topk_blockmax
 
     corpus = generate_code_corpus(
         spark, 2000, seed=11, partitions=4, zipf="topics"
@@ -463,16 +516,7 @@ def test_clustered_ids_make_chunk_skip_effective(spark, tmp_path):
     docs = assign_doc_ids_clustered(corpus, ["lang"], ["repo", "path", "commit"])
     postings = build_postings(docs, code_schema()).cache()
     out = str(tmp_path / "clustered")
-    os.makedirs(out, exist_ok=True)
-    write_segments(encode_segments(postings, chunk_span=128), os.path.join(out, "segments"))
-    postings.groupBy("field", "term").count().withColumnRenamed("count", "df").write.parquet(
-        os.path.join(out, "dictionary")
-    )
-    dl = postings.groupBy("doc_id", "field").agg(F.sum("tf").alias("dl"))
-    dl.write.parquet(os.path.join(out, "doclens"))
-    avgdl = dl.where("field = 'content'").agg(F.avg("dl")).first()[0]
-    with open(os.path.join(out, "stats.json"), "w") as fh:
-        _json.dump({"n_docs": 2000, "avgdl": {"content": float(avgdl)}}, fh)
+    _hand_built_store(out, postings, 128, 2000)
 
     # topic identifiers live only in lang-0's contiguous range; the hot
     # term pulls every chunk into the candidate set, and θ (seeded from
